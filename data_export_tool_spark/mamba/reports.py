@@ -103,8 +103,9 @@ def ensure_follow_up_wide(session: SparkSession) -> DataFrame | None:
     """Assemble, cache, and register the FollowUp wide view on
     ``session`` from its registered shard views. Returns the cached
     DataFrame (callers may ``unpersist()`` it after their run) or None
-    when the session doesn't expose the full shard set — the caller
-    then leaves report SQL unrewritten.
+    when the session doesn't expose the full shard set, or a shard
+    view lacks the ``encounter_id`` join key — the caller then leaves
+    report SQL unrewritten.
 
     Sub-sessions of one SparkContext share the cache manager, so
     repeated calls (one per parity sub-session) re-use a single
@@ -119,7 +120,10 @@ def ensure_follow_up_wide(session: SparkSession) -> DataFrame | None:
     ]
     if not all(session.catalog.tableExists(n) for n in names):
         return None
-    wide = assemble_follow_up({n: session.table(n) for n in names})
+    shards = {n: session.table(n) for n in names}
+    if not all("encounter_id" in df.columns for df in shards.values()):
+        return None
+    wide = assemble_follow_up(shards)
     wide.createOrReplaceTempView(FOLLOW_UP_WIDE_VIEW)
     return wide
 

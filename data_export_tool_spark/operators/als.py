@@ -47,6 +47,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from data_export_tool_spark.operators.checkpoint import CheckpointScope
+
 # make the module's helpers picklable by value when shipped into
 # executors from a REPL-imported module (same policy as linear.py)
 try:  # pragma: no cover - trivial registration
@@ -190,36 +192,37 @@ def als_implicit_fit(
         .groupBy(user_col, item_col)
         .agg(F.sum(r).alias("__str"))
     )
-    from data_export_tool_spark.operators.graph import _checkpoint, _release
+    with CheckpointScope() as scope:
+        inter = scope.pin(inter)
+        items = inter.select(item_col).distinct()
 
-    sc = interactions.sparkSession.sparkContext
-    inter, inter_ids = _checkpoint(inter)
-    users = inter.select(user_col).distinct()
-    items = inter.select(item_col).distinct()
+        item_f = scope.pin(_init_factors(items, item_col, rank, "i"))
+        user_f = None
+        for _ in range(iters):
+            G_i = _gram(item_f, rank)
+            new_u = scope.pin(
+                _solve_side(
+                    inter, item_f, user_col, item_col, "__str", G_i, rank,
+                    reg, alpha,
+                )
+            )
+            if user_f is not None:
+                scope.drop(user_f)
+            user_f = new_u
 
-    item_f, if_ids = _checkpoint(_init_factors(items, item_col, rank, "i"))
-    user_f, uf_ids = None, set()
-    for _ in range(iters):
-        G_i = _gram(item_f, rank)
-        new_u = _solve_side(
-            inter, item_f, user_col, item_col, "__str", G_i, rank, reg, alpha
+            G_u = _gram(user_f, rank)
+            new_i = scope.pin(
+                _solve_side(
+                    inter, user_f, item_col, user_col, "__str", G_u, rank,
+                    reg, alpha,
+                )
+            )
+            scope.drop(item_f)
+            item_f = new_i
+        return (
+            scope.keep(user_f.select(F.col(user_col), "factors")),
+            scope.keep(item_f.select(F.col(item_col), "factors")),
         )
-        new_u, new_uids = _checkpoint(new_u)
-        _release(sc, uf_ids)
-        user_f, uf_ids = new_u, new_uids
-
-        G_u = _gram(user_f, rank)
-        new_i = _solve_side(
-            inter, user_f, item_col, user_col, "__str", G_u, rank, reg, alpha
-        )
-        new_i, new_iids = _checkpoint(new_i)
-        _release(sc, if_ids)
-        item_f, if_ids = new_i, new_iids
-    _release(sc, inter_ids)
-    return (
-        user_f.select(F.col(user_col), "factors"),
-        item_f.select(F.col(item_col), "factors"),
-    )
 
 
 def als_recommend(

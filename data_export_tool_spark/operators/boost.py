@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_export_tool_spark.operators.checkpoint import CheckpointScope
+
 try:  # pragma: no cover - trivial registration
     import sys as _sys
 
@@ -80,9 +82,6 @@ def gbdt_stumps_fit(
     if not 2 <= n_bins <= 256:
         raise ValueError(f"n_bins must be in 2..256: {n_bins}")
 
-    from data_export_tool_spark.operators.graph import _checkpoint, _release
-
-    sc = df.sparkSession.sparkContext
     base = df.select(
         F.col(label_col).cast("double").alias("__y"),
         *[F.col(c).cast("double").alias(c) for c in feature_cols],
@@ -106,78 +105,76 @@ def gbdt_stumps_fit(
         "__y", *[_bin_col(F.col(c), edges[c]).alias(f"__b_{i}")
                  for i, c in enumerate(feature_cols)]
     ).withColumn("__m", F.lit(float(base_score)))
-    work, work_ids = _checkpoint(binned)
+    with CheckpointScope() as scope:
+        work = scope.pin(binned)
 
-    stumps: list[tuple[int, int, float, float]] = []
-    nf = len(feature_cols)
-    for _ in range(n_rounds):
-        p = 1.0 / (1.0 + F.exp(-F.col("__m")))
-        gh = work.select(
-            *[F.col(f"__b_{i}") for i in range(nf)],
-            (p - F.col("__y")).alias("__g"),
-            (p * (1.0 - p)).alias("__h"),
-        )
-        # one explode + one partially-aggregated groupBy: the shuffle
-        # carries ≤ F×(n_bins+1) combined cells per map task
-        melted = gh.select(
-            F.explode(
-                F.array(*[
-                    F.struct(
-                        F.lit(i).alias("f"),
-                        F.col(f"__b_{i}").alias("b"),
-                        F.col("__g").alias("g"),
-                        F.col("__h").alias("h"),
+        stumps: list[tuple[int, int, float, float]] = []
+        nf = len(feature_cols)
+        for _ in range(n_rounds):
+            p = 1.0 / (1.0 + F.exp(-F.col("__m")))
+            gh = work.select(
+                *[F.col(f"__b_{i}") for i in range(nf)],
+                (p - F.col("__y")).alias("__g"),
+                (p * (1.0 - p)).alias("__h"),
+            )
+            # one explode + one partially-aggregated groupBy: the shuffle
+            # carries ≤ F×(n_bins+1) combined cells per map task
+            melted = gh.select(
+                F.explode(
+                    F.array(*[
+                        F.struct(
+                            F.lit(i).alias("f"),
+                            F.col(f"__b_{i}").alias("b"),
+                            F.col("__g").alias("g"),
+                            F.col("__h").alias("h"),
+                        )
+                        for i in range(nf)
+                    ])
+                ).alias("x")
+            ).select("x.f", "x.b", "x.g", "x.h")
+            cells = (
+                melted.groupBy("f", "b")
+                .agg(F.sum("g").alias("sg"), F.sum("h").alias("sh"))
+                .collect()
+            )
+            hist: dict[int, dict[int, tuple[float, float]]] = {}
+            for r in cells:
+                hist.setdefault(r["f"], {})[r["b"]] = (r["sg"], r["sh"])
+            Gt = sum(v[0] for fb in hist.values() for v in fb.values()) / nf
+            Ht = sum(v[1] for fb in hist.values() for v in fb.values()) / nf
+            root_term = Gt * Gt / (Ht + reg_lambda)
+
+            best = None  # (gain, f, thr, wl, wr)
+            for fi in range(nf):
+                fb = hist.get(fi, {})
+                bins = sorted(b for b in fb if b >= 0)
+                null_g, null_h = fb.get(-1, (0.0, 0.0))
+                gl = null_g
+                hl = null_h
+                # NULL bin is always left; thresholds between real bins
+                for b in bins[:-1]:
+                    gl += fb[b][0]
+                    hl += fb[b][1]
+                    gr, hr = Gt - gl, Ht - hl
+                    gain = (
+                        gl * gl / (hl + reg_lambda)
+                        + gr * gr / (hr + reg_lambda)
+                        - root_term
                     )
-                    for i in range(nf)
-                ])
-            ).alias("x")
-        ).select("x.f", "x.b", "x.g", "x.h")
-        cells = (
-            melted.groupBy("f", "b")
-            .agg(F.sum("g").alias("sg"), F.sum("h").alias("sh"))
-            .collect()
-        )
-        hist: dict[int, dict[int, tuple[float, float]]] = {}
-        for r in cells:
-            hist.setdefault(r["f"], {})[r["b"]] = (r["sg"], r["sh"])
-        Gt = sum(v[0] for fb in hist.values() for v in fb.values()) / nf
-        Ht = sum(v[1] for fb in hist.values() for v in fb.values()) / nf
-        root_term = Gt * Gt / (Ht + reg_lambda)
-
-        best = None  # (gain, f, thr, wl, wr)
-        for fi in range(nf):
-            fb = hist.get(fi, {})
-            bins = sorted(b for b in fb if b >= 0)
-            null_g, null_h = fb.get(-1, (0.0, 0.0))
-            gl = null_g
-            hl = null_h
-            # NULL bin is always left; thresholds between real bins
-            for b in bins[:-1]:
-                gl += fb[b][0]
-                hl += fb[b][1]
-                gr, hr = Gt - gl, Ht - hl
-                gain = (
-                    gl * gl / (hl + reg_lambda)
-                    + gr * gr / (hr + reg_lambda)
-                    - root_term
-                )
-                if best is None or gain > best[0] + 1e-12:
-                    wl = -gl / (hl + reg_lambda)
-                    wr = -gr / (hr + reg_lambda)
-                    best = (gain, fi, b, wl, wr)
-        if best is None or best[0] <= 1e-12:
-            break  # no split improves the loss — stop early
-        _, fi, thr, wl, wr = best
-        stumps.append((fi, int(thr), float(wl), float(wr)))
-        step = F.when(
-            F.col(f"__b_{fi}") <= thr, F.lit(lr * wl)
-        ).otherwise(F.lit(lr * wr))
-        new_work, new_ids = _checkpoint(
-            work.withColumn("__m", F.col("__m") + step)
-        )
-        _release(sc, work_ids)
-        work, work_ids = new_work, new_ids
-    _release(sc, work_ids)
+                    if best is None or gain > best[0] + 1e-12:
+                        wl = -gl / (hl + reg_lambda)
+                        wr = -gr / (hr + reg_lambda)
+                        best = (gain, fi, b, wl, wr)
+            if best is None or best[0] <= 1e-12:
+                break  # no split improves the loss — stop early
+            _, fi, thr, wl, wr = best
+            stumps.append((fi, int(thr), float(wl), float(wr)))
+            step = F.when(
+                F.col(f"__b_{fi}") <= thr, F.lit(lr * wl)
+            ).otherwise(F.lit(lr * wr))
+            new_work = scope.pin(work.withColumn("__m", F.col("__m") + step))
+            scope.drop(work)
+            work = new_work
     return {
         "base_score": float(base_score),
         "lr": float(lr),

@@ -180,10 +180,11 @@ def dbscan(
         ).alias("__p")
     ).select(F.col("__p.pa").alias("pa"), F.col("__p.pb").alias("pb"))
     # ε-pairs feed three consumers (degree count, core-core edges,
-    # border join) — materialize once. MUST be eager: a lazy
-    # checkpoint would materialize inside connected_components' own
-    # _checkpoint storage-id diff window and be swept up by its
-    # eager block release (observed: CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND)
+    # border join) — materialize once, up front. (Eagerness used to be
+    # required: connected_components found its own blocks by diffing
+    # storage around each checkpoint and swept up a lazy checkpoint
+    # that materialized inside that window. Its CheckpointScope now
+    # frees only the RDDs it pinned.)
     pairs = pairs.localCheckpoint(eager=True)
 
     deg = pairs.groupBy("pa").agg(F.count(F.lit(1)).alias("n_nbr"))

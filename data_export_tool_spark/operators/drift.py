@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from data_export_tool_spark.operators.checkpoint import CheckpointScope
 from .sketch import exact_topk
 
 __all__ = [
@@ -291,24 +292,21 @@ def ks_exact(
             .agg(F.count(F.lit(1)).alias(f"__c_{tag}"))
         )
 
-    from data_export_tool_spark.operators.graph import _checkpoint, _release
-
     # the value-grain union feeds FOUR consumers (approx-quantile cut
     # action, the totals collect, and both the cumsum and range-total
     # branches of the sup job) — materialize it once (r10; the
     # _exact_lattice/weighted_quantiles policy) instead of re-running
-    # both side aggregations and the full join per consumer
-    sc = old.sparkSession.sparkContext
-    vc, vc_ids = _checkpoint(
-        side(old, "o").join(side(new, "n"), "__v", "full").select(
-            "__v",
-            F.coalesce("__c_o", F.lit(0)).alias("co"),
-            F.coalesce("__c_n", F.lit(0)).alias("cn"),
+    # both side aggregations and the full join per consumer. The scope
+    # frees it on EVERY exit (a task/quantile failure must not leak the
+    # checkpoint blocks for the session lifetime).
+    with CheckpointScope() as scope:
+        vc = scope.pin(
+            side(old, "o").join(side(new, "n"), "__v", "full").select(
+                "__v",
+                F.coalesce("__c_o", F.lit(0)).alias("co"),
+                F.coalesce("__c_n", F.lit(0)).alias("cn"),
+            )
         )
-    )
-    # release on EVERY exit (ADVICE r10: a task/quantile failure
-    # must not leak the checkpoint blocks for the session lifetime)
-    try:
         probs = [i / num_ranges for i in range(1, num_ranges)]
         bounds = sorted(set(vc.stat.approxQuantile("__v", probs, 0.01)))
         if bounds:
@@ -347,8 +345,6 @@ def ks_exact(
                 - (F.col("__on") + F.col("__cum_n")) / F.lit(float(n_n))
             ).alias("__d")
         ).agg(F.max("__d").alias("ks")).collect()[0]
-    finally:
-        _release(sc, vc_ids)
     d = float(d_row["ks"])
     # asymptotic two-sided p: Kolmogorov survival function
     import math

@@ -37,6 +37,7 @@ except Exception:
     pass
 
 #: shared tokenizer contract with operators/ranking.py
+from data_export_tool_spark.operators.checkpoint import CheckpointScope
 from data_export_tool_spark.operators.ranking import TOKEN_SPLIT_RE
 
 
@@ -839,22 +840,18 @@ def _exact_lattice(
     span table is checkpointed once so n, both bracketing joins and
     the collect read cached blocks instead of re-running the rank
     pipeline three more times."""
-    from data_export_tool_spark.operators.graph import _checkpoint, _release
-
-    sc = vals.sparkSession.sparkContext
     lut = _rank_lut(
         vals.where(F.col(value_col).isNotNull()), value_col, num_ranges=64
     )
-    vg, vg_ids = _checkpoint(
-        lut.select(
-            "__v",
-            F.col("__r").alias("__start"),
-            (F.col("__r") + F.col("__cnt") - 1).alias("__end"),
-            "__cnt",
+    with CheckpointScope() as scope:
+        vg = scope.pin(
+            lut.select(
+                "__v",
+                F.col("__r").alias("__start"),
+                (F.col("__r") + F.col("__cnt") - 1).alias("__end"),
+                "__cnt",
+            )
         )
-    )
-    # release on EVERY exit (ADVICE r10)
-    try:
         n = (
             vg.agg(F.sum("__cnt").alias("__n")).first()["__n"] or 0
         )
@@ -895,8 +892,6 @@ def _exact_lattice(
             )
             .collect()
         )
-    finally:
-        _release(sc, vg_ids)
     out = [None] * (grid + 1)
     for r in rows:
         out[r["__i"]] = float(r["__q"])

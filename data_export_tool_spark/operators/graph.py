@@ -23,7 +23,11 @@ Scale notes (100 TB):
   doc bodies. Labels are the numeric/string node ids themselves.
 - ``localCheckpoint`` truncates lineage each round; without it the
   plan doubles per iteration and the job dies on plan-size long before
-  data size matters.
+  data size matters. Every loop in this module pins its state through
+  one ``CheckpointScope`` (``operators/checkpoint.py``): superseded
+  tables are dropped as the loop advances, and leaving the operator,
+  also by an exception, frees everything the returned frame does not
+  read.
 - The convergence check is an aggregate (count of changed labels), one
   tiny job per round on data already checkpointed.
 - Deterministic under retries/partitioning: every operation is a
@@ -37,188 +41,7 @@ import time
 from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
-
-def _stored_rdd_ids(sc) -> set[int]:
-    infos = sc._jsc.sc().getRDDStorageInfo()
-    return {infos[i].id() for i in range(len(infos))}
-
-
-#: bit length past which a checkpoint's preserved size estimate is
-#: replaced with "unknown" (2^256 bytes carries no planning signal)
-_MAX_STATS_BITS = 256
-
-
-def _checkpoint(
-    df: DataFrame, partition_by: tuple[str, ...] | None = None
-) -> tuple[DataFrame, set[int]]:
-    """localCheckpoint + the storage ids the checkpoint created, so the
-    caller can free them when the table is superseded. Neither
-    ``DataFrame.unpersist`` nor reference-drop GC releases local-
-    checkpoint blocks (verified empirically on 4.1) — only unpersisting
-    the underlying RDD via the context's persistent-RDD map does.
-
-    ``partition_by`` (r11, guide §2.2/§2.4 "share one exchange"):
-    names of columns to hash-partition AND sort the frame by, with the
-    layout CLAIMED on the checkpoint's LogicalRDD so downstream rounds
-    see it. Spark 4.1 under AQE loses a checkpoint's partitioning
-    (`LogicalRDD.fromDataset` records ``UnknownPartitioning`` when the
-    final stage is an AQE shuffle read — verified in every r10 plan
-    tail), so every round of an iterative operator re-exchanges the
-    loop-INVARIANT edge table from scratch. Re-claiming the true
-    layout turns each round's equi-join on these keys into a
-    zero-exchange, zero-sort co-partitioned merge join. Use it for
-    LOOP-INVARIANT tables only: the pin costs one extra in-memory
-    pass, paid once, saved every round.
-
-    The pin is TWO-PHASE so the partition COUNT stays scale-adaptive
-    (§2.2 — fewer, larger partitions; a pin hard-coded to
-    ``spark.sql.shuffle.partitions`` measured 2.2× slower scans at
-    sf0.1 than AQE's own coalesced granularity): first a plain eager
-    checkpoint lets AQE pick the partition count for THIS data volume
-    under the session conf, then the materialized blocks are
-    re-hashed to ``hash(cols) % that-count`` + sorted, checkpointed,
-    and claimed. Soundness: an explicit ``repartition(k, cols)``
-    places rows exactly by the claimed expression and is never
-    AQE-coalesced; ``sortWithinPartitions`` realizes the claimed
-    ``SortOrder``; results are identical either way — only
-    Exchange/Sort nodes disappear (plan-contract-tested).
-
-    Stats-compounding guard (r11): Spark preserves the origin plan's
-    size ESTIMATE on the checkpoint's LogicalRDD, and join estimation
-    MULTIPLIES child sizes — so a loop whose round references the
-    previous checkpoint k times compounds the estimate ~k-fold in BIT
-    LENGTH per round (CC references labels 3×: ×3^round). The numbers
-    stay formally correct BigInts, but by round 8-10 the driver burns
-    tens of seconds PER ACTION multiplying thousand-digit integers
-    inside SizeInBytesOnlyStatsPlanVisitor/canBroadcastBySize
-    (measured on b81: 0.3 s → 56 s per round, jstack-confirmed). An
-    estimate beyond 2^256 bytes carries no planning information, so
-    past that the frame is rebuilt over the SAME checkpointed rows
-    with default (unknown-size) stats — plans for honestly-sized
-    checkpoints are untouched."""
-    spark = df.sparkSession
-    sc = spark.sparkContext
-    n_part = None
-    if partition_by:
-        before0 = _stored_rdd_ids(sc)
-        ck0 = df.localCheckpoint(eager=True)
-        ids0 = _stored_rdd_ids(sc) - before0
-        n_part = max(1, ck0.rdd.getNumPartitions())
-        df = ck0.repartition(n_part, *partition_by).sortWithinPartitions(
-            *partition_by
-        )
-    before = _stored_rdd_ids(sc)
-    out = df.localCheckpoint(eager=True)
-    ids = _stored_rdd_ids(sc) - before
-    if partition_by:
-        _release(sc, ids0)
-        if out.rdd.getNumPartitions() != n_part:
-            # AQE empty-propagation can materialize 0 partitions for an
-            # empty frame — a layout claim would then let the planner
-            # skip exchanges whose input no longer produces the agg row
-            # it expects ("head of empty array" on count). Claim only
-            # when the physical layout matches exactly.
-            partition_by = None
-    jqe = out._jdf.queryExecution()
-    compounded = (
-        int(jqe.optimizedPlan().stats().sizeInBytes()).bit_length()
-        > _MAX_STATS_BITS
-    )
-    if partition_by or compounded:
-        rebuilt = _reclaim_layout(
-            spark, out, partition_by, n_part, honest_stats=not compounded
-        )
-        if rebuilt is not None:
-            out = rebuilt
-        elif compounded:
-            jschema = spark._jvm.org.apache.spark.sql.types.DataType.fromJson(
-                out.schema.json()
-            )
-            out = DataFrame(
-                spark._jsparkSession.internalCreateDataFrame(
-                    jqe.toRdd(), jschema, False
-                ),
-                spark,
-            )
-    return out, ids
-
-
-def _reclaim_layout(
-    spark,
-    out: DataFrame,
-    partition_by: tuple[str, ...] | None,
-    n_part: int | None,
-    honest_stats: bool,
-) -> DataFrame | None:
-    """Copy the checkpoint's LogicalRDD with (a) the hash partitioning
-    + per-partition sort order the ``repartition + sortWithinPartitions``
-    in :func:`_checkpoint` genuinely produced, and (b) origin stats
-    dropped when they compounded past the guard. Returns None when the
-    plan is not the expected LogicalRDD shape (caller falls back to
-    the stats-only rebuild); any py4j surprise degrades to the slower
-    pre-claim plan, never to a wrong one — the claim changes only
-    physical layout metadata, not rows."""
-    try:
-        plan = out._jdf.queryExecution().analyzed()
-        if not plan.getClass().getName().endswith(".LogicalRDD"):
-            return None
-        jvm = spark._jvm
-        part = plan.outputPartitioning()
-        ordering = plan.outputOrdering()
-        if partition_by:
-            outp = plan.output()
-            by_name = {}
-            for i in range(outp.size()):
-                a = outp.apply(i)
-                by_name[a.name()] = a
-            attrs = [by_name[c] for c in partition_by]
-            part = jvm.org.apache.spark.sql.catalyst.plans.physical.HashPartitioning(
-                jvm.PythonUtils.toSeq(attrs), n_part
-            )
-            exprs_pkg = jvm.org.apache.spark.sql.catalyst.expressions
-            asc = getattr(getattr(exprs_pkg, "Ascending$"), "MODULE$")
-            nf = getattr(getattr(exprs_pkg, "NullsFirst$"), "MODULE$")
-            empty_seq = jvm.PythonUtils.toSeq([])
-            ordering = jvm.PythonUtils.toSeq(
-                [
-                    jvm.org.apache.spark.sql.catalyst.expressions.SortOrder(
-                        a, asc, nf, empty_seq
-                    )
-                    for a in attrs
-                ]
-            )
-        stats_opt = (
-            jvm.scala.Option.apply(plan.computeStats())
-            if honest_stats
-            else jvm.scala.Option.empty()
-        )
-        new_plan = plan.copy(
-            plan.output(),
-            plan.rdd(),
-            part,
-            ordering,
-            plan.isStreaming(),
-            plan.stream(),
-            spark._jsparkSession,
-            stats_opt,
-            jvm.scala.Option.empty(),
-        )
-        jdf = jvm.org.apache.spark.sql.classic.Dataset.ofRows(
-            spark._jsparkSession, new_plan
-        )
-        return DataFrame(jdf, spark)
-    except Exception:
-        return None
-
-
-def _release(sc, ids: set[int]) -> None:
-    """Unpersist exactly the given checkpoint-created RDD ids."""
-    jmap = sc._jsc.sc().getPersistentRDDs()
-    it = jmap.iterator()
-    while it.hasNext():
-        kv = it.next()
-        if kv._1() in ids:
-            kv._2().unpersist(False)
+from data_export_tool_spark.operators.checkpoint import CheckpointScope
 
 
 def _observed(
@@ -278,97 +101,93 @@ def connected_components(
     ``update_components`` delta subgraph), wrong for huge ones (the
     default stays 1: plan size and per-round shuffle dominate there,
     and a converged run wastes k−1 rounds of work on the last action).
+
+    Each round's label table is pinned in one ``CheckpointScope`` and
+    the round it supersedes is freed at once. Only the final labels
+    outlive the call (the returned frame reads them); the pair and
+    edge tables are freed on return or on the non-convergence error.
     """
     if rounds_per_checkpoint < 1:
         raise ValueError(
             f"rounds_per_checkpoint must be >= 1: {rounds_per_checkpoint}"
         )
     u, v = F.col(src), F.col(dst)
-    sc = edges.sparkSession.sparkContext
-    # materialize the (possibly expensive) pair pipeline ONCE before the
-    # symmetric union references it twice
-    pairs, pairs_ids = _checkpoint(edges.select(u.alias("u"), v.alias("v")))
-    # sym is probed by "m" every round (neighbor-min pulls each
-    # neighbor's label) — pin that layout once so no round ever
-    # re-exchanges the O(E) table (r11, §2.2/§2.4; see _checkpoint)
-    sym, sym_ids = _checkpoint(
-        pairs.select(F.col("u").alias("n"), F.col("v").alias("m"))
-        .union(pairs.select(F.col("v").alias("n"), F.col("u").alias("m"))),
-        partition_by=("m",),
-    )
-    # pairs fed sym's (materialized) checkpoint; free it immediately
-    _release(sc, pairs_ids)
-    # labels start as each node's own id (self-edge min == identity);
-    # per-round label checkpoints stay UNPINNED: a pin costs an extra
-    # materialization pass per round, and AQE already coalesces the
-    # O(V) state to the right granularity (measured — see _checkpoint)
-    labels, labels_ids = _checkpoint(
-        sym.groupBy("n").agg(F.least(F.min("m"), F.col("n")).alias("c"))
-    )
-
-    def _round(lab: DataFrame) -> DataFrame:
-        """One lazy neighbor-min + pointer-jump step over (n, c0, c):
-        ``c`` advances, ``c0`` (the pre-composition label the change
-        flag compares against) rides the pipeline untouched — the r10
-        no-separate-probe shape."""
-        # 1) neighbor-min: pull each neighbor's current label
-        nbr = (
-            sym.join(lab.select(F.col("n").alias("m"), "c"), "m")
-            .groupBy("n")
-            .agg(F.min("c").alias("cn"))
+    with CheckpointScope() as scope:
+        # materialize the (possibly expensive) pair pipeline ONCE before
+        # the symmetric union references it twice
+        pairs = scope.pin(edges.select(u.alias("u"), v.alias("v")))
+        sym = scope.pin(
+            pairs.select(F.col("u").alias("n"), F.col("v").alias("m"))
+            .union(pairs.select(F.col("v").alias("n"), F.col("u").alias("m")))
         )
-        stepped = (
-            lab.withColumnRenamed("c", "cp")
-            .join(nbr, "n", "left")
-            .select(
-                "n", "c0", F.least(F.col("cp"), F.col("cn")).alias("c")
-            )
-        )
-        # 2) pointer jump: c(u) <- c(c(u))
-        jump = lab.select(F.col("n").alias("c"), F.col("c").alias("cc"))
-        return stepped.join(jump, "c", "left").select(
-            "n", "c0", F.least(F.col("c"), F.col("cc")).alias("c")
+        # pairs fed sym's (materialized) checkpoint; free it immediately
+        scope.drop(pairs)
+        # labels start as each node's own id (self-edge min == identity)
+        labels = scope.pin(
+            sym.groupBy("n").agg(F.least(F.min("m"), F.col("n")).alias("c"))
         )
 
-    for _ in range(max_iter):
-        # compose rounds_per_checkpoint lazy rounds, then ONE job: the
-        # change flag vs the pre-composition label rides the pipeline
-        # (left join instead of union+re-group) and the changed-count
-        # is OBSERVED during the checkpoint action itself
-        # (CollectMetrics fires on eager localCheckpoint — verified on
-        # 4.1), so the whole composition is exactly ONE job.
-        cur = labels.select("n", F.col("c").alias("c0"), "c")
-        for _k in range(rounds_per_checkpoint):
-            cur = _round(cur)
-        obs = Observation()
-        new_full, new_ids = _checkpoint(
-            cur.select(
-                "n", "c", (F.col("c") != F.col("c0")).alias("__chg")
+        def _round(lab: DataFrame) -> DataFrame:
+            """One lazy neighbor-min + pointer-jump step over (n, c0, c):
+            ``c`` advances, ``c0`` (the pre-composition label the change
+            flag compares against) rides the pipeline untouched — the
+            r10 no-separate-probe shape."""
+            # 1) neighbor-min: pull each neighbor's current label
+            nbr = (
+                sym.join(lab.select(F.col("n").alias("m"), "c"), "m")
+                .groupBy("n")
+                .agg(F.min("c").alias("cn"))
             )
-            .observe(obs, F.sum(F.col("__chg").cast("long")).alias("chg"))
-        )
-        converged = (
-            _observed(
-                obs, new_full, "chg", F.sum(F.col("__chg").cast("long"))
+            stepped = (
+                lab.withColumnRenamed("c", "cp")
+                .join(nbr, "n", "left")
+                .select(
+                    "n", "c0", F.least(F.col("cp"), F.col("cn")).alias("c")
+                )
             )
-            or 0
-        ) == 0
-        # the superseded round's O(V) checkpoint blocks are dead the
-        # moment the convergence probe finishes — free them NOW, or up
-        # to max_iter label tables pile up in executor storage
-        _release(sc, labels_ids)
-        labels, labels_ids = new_full.select("n", "c"), new_ids
-        if converged:
-            break
-    else:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds"
-        )
+            # 2) pointer jump: c(u) <- c(c(u))
+            jump = lab.select(F.col("n").alias("c"), F.col("c").alias("cc"))
+            return stepped.join(jump, "c", "left").select(
+                "n", "c0", F.least(F.col("c"), F.col("cc")).alias("c")
+            )
 
-    _release(sc, sym_ids)  # the edge table is dead once labels are final
-    return labels.select(
-        F.col("n").alias(out_node), F.col("c").alias(out_comp)
-    )
+        for _ in range(max_iter):
+            # compose rounds_per_checkpoint lazy rounds, then ONE job:
+            # the change flag vs the pre-composition label rides the
+            # pipeline (left join instead of union+re-group) and the
+            # changed-count is OBSERVED during the checkpoint action
+            # itself (CollectMetrics fires on eager localCheckpoint —
+            # verified on 4.1), so the whole composition is ONE job.
+            cur = labels.select("n", F.col("c").alias("c0"), "c")
+            for _k in range(rounds_per_checkpoint):
+                cur = _round(cur)
+            obs = Observation()
+            new_full = scope.pin(
+                cur.select(
+                    "n", "c", (F.col("c") != F.col("c0")).alias("__chg")
+                )
+                .observe(obs, F.sum(F.col("__chg").cast("long")).alias("chg"))
+            )
+            converged = (
+                _observed(
+                    obs, new_full, "chg", F.sum(F.col("__chg").cast("long"))
+                )
+                or 0
+            ) == 0
+            # the superseded round's O(V) checkpoint blocks are dead the
+            # moment the convergence probe finishes — free them NOW, or
+            # up to max_iter label tables pile up in executor storage
+            scope.drop(labels)
+            labels = new_full.select("n", "c")
+            if converged:
+                break
+        else:
+            raise RuntimeError(
+                f"connected_components did not converge in {max_iter} rounds"
+            )
+        return scope.keep(
+            labels.select(F.col("n").alias(out_node), F.col("c").alias(out_comp))
+        )
 
 
 def duplicate_clusters(
@@ -497,11 +316,13 @@ def pagerank(
     mass is exactly 1 by construction each round) — one scalar
     aggregate over the already-materialized contribution table. The
     L1-convergence probe runs only when ``tol > 0``.
-    ``localCheckpoint`` truncates lineage per round and superseded
-    rank tables are freed immediately, same policy as
-    ``connected_components``. On a persisted graph, bucket the edge
-    table by ``src`` to eliminate its exchange entirely — the
-    per-round shuffle is then just the O(V) rank table.
+    ``localCheckpoint`` truncates lineage per round. Every table is
+    pinned in one ``CheckpointScope``: superseded rank tables are
+    freed immediately, the edge and node tables on return (or on an
+    error), and only the result's blocks outlive the call. Each round
+    re-shuffles the O(E) edge table for its rank join; on a persisted
+    graph, bucket the edge table by ``src`` to eliminate that exchange
+    — the per-round shuffle is then just the O(V) rank table.
 
     Stops when the L1 delta ≤ ``tol`` (set ``tol=0`` to run exactly
     ``max_iter`` rounds — no probe jobs at all — e.g. to compare
@@ -509,49 +330,65 @@ def pagerank(
     """
     if not (0.0 < damping < 1.0):
         raise ValueError(f"damping must be in (0, 1): {damping}")
-    sc = edges.sparkSession.sparkContext
-    e, e_ids = _checkpoint(
-        edges.where(F.col(src).isNotNull() & F.col(dst).isNotNull()).select(
-            F.col(src).alias("s"), F.col(dst).alias("d")
+    with CheckpointScope() as scope:
+        e = scope.pin(
+            edges.where(F.col(src).isNotNull() & F.col(dst).isNotNull()).select(
+                F.col(src).alias("s"), F.col(dst).alias("d")
+            )
         )
-    )
-    outd = e.groupBy("s").agg(F.count(F.lit(1)).alias("__outd"))
-    # the loop-invariant weighted edge table and the node set are
-    # pinned to hash(join key) layout at checkpoint time (r11,
-    # §2.2/§2.4): every round's rank join and the final padding join
-    # then run as zero-exchange zero-sort co-partitioned merges —
-    # without the claim each round re-shuffles the O(E) edge table
-    # (AQE loses checkpoint partitioning; see _checkpoint)
-    ew, ew_ids = _checkpoint(
-        e.join(outd, "s").select(
-            "s", "d", (F.lit(1.0) / F.col("__outd")).alias("w")
-        ),
-        partition_by=("s",),
-    )
-    nodes, nodes_ids = _checkpoint(
-        e.select(F.col("s").alias("n"))
-        .union(e.select(F.col("d").alias("n")))
-        .distinct(),
-        partition_by=("n",),
-    )
-    n_nodes = nodes.count()
-    if n_nodes == 0:
-        _release(sc, e_ids)
-        return nodes.select(
-            F.col("n").alias(out_node), F.lit(0.0).alias(out_rank)
+        outd = e.groupBy("s").agg(F.count(F.lit(1)).alias("__outd"))
+        ew = scope.pin(
+            e.join(outd, "s").select(
+                "s", "d", (F.lit(1.0) / F.col("__outd")).alias("w")
+            )
         )
-    # e fed ew and nodes — both checkpoint-materialized, so the raw
-    # edge blocks are dead
-    _release(sc, e_ids)
-    base = (1.0 - damping) / n_nodes
-    ranks, ranks_ids = _checkpoint(
-        nodes.select("n", F.lit(1.0 / n_nodes).alias("r"))
-    )
+        nodes = scope.pin(
+            e.select(F.col("s").alias("n"))
+            .union(e.select(F.col("d").alias("n")))
+            .distinct()
+        )
+        n_nodes = nodes.count()
+        if n_nodes == 0:
+            return scope.keep(
+                nodes.select(F.col("n").alias(out_node), F.lit(0.0).alias(out_rank))
+            )
+        # e fed ew and nodes — both checkpoint-materialized, so the raw
+        # edge blocks are dead
+        scope.drop(e)
+        base = (1.0 - damping) / n_nodes
+        ranks = scope.pin(nodes.select("n", F.lit(1.0 / n_nodes).alias("r")))
+        return _power_iterate(
+            scope,
+            ew,
+            nodes,
+            ranks,
+            lambda c, dm: F.lit(base)
+            + F.lit(damping) * (c + F.lit(dm / n_nodes)),
+            max_iter,
+            tol,
+            out_node,
+            out_rank,
+        )
 
-    ranks_lazy = False
+
+def _power_iterate(
+    scope: CheckpointScope,
+    ew: DataFrame,
+    nodes: DataFrame,
+    ranks: DataFrame,
+    new_rank,
+    max_iter: int,
+    tol: float,
+    out_node: str,
+    out_rank: str,
+) -> DataFrame:
+    """The rank loop :func:`pagerank` and :func:`personalized_pagerank`
+    share. ``new_rank(c, dm)`` is a node's next rank from its incoming
+    contribution ``c`` and the round's dangling mass ``dm``."""
+    backing = ranks  # the pinned table the current ranks read
     for _ in range(max_iter):
         obs = Observation()
-        contrib, contrib_ids = _checkpoint(
+        contrib = scope.pin(
             ew.join(ranks.withColumnRenamed("n", "s"), "s")
             .groupBy("d")
             .agg(F.sum(F.col("r") * F.col("w")).alias("__c"))
@@ -564,24 +401,19 @@ def pagerank(
         # OBSERVED during the checkpoint action (no second job)
         dm = 1.0 - (_observed(obs, contrib, "s", F.sum("__c")) or 0.0)
         new_ranks = nodes.join(contrib, "n", "left").select(
-            "n",
-            (
-                F.lit(base)
-                + F.lit(damping)
-                * (F.coalesce(F.col("__c"), F.lit(0.0)) + F.lit(dm / n_nodes))
-            ).alias("r"),
+            "n", new_rank(F.coalesce(F.col("__c"), F.lit(0.0)), dm).alias("r")
         )
         if tol > 0:
             # the delta probe reads new_ranks a second time, so it is
             # worth one materialization; the probe itself stays
-            new_ranks, new_ids = _checkpoint(new_ranks)
-            _release(sc, contrib_ids)
+            new_ranks = scope.pin(new_ranks)
+            scope.drop(contrib)
             delta = (
                 new_ranks.join(ranks.withColumnRenamed("r", "r0"), "n")
                 .agg(F.sum(F.abs(F.col("r") - F.col("r0"))))
                 .first()[0]
             )
-            ranks_lazy = False
+            new_backing = new_ranks
         else:
             # probe-free path (tol=0): the rank table is consumed ONCE
             # per round (next round's edge join), and contrib is already
@@ -589,23 +421,19 @@ def pagerank(
             # projection over the cached contrib blocks instead of
             # paying a second O(V) materialization per round. Lineage
             # stays depth-1 (nodes ⋈ contrib, both checkpointed).
-            new_ids = contrib_ids
             delta = None
-            ranks_lazy = True
-        _release(sc, ranks_ids)
-        ranks, ranks_ids = new_ranks, new_ids
+            new_backing = contrib
+        scope.drop(backing)
+        ranks, backing = new_ranks, new_backing
         if delta is not None and delta <= tol:
             break
 
     out = ranks.select(F.col("n").alias(out_node), F.col("r").alias(out_rank))
-    if ranks_lazy:
+    if backing is not ranks:
         # the lazy rank table still reads the nodes checkpoint — pin the
-        # result before the setup blocks are released below
-        out, out_ids = _checkpoint(out)
-        _release(sc, ranks_ids)
-    _release(sc, ew_ids)
-    _release(sc, nodes_ids)
-    return out
+        # result so only its own blocks outlive the scope
+        out = scope.pin(out)
+    return scope.keep(out)
 
 
 def update_components(
@@ -728,9 +556,11 @@ def label_propagation(
     (checkpoint-materialized once) with the O(V) label table, a
     partial-aggregable (node, label) count, and an argmin-struct
     rollup per node — the exchanges carry label-grain rows, never
-    adjacency lists. ``localCheckpoint`` per round truncates lineage;
-    superseded label tables free immediately (the CC/PageRank
-    policy). Synchronous LPA can 2-cycle on bipartite structures —
+    adjacency lists; the edge table is re-shuffled by ``m`` for each
+    round's join. ``localCheckpoint`` per round truncates lineage;
+    one ``CheckpointScope`` frees superseded label tables immediately
+    and the edge table on return (the CC/PageRank policy). Synchronous
+    LPA can 2-cycle on bipartite structures —
     ``max_iter`` is a hard bound and rounds are NOT probed for
     convergence (tol-free by design: a probe job per round costs more
     than the bounded extra rounds at scale).
@@ -741,48 +571,41 @@ def label_propagation(
     """
     if max_iter < 1:
         raise ValueError(f"max_iter must be >= 1: {max_iter}")
-    sc = edges.sparkSession.sparkContext
     und = edges.where(
         F.col(src).isNotNull() & F.col(dst).isNotNull() & (F.col(src) != F.col(dst))
     ).select(F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b")).distinct()
-    # per-round probe layouts pinned once (r11, §2.2/§2.4): sym is
-    # joined by "m", the label table arrives renamed n→m (alias-aware
-    # hash(n) claim serves it) — no O(E) re-exchange per round
-    sym, sym_ids = _checkpoint(
-        und.select(F.col("a").alias("n"), F.col("b").alias("m")).union(
-            und.select(F.col("b").alias("n"), F.col("a").alias("m"))
-        ),
-        partition_by=("m",),
-    )
-    labels, lab_ids = _checkpoint(
-        sym.select("n").distinct().select("n", F.col("n").alias("community"))
-    )
-    for _ in range(max_iter):
-        nbr = (
-            sym.join(
-                labels.select(F.col("n").alias("m"), "community"), "m"
+    with CheckpointScope() as scope:
+        sym = scope.pin(
+            und.select(F.col("a").alias("n"), F.col("b").alias("m")).union(
+                und.select(F.col("b").alias("n"), F.col("a").alias("m"))
             )
-            .groupBy("n", "community")
-            .agg(F.count(F.lit(1)).alias("__c"))
         )
-        new_labels = (
-            nbr.groupBy("n")
-            .agg(
-                F.min(
-                    F.struct(
-                        (-F.col("__c")).alias("negc"),
-                        F.col("community").alias("community"),
-                    )
-                ).alias("__w")
+        labels = scope.pin(
+            sym.select("n").distinct().select("n", F.col("n").alias("community"))
+        )
+        for _ in range(max_iter):
+            nbr = (
+                sym.join(
+                    labels.select(F.col("n").alias("m"), "community"), "m"
+                )
+                .groupBy("n", "community")
+                .agg(F.count(F.lit(1)).alias("__c"))
             )
-            .select("n", F.col("__w.community").alias("community"))
-        )
-        new_labels, new_ids = _checkpoint(new_labels)
-        _release(sc, lab_ids)
-        labels, lab_ids = new_labels, new_ids
-    out = labels.select(F.col("n").alias("node"), "community")
-    _release(sc, sym_ids)
-    return out
+            new_labels = scope.pin(
+                nbr.groupBy("n")
+                .agg(
+                    F.min(
+                        F.struct(
+                            (-F.col("__c")).alias("negc"),
+                            F.col("community").alias("community"),
+                        )
+                    ).alias("__w")
+                )
+                .select("n", F.col("__w.community").alias("community"))
+            )
+            scope.drop(labels)
+            labels = new_labels
+        return scope.keep(labels.select(F.col("n").alias("node"), "community"))
 
 
 def k_core(
@@ -818,37 +641,36 @@ def k_core(
     """
     if k < 1:
         raise ValueError(f"k must be >= 1: {k}")
-    sc = edges.sparkSession.sparkContext
     und = edges.where(
         F.col(src).isNotNull() & F.col(dst).isNotNull() & (F.col(src) != F.col(dst))
     ).select(F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b")).distinct()
-    e, e_ids = _checkpoint(und)
-    for i in range(max_iter):
-        deg = (
-            e.select(F.col("a").alias("n"))
-            .unionAll(e.select(F.col("b").alias("n")))
-            .groupBy("n")
-            .agg(F.count(F.lit(1)).alias("degree"))
-        )
-        survivors = deg.where(F.col("degree") >= k).select("n")
-        n_dropped = deg.where(F.col("degree") < k).count()
-        if n_dropped == 0:
-            out = deg.select(F.col("n").alias("node"), "degree")
-            # materialize before releasing the edge checkpoint it reads
-            out, out_ids = _checkpoint(out)
-            _release(sc, e_ids)
-            return out
-        ne = (
-            e.join(survivors.withColumnRenamed("n", "a"), "a", "left_semi")
-            .join(survivors.withColumnRenamed("n", "b"), "b", "left_semi")
-            .select("a", "b")
-        )
-        ne, ne_ids = _checkpoint(ne)
-        _release(sc, e_ids)
-        e, e_ids = ne, ne_ids
-        # an emptied edge table converges naturally next round: deg is
-        # empty, nothing drops, the empty core returns with the right
-        # schema
+    with CheckpointScope() as scope:
+        e = scope.pin(und)
+        for _ in range(max_iter):
+            deg = (
+                e.select(F.col("a").alias("n"))
+                .unionAll(e.select(F.col("b").alias("n")))
+                .groupBy("n")
+                .agg(F.count(F.lit(1)).alias("degree"))
+            )
+            survivors = deg.where(F.col("degree") >= k).select("n")
+            n_dropped = deg.where(F.col("degree") < k).count()
+            if n_dropped == 0:
+                # materialize: the edge checkpoint deg reads is freed on
+                # return
+                return scope.keep(
+                    scope.pin(deg.select(F.col("n").alias("node"), "degree"))
+                )
+            ne = scope.pin(
+                e.join(survivors.withColumnRenamed("n", "a"), "a", "left_semi")
+                .join(survivors.withColumnRenamed("n", "b"), "b", "left_semi")
+                .select("a", "b")
+            )
+            scope.drop(e)
+            e = ne
+            # an emptied edge table converges naturally next round: deg
+            # is empty, nothing drops, the empty core returns with the
+            # right schema
     raise RuntimeError(f"k_core did not converge within max_iter={max_iter}")
 
 
@@ -876,98 +698,56 @@ def personalized_pagerank(
     stochastic completion), so total mass stays exactly 1 per round
     and seeds outside the graph still receive their teleport share.
 
-    Same per-iteration shape, checkpoint/release policy and
-    convergence probe as :func:`pagerank` (one weighted-edge join +
-    one partial-aggregable dst groupBy per round); ``tol=0`` runs
-    exactly ``max_iter`` rounds for external replay.
+    Same per-iteration shape, checkpoint scope and convergence probe
+    as :func:`pagerank` (the shared ``_power_iterate`` loop: one
+    weighted-edge join + one partial-aggregable dst groupBy per
+    round); ``tol=0`` runs exactly ``max_iter`` rounds for external
+    replay.
     """
     if not (0.0 < damping < 1.0):
         raise ValueError(f"damping must be in (0, 1): {damping}")
     srcs = list(dict.fromkeys(sources))
     if not srcs:
         raise ValueError("sources must name at least one node")
-    sc = edges.sparkSession.sparkContext
-    e, e_ids = _checkpoint(
-        edges.where(F.col(src).isNotNull() & F.col(dst).isNotNull()).select(
-            F.col(src).alias("s"), F.col(dst).alias("d")
-        )
-    )
-    outd = e.groupBy("s").agg(F.count(F.lit(1)).alias("__outd"))
-    # same pinned-layout scheme as pagerank (r11, §2.2/§2.4)
-    ew, ew_ids = _checkpoint(
-        e.join(outd, "s").select(
-            "s", "d", (F.lit(1.0) / F.col("__outd")).alias("w")
-        ),
-        partition_by=("s",),
-    )
-    # node set INCLUDES off-graph seeds: they hold teleport mass
-    seed_df = edges.sparkSession.createDataFrame(
-        [(s,) for s in srcs], f"n {e.schema['s'].dataType.simpleString()}"
-    )
-    nodes, nodes_ids = _checkpoint(
-        e.select(F.col("s").alias("n"))
-        .union(e.select(F.col("d").alias("n")))
-        .union(seed_df.select("n"))
-        .distinct(),
-        partition_by=("n",),
-    )
-    _release(sc, e_ids)
-    share = 1.0 / len(srcs)
-    is_src = F.col("n").isin(srcs)
-    src_share = F.when(is_src, F.lit(share)).otherwise(F.lit(0.0))
-    ranks, ranks_ids = _checkpoint(nodes.select("n", src_share.alias("r")))
-
-    ranks_lazy = False
-    for _ in range(max_iter):
-        obs = Observation()
-        contrib, contrib_ids = _checkpoint(
-            ew.join(ranks.withColumnRenamed("n", "s"), "s")
-            .groupBy("d")
-            .agg(F.sum(F.col("r") * F.col("w")).alias("__c"))
-            .withColumnRenamed("d", "n")
-            .observe(obs, F.sum("__c").alias("s"))
-        )
-        # Σ contrib observed during the checkpoint action (see pagerank)
-        dm = 1.0 - (_observed(obs, contrib, "s", F.sum("__c")) or 0.0)
-        new_ranks = nodes.join(contrib, "n", "left").select(
-            "n",
-            (
-                F.lit(1.0 - damping) * src_share
-                + F.lit(damping)
-                * (
-                    F.coalesce(F.col("__c"), F.lit(0.0))
-                    + F.lit(dm) * src_share
-                )
-            ).alias("r"),
-        )
-        if tol > 0:
-            new_ranks, new_ids = _checkpoint(new_ranks)
-            _release(sc, contrib_ids)
-            delta = (
-                new_ranks.join(ranks.withColumnRenamed("r", "r0"), "n")
-                .agg(F.sum(F.abs(F.col("r") - F.col("r0"))))
-                .first()[0]
+    with CheckpointScope() as scope:
+        e = scope.pin(
+            edges.where(F.col(src).isNotNull() & F.col(dst).isNotNull()).select(
+                F.col(src).alias("s"), F.col(dst).alias("d")
             )
-            ranks_lazy = False
-        else:
-            # probe-free path (tol=0): same as pagerank — the rank table
-            # is consumed once per round and contrib is checkpointed, so
-            # it stays a lazy depth-1 projection
-            new_ids = contrib_ids
-            delta = None
-            ranks_lazy = True
-        _release(sc, ranks_ids)
-        ranks, ranks_ids = new_ranks, new_ids
-        if delta is not None and delta <= tol:
-            break
-
-    out = ranks.select(F.col("n").alias(out_node), F.col("r").alias(out_rank))
-    if ranks_lazy:
-        out, out_ids = _checkpoint(out)
-        _release(sc, ranks_ids)
-    _release(sc, ew_ids)
-    _release(sc, nodes_ids)
-    return out
+        )
+        outd = e.groupBy("s").agg(F.count(F.lit(1)).alias("__outd"))
+        ew = scope.pin(
+            e.join(outd, "s").select(
+                "s", "d", (F.lit(1.0) / F.col("__outd")).alias("w")
+            )
+        )
+        # node set INCLUDES off-graph seeds: they hold teleport mass
+        seed_df = edges.sparkSession.createDataFrame(
+            [(s,) for s in srcs], f"n {e.schema['s'].dataType.simpleString()}"
+        )
+        nodes = scope.pin(
+            e.select(F.col("s").alias("n"))
+            .union(e.select(F.col("d").alias("n")))
+            .union(seed_df.select("n"))
+            .distinct()
+        )
+        scope.drop(e)
+        share = 1.0 / len(srcs)
+        is_src = F.col("n").isin(srcs)
+        src_share = F.when(is_src, F.lit(share)).otherwise(F.lit(0.0))
+        ranks = scope.pin(nodes.select("n", src_share.alias("r")))
+        return _power_iterate(
+            scope,
+            ew,
+            nodes,
+            ranks,
+            lambda c, dm: F.lit(1.0 - damping) * src_share
+            + F.lit(damping) * (c + F.lit(dm) * src_share),
+            max_iter,
+            tol,
+            out_node,
+            out_rank,
+        )
 
 
 def bfs_distances(
@@ -1012,7 +792,6 @@ def bfs_distances(
     if max_hops < 0:
         raise ValueError(f"max_hops must be >= 0, got {max_hops}")
     spark = edges.sparkSession
-    sc = spark.sparkContext
     u, v = F.col(src), F.col(dst)
     pairs = edges.where(u.isNotNull() & v.isNotNull() & (u != v)).select(
         u.alias("n"), v.alias("m")
@@ -1023,12 +802,6 @@ def bfs_distances(
                 v.alias("n"), u.alias("m")
             )
         )
-    # NOTE (r11): pinning adj's hash("n") layout at the checkpoint
-    # (the pagerank/hits §2.4 trick) was MEASURED SLOWER here (in-
-    # session A/B 3.9 vs 3.5 s): the frontier side broadcasts at this
-    # scale, so the pin's extra setup pass buys no per-hop exchange.
-    adj, adj_ids = _checkpoint(pairs.distinct())
-
     if isinstance(sources, DataFrame):
         seed = sources.select(F.col(sources.columns[0]).alias("n")).distinct()
     else:
@@ -1038,56 +811,48 @@ def bfs_distances(
             [(s,) for s in sources], schema=["n"]
         ).distinct()
 
-    # NOTE (r10): a per-level variant (anti-join against a lazy union
-    # of the cached level frames instead of the growing visited
-    # checkpoint) was tried and MEASURED SLOWER (b127 2.7 → 3.4 s):
-    # the union side loses the single-cached-relation stats and the
-    # anti-join strategy degrades, and every hop re-reads all previous
-    # levels — the single checkpointed visited table stays.
-    frontier, frontier_ids = _checkpoint(seed.select("n"))
-    visited, visited_ids = _checkpoint(
-        frontier.select("n", F.lit(0).alias("d"))
-    )
-    frontier_nonempty = not frontier.isEmpty()
-    for hop in range(1, max_hops + 1):
-        if not frontier_nonempty:
-            break
-        nxt = (
-            frontier.join(adj, "n")
-            .select(F.col("m").alias("n"))
-            .distinct()
-            .join(visited.select("n"), "n", "left_anti")
+    with CheckpointScope() as scope:
+        adj = scope.pin(pairs.distinct())
+        # NOTE (r10): a per-level variant (anti-join against a lazy
+        # union of the cached level frames instead of the growing
+        # visited checkpoint) was tried and MEASURED SLOWER (b127 2.7 →
+        # 3.4 s): the union side loses the single-cached-relation stats
+        # and the anti-join strategy degrades, and every hop re-reads
+        # all previous levels — the single checkpointed visited table
+        # stays.
+        frontier = scope.pin(seed.select("n"))
+        visited = scope.pin(frontier.select("n", F.lit(0).alias("d")))
+        frontier_nonempty = not frontier.isEmpty()
+        for hop in range(1, max_hops + 1):
+            if not frontier_nonempty:
+                break
+            nxt = (
+                frontier.join(adj, "n")
+                .select(F.col("m").alias("n"))
+                .distinct()
+                .join(visited.select("n"), "n", "left_anti")
+            )
+            # the frontier's row count is observed during the checkpoint
+            # action — no separate emptiness probe per hop
+            obs = Observation()
+            new_frontier = scope.pin(
+                nxt.observe(obs, F.count(F.lit(1)).alias("n"))
+            )
+            scope.drop(frontier)
+            frontier = new_frontier
+            frontier_nonempty = (
+                _observed(obs, new_frontier, "n", F.count(F.lit(1))) or 0
+            ) > 0
+            if not frontier_nonempty:
+                break
+            new_visited = scope.pin(
+                visited.union(frontier.select("n", F.lit(hop).alias("d")))
+            )
+            scope.drop(visited)
+            visited = new_visited
+        return scope.keep(
+            visited.select(F.col("n").alias(out_node), F.col("d").alias(out_dist))
         )
-        # the frontier's row count is observed during the checkpoint
-        # action — no separate emptiness probe per hop
-        obs = Observation()
-        new_frontier, new_frontier_ids = _checkpoint(
-            nxt.observe(obs, F.count(F.lit(1)).alias("n"))
-        )
-        _release(sc, frontier_ids)
-        frontier, frontier_ids = new_frontier, new_frontier_ids
-        frontier_nonempty = (
-            _observed(obs, new_frontier, "n", F.count(F.lit(1))) or 0
-        ) > 0
-        if not frontier_nonempty:
-            break
-        new_visited, new_visited_ids = _checkpoint(
-            visited.union(frontier.select("n", F.lit(hop).alias("d")))
-        )
-        _release(sc, visited_ids)
-        visited, visited_ids = new_visited, new_visited_ids
-
-    _release(sc, adj_ids)
-    _release(sc, frontier_ids)
-    out = visited.select(
-        F.col("n").alias(out_node), F.col("d").alias(out_dist)
-    )
-    # the result must outlive the released checkpoint blocks: collect it
-    # into a fresh checkpoint the CALLER's lineage can read, then free
-    # the loop's final visited blocks
-    out, out_ids = _checkpoint(out)
-    _release(sc, visited_ids)
-    return out
 
 
 def sssp(
@@ -1121,7 +886,6 @@ def sssp(
     ``sssp``).
     """
     spark = edges.sparkSession
-    sc = spark.sparkContext
     u, v, wc = F.col(src), F.col(dst), F.col(weight_col).cast("double")
     base = edges.where(
         u.isNotNull() & v.isNotNull() & wc.isNotNull() & (u != v)
@@ -1136,14 +900,6 @@ def sssp(
         pairs = pairs.union(
             base.select(v.alias("n"), u.alias("m"), wc.alias("w"))
         )
-    # parallel edges: keep the cheapest once, up front. NOTE (r11):
-    # pinning hash("n") on this checkpoint was MEASURED SLOWER (A/B
-    # 4.6 vs 4.3 s): the improved-frontier side broadcasts at this
-    # scale, so the pin's extra pass buys no per-round exchange.
-    adj, adj_ids = _checkpoint(
-        pairs.groupBy("n", "m").agg(F.min("w").alias("w"))
-    )
-
     if isinstance(sources, DataFrame):
         seed = sources.select(F.col(sources.columns[0]).alias("n")).distinct()
     else:
@@ -1153,67 +909,59 @@ def sssp(
             [(s,) for s in sources], schema=["n"]
         ).distinct()
 
-    dist, dist_ids = _checkpoint(
-        seed.select("n", F.lit(0.0).alias("d"))
-    )
-    frontier, frontier_ids = dist, set()  # shares dist's blocks at round 0
-    improving = True
-    rounds = 0
-    while improving:
-        if rounds >= max_iter:
-            raise ValueError(
-                f"sssp did not converge within max_iter={max_iter} "
-                "rounds; the shortest-path tree is deeper than the "
-                "bound — raise max_iter"
+    with CheckpointScope() as scope:
+        # parallel edges: keep the cheapest once, up front
+        adj = scope.pin(pairs.groupBy("n", "m").agg(F.min("w").alias("w")))
+        dist = scope.pin(seed.select("n", F.lit(0.0).alias("d")))
+        frontier = dist  # shares dist's blocks at round 0
+        improving = True
+        rounds = 0
+        while improving:
+            if rounds >= max_iter:
+                raise ValueError(
+                    f"sssp did not converge within max_iter={max_iter} "
+                    "rounds; the shortest-path tree is deeper than the "
+                    "bound — raise max_iter"
+                )
+            rounds += 1
+            cand = (
+                frontier.join(adj, "n")
+                .groupBy(F.col("m").alias("n"))
+                .agg(F.min(F.col("d") + F.col("w")).alias("c"))
             )
-        rounds += 1
-        cand = (
-            frontier.join(adj, "n")
-            .groupBy(F.col("m").alias("n"))
-            .agg(F.min(F.col("d") + F.col("w")).alias("c"))
+            merged = (
+                dist.join(cand, "n", "full_outer")
+                .select(
+                    "n",
+                    F.least(F.col("d"), F.col("c")).alias("d"),
+                    (
+                        F.col("d").isNull()
+                        | (F.col("c").isNotNull() & (F.col("c") < F.col("d")))
+                    ).alias("__imp"),
+                )
+            )
+            obs = Observation()
+            new_dist = scope.pin(
+                merged.observe(
+                    obs, F.sum(F.col("__imp").cast("long")).alias("imp")
+                )
+            )
+            improving = (
+                _observed(
+                    obs, new_dist, "imp", F.sum(F.col("__imp").cast("long"))
+                )
+                or 0
+            ) > 0
+            # the frontier is consumed exactly once (next round's
+            # adjacency join) and is a filter-projection over the
+            # new_dist blocks just checkpointed above — keep it lazy
+            # instead of paying a second O(V) materialization per round
+            frontier = new_dist.where(F.col("__imp")).select("n", "d")
+            scope.drop(dist)
+            dist = new_dist
+        return scope.keep(
+            dist.select(F.col("n").alias(out_node), F.col("d").alias(out_dist))
         )
-        merged = (
-            dist.join(cand, "n", "full_outer")
-            .select(
-                "n",
-                F.least(F.col("d"), F.col("c")).alias("d"),
-                (
-                    F.col("d").isNull()
-                    | (F.col("c").isNotNull() & (F.col("c") < F.col("d")))
-                ).alias("__imp"),
-            )
-        )
-        obs = Observation()
-        new_dist, new_dist_ids = _checkpoint(
-            merged.observe(
-                obs, F.sum(F.col("__imp").cast("long")).alias("imp")
-            )
-        )
-        improved = new_dist.where(F.col("__imp"))
-        improving = (
-            _observed(
-                obs, new_dist, "imp", F.sum(F.col("__imp").cast("long"))
-            )
-            or 0
-        ) > 0
-        # the frontier is consumed exactly once (next round's adjacency
-        # join) and is a filter-projection over the new_dist blocks just
-        # checkpointed above — keep it lazy instead of paying a second
-        # O(V) materialization per round; its backing blocks live until
-        # new_dist is superseded and released next round
-        new_frontier, new_frontier_ids = improved.select("n", "d"), set()
-        _release(sc, frontier_ids)
-        _release(sc, dist_ids)
-        dist, dist_ids = new_dist, new_dist_ids
-        frontier, frontier_ids = new_frontier, new_frontier_ids
-
-    _release(sc, adj_ids)
-    _release(sc, frontier_ids)
-    out, out_ids = _checkpoint(
-        dist.select(F.col("n").alias(out_node), F.col("d").alias(out_dist))
-    )
-    _release(sc, dist_ids)
-    return out
 
 
 def hits(
@@ -1232,7 +980,7 @@ def hits(
     the identical normalization, so scores match exactly, not just up
     to scale).
 
-    Scale shape (r11, §1.2/§2.2/§2.4): rounds 1..n−1 are FUSED — the
+    Scale shape (r11, §1.2): rounds 1..n−1 are FUSED — the
     authority update is a lazy intermediate of the hub update's job,
     so each fused round is ONE action (join → groupBy → join → groupBy
     → checkpoint) instead of two. The fusion is exact up to float
@@ -1241,11 +989,12 @@ def hits(
     so the fused round normalizes ONCE by the raw hub sum observed
     during the checkpoint (differences are ~1 ulp/round, far inside
     the replay oracle's 1e-9 pin). The final round stays split so the
-    output's authority table materializes. The edge table is
-    checkpointed TWICE, pinned hash(s) and hash(t) (see _checkpoint):
-    every per-round join and the final padding join are zero-exchange
-    co-partitioned merges — only the two groupBy exchanges per round
-    carry rows, and those are partial-aggregated map-side.
+    output's authority table materializes. The distinct edge table is
+    checkpointed ONCE and read by both half-steps; each round's two
+    groupBy exchanges are partial-aggregated map-side. One
+    ``CheckpointScope`` frees superseded hub tables per round and the
+    edge, node and loop tables on return: only the padded result's
+    blocks outlive the call.
     ``n_iter`` bounds rounds — HITS converges geometrically (principal
     eigenvector of AᵀA / AAᵀ), 20 rounds is the standard budget.
     Returns ``node, hub, authority`` (nodes with only in-links get
@@ -1256,97 +1005,88 @@ def hits(
     """
     if n_iter < 1:
         raise ValueError(f"n_iter must be >= 1, got {n_iter}")
-    sc = edges.sparkSession.sparkContext
     u, v = F.col(src), F.col(dst)
-    ew, ew_ids = _checkpoint(
-        edges.where(u.isNotNull() & v.isNotNull())
-        .select(u.alias("s"), v.alias("t"))
-        .distinct(),
-        partition_by=("s",),
-    )
-    ewt, ewt_ids = _checkpoint(ew, partition_by=("t",))
-    nodes, nodes_ids = _checkpoint(
-        ew.select(F.col("s").alias("n"))
-        .union(ew.select(F.col("t").alias("n")))
-        .distinct(),
-        partition_by=("n",),
-    )
-    n_nodes = nodes.count()
-    if n_nodes == 0:
-        _release(sc, ew_ids)
-        _release(sc, ewt_ids)
-        _release(sc, nodes_ids)
-        # empty-graph schema must track the actual node-id type (string
-        # ids would otherwise conflict with a hardcoded long on union)
-        node_t = ew.schema["s"].dataType.simpleString()
-        return edges.sparkSession.createDataFrame(
-            [], f"{out_node} {node_t}, hub double, authority double"
+    with CheckpointScope() as scope:
+        ew = scope.pin(
+            edges.where(u.isNotNull() & v.isNotNull())
+            .select(u.alias("s"), v.alias("t"))
+            .distinct()
         )
-    # the loop state tables cover only each score's nonzero support
-    # (after round 1 the hub table holds out-link nodes, the authority
-    # table in-link nodes): zero-score nodes add nothing to the edge
-    # join or the L1 norm, so the zero padding happens once at the end.
-    # Round 1's uniform hub rides the already-checkpointed nodes table
-    # — its in-link-only rows drop out at the first join.
-    hub, hub_ids = nodes.select("n", F.lit(1.0 / n_nodes).alias("h")), set()
-    for i in range(n_iter - 1):
-        # fused round: the intermediate authority stays RAW (its norm
-        # cancels out of the normalized hub — see docstring), so the
-        # whole round is one action checkpointing only the raw hub sums
-        auth_raw = (
+        nodes = scope.pin(
+            ew.select(F.col("s").alias("n"))
+            .union(ew.select(F.col("t").alias("n")))
+            .distinct()
+        )
+        n_nodes = nodes.count()
+        if n_nodes == 0:
+            # empty-graph schema must track the actual node-id type
+            # (string ids would otherwise conflict with a hardcoded long
+            # on union)
+            node_t = ew.schema["s"].dataType.simpleString()
+            return edges.sparkSession.createDataFrame(
+                [], f"{out_node} {node_t}, hub double, authority double"
+            )
+        # the loop state tables cover only each score's nonzero support
+        # (after round 1 the hub table holds out-link nodes, the
+        # authority table in-link nodes): zero-score nodes add nothing
+        # to the edge join or the L1 norm, so the zero padding happens
+        # once at the end. Round 1's uniform hub rides the already-
+        # checkpointed nodes table — its in-link-only rows drop out at
+        # the first join.
+        hub = nodes.select("n", F.lit(1.0 / n_nodes).alias("h"))
+        for i in range(n_iter - 1):
+            # fused round: the intermediate authority stays RAW (its
+            # norm cancels out of the normalized hub — see docstring),
+            # so the whole round is one action checkpointing only the
+            # raw hub sums
+            auth_raw = (
+                ew.join(hub.withColumnRenamed("n", "s"), "s")
+                .groupBy(F.col("t").alias("n"))
+                .agg(F.sum("h").alias("a"))
+            )
+            obs_h = Observation()
+            new_hub = scope.pin(
+                ew.join(auth_raw.withColumnRenamed("n", "t"), "t")
+                .groupBy(F.col("s").alias("n"))
+                .agg(F.sum("a").alias("h"))
+                .observe(obs_h, F.sum("h").alias("s"))
+            )
+            norm_h = _observed(obs_h, new_hub, "s", F.sum("h")) or 1.0
+            if i:  # round 1's hub is a view over nodes, which stays
+                scope.drop(hub)
+            hub = new_hub.select("n", (F.col("h") / norm_h).alias("h"))
+
+        # final round stays split: the output needs the normalized
+        # authority table materialized
+        obs_a = Observation()
+        auth = scope.pin(
             ew.join(hub.withColumnRenamed("n", "s"), "s")
             .groupBy(F.col("t").alias("n"))
             .agg(F.sum("h").alias("a"))
+            .observe(obs_a, F.sum("a").alias("s"))
         )
+        norm_a = _observed(obs_a, auth, "s", F.sum("a")) or 1.0
+        last_auth = auth.select("n", (F.col("a") / norm_a).alias("a"))
         obs_h = Observation()
-        new_hub, new_hub_ids = _checkpoint(
-            ewt.join(auth_raw.withColumnRenamed("n", "t"), "t")
+        new_hub = scope.pin(
+            ew.join(last_auth.withColumnRenamed("n", "t"), "t")
             .groupBy(F.col("s").alias("n"))
             .agg(F.sum("a").alias("h"))
             .observe(obs_h, F.sum("h").alias("s"))
         )
         norm_h = _observed(obs_h, new_hub, "s", F.sum("h")) or 1.0
-        hub_n = new_hub.select("n", (F.col("h") / norm_h).alias("h"))
-        _release(sc, hub_ids)
-        hub, hub_ids = hub_n, new_hub_ids
-
-    # final round stays split: the output needs the normalized
-    # authority table materialized
-    obs_a = Observation()
-    auth, auth_ids = _checkpoint(
-        ew.join(hub.withColumnRenamed("n", "s"), "s")
-        .groupBy(F.col("t").alias("n"))
-        .agg(F.sum("h").alias("a"))
-        .observe(obs_a, F.sum("a").alias("s"))
-    )
-    norm_a = _observed(obs_a, auth, "s", F.sum("a")) or 1.0
-    last_auth = auth.select("n", (F.col("a") / norm_a).alias("a"))
-    obs_h = Observation()
-    new_hub, new_hub_ids = _checkpoint(
-        ewt.join(last_auth.withColumnRenamed("n", "t"), "t")
-        .groupBy(F.col("s").alias("n"))
-        .agg(F.sum("a").alias("h"))
-        .observe(obs_h, F.sum("h").alias("s"))
-    )
-    norm_h = _observed(obs_h, new_hub, "s", F.sum("h")) or 1.0
-    _release(sc, hub_ids)
-    hub, hub_ids = new_hub.select("n", (F.col("h") / norm_h).alias("h")), new_hub_ids
-
-    out, out_ids = _checkpoint(
-        nodes.join(hub, "n", "left")
-        .join(last_auth.withColumnRenamed("a", "authority"), "n", "left")
-        .select(
-            F.col("n").alias(out_node),
-            F.coalesce(F.col("h"), F.lit(0.0)).alias("hub"),
-            F.coalesce(F.col("authority"), F.lit(0.0)).alias("authority"),
+        hub = new_hub.select("n", (F.col("h") / norm_h).alias("h"))
+        return scope.keep(
+            scope.pin(
+                nodes.join(hub, "n", "left")
+                .join(last_auth.withColumnRenamed("a", "authority"), "n", "left")
+                .select(
+                    F.col("n").alias(out_node),
+                    F.coalesce(F.col("h"), F.lit(0.0)).alias("hub"),
+                    F.coalesce(F.col("authority"), F.lit(0.0)).alias("authority"),
+                )
+            )
         )
-    )
-    _release(sc, hub_ids)
-    _release(sc, auth_ids)
-    _release(sc, ew_ids)
-    _release(sc, ewt_ids)
-    _release(sc, nodes_ids)
-    return out
 
 
 def py_brandes_sampled(edges, sources, directed=False):
@@ -1438,151 +1178,132 @@ def betweenness(
     if max_depth < 1:
         raise ValueError(f"max_depth must be >= 1, got {max_depth}")
     spark = edges.sparkSession
-    sc = spark.sparkContext
     u, v = F.col(src), F.col(dst)
     base = edges.where(u.isNotNull() & v.isNotNull() & (u != v))
     pairs = base.select(u.alias("n"), v.alias("m"))
     if not directed:
         pairs = pairs.union(base.select(v.alias("n"), u.alias("m")))
-    # NOTE (r11): pinning adj's layout (the pagerank/hits §2.4 trick)
-    # was a wash in-session and slower cross-JVM — the per-level
-    # frontier/visited joins dominate, not the adjacency exchange.
-    adj, adj_ids = _checkpoint(pairs.distinct())
+    with CheckpointScope() as scope:
+        adj = scope.pin(pairs.distinct())
+        nodes = adj.select("n").union(adj.select(F.col("m").alias("n"))).distinct()
+        if sources is None:
+            seed_df = (
+                nodes.orderBy(F.xxhash64("n"), F.col("n")).limit(k_sources)
+            )
+        elif isinstance(sources, DataFrame):
+            seed_df = sources.select(
+                F.col(sources.columns[0]).alias("n")
+            ).distinct()
+        else:
+            if not sources:
+                raise ValueError("sources must name at least one node")
+            seed_df = spark.createDataFrame(
+                [(s,) for s in sources], schema=["n"]
+            ).distinct()
+        seed_df = seed_df.select(F.col("n").alias("s"))
+        n_nodes = nodes.count()
+        n_src = seed_df.count()
+        if n_src == 0:
+            # empty-result schema tracks the node-id type (string ids
+            # would conflict with a hardcoded long on union/read)
+            node_t = adj.schema["n"].dataType.simpleString()
+            return spark.createDataFrame(
+                [], f"{out_node} {node_t}, betweenness double"
+            )
 
-    nodes = adj.select("n").union(adj.select(F.col("m").alias("n"))).distinct()
-    if sources is None:
-        seed_df = (
-            nodes.orderBy(F.xxhash64("n"), F.col("n")).limit(k_sources)
+        # ---- forward: per-level frontiers with path counts ----
+        # The anti-join keeps reading a single growing checkpointed
+        # visited table (a lazy union over the cached level frames was
+        # tried and measured slower — the union side loses single-
+        # relation stats and the anti-join strategy degrades); the level
+        # frames are RETAINED (not dropped when superseded) because the
+        # backward pass reads exactly the per-depth (s, n, sigma) slices
+        # — direct level reads instead of a full-visited filter scan
+        # per backward level.
+        frontier = scope.pin(
+            seed_df.select("s", F.col("s").alias("n"),
+                           F.lit(1.0).alias("sigma"))
         )
-    elif isinstance(sources, DataFrame):
-        seed_df = sources.select(
-            F.col(sources.columns[0]).alias("n")
-        ).distinct()
-    else:
-        if not sources:
-            raise ValueError("sources must name at least one node")
-        seed_df = spark.createDataFrame(
-            [(s,) for s in sources], schema=["n"]
-        ).distinct()
-    seed_df = seed_df.select(F.col("n").alias("s"))
-    n_nodes = nodes.count()
-    n_src = seed_df.count()
-    if n_src == 0:
-        _release(sc, adj_ids)
-        # empty-result schema tracks the node-id type (string ids would
-        # conflict with a hardcoded long on union/read)
-        node_t = adj.schema["n"].dataType.simpleString()
-        return spark.createDataFrame(
-            [], f"{out_node} {node_t}, betweenness double"
-        )
+        levels = [frontier]  # levels[d] = frontier at depth d
+        visited = scope.pin(frontier.select("s", "n"))
+        depth = 0
+        for hop in range(1, max_depth + 1):
+            if hop > 1:
+                # fold the previous round's frontier in at loop TOP so
+                # the final round never pays a visited materialization
+                # nothing will read
+                new_visited = scope.pin(
+                    visited.union(frontier.select("s", "n"))
+                )
+                scope.drop(visited)
+                visited = new_visited
+            nxt = (
+                frontier.join(adj, "n")
+                .select("s", F.col("m").alias("n"), "sigma")
+                .join(visited, ["s", "n"], "left_anti")
+                .groupBy("s", "n")
+                .agg(F.sum("sigma").alias("sigma"))
+            )
+            obs = Observation()
+            new_frontier = scope.pin(
+                nxt.observe(obs, F.count(F.lit(1)).alias("n"))
+            )
+            if (_observed(obs, new_frontier, "n", F.count(F.lit(1))) or 0) == 0:
+                scope.drop(new_frontier)
+                break
+            depth = hop
+            frontier = new_frontier
+            levels.append(new_frontier)
+        scope.drop(visited)
 
-    # ---- forward: per-level frontiers with path counts ----
-    # The anti-join keeps reading a single growing checkpointed visited
-    # table (a lazy union over the cached level frames was tried and
-    # measured slower — the union side loses single-relation stats and
-    # the anti-join strategy degrades); the level frames are RETAINED
-    # (not released when superseded) because the backward pass reads
-    # exactly the per-depth (s, n, sigma) slices — direct level reads
-    # instead of a full-visited filter scan per backward level.
-    frontier, frontier_ids = _checkpoint(
-        seed_df.select("s", F.col("s").alias("n"),
-                       F.lit(1.0).alias("sigma"))
-    )
-    levels = [(frontier, frontier_ids)]  # levels[d] = frontier at depth d
-    visited, visited_ids = _checkpoint(
-        frontier.select("s", "n")
-    )
-    depth = 0
-    for hop in range(1, max_depth + 1):
-        if hop > 1:
-            # fold the previous round's frontier in at loop TOP so the
-            # final round never pays a visited materialization nothing
-            # will read
-            new_visited, new_visited_ids = _checkpoint(
-                visited.union(frontier.select("s", "n"))
+        # ---- backward: dependency accumulation by level ----
+        # adj reversed: successors w of v are v→w edges; for the
+        # backward join we look up predecessors of w, i.e. join on the
+        # w side. The deepest level starts at δ=0 — a lazy projection
+        # over its cached level frame, no extra materialization.
+        level_delta = levels[depth].select("s", "n", F.lit(0.0).alias("delta"))
+        all_delta = level_delta
+        for d in range(depth - 1, -1, -1):
+            succ = (
+                levels[d + 1]
+                .join(level_delta, ["s", "n"], "left")
+                .select(
+                    "s",
+                    F.col("n").alias("w"),
+                    F.col("sigma").alias("sw"),
+                    F.coalesce(F.col("delta"), F.lit(0.0)).alias("dw"),
+                )
             )
-            _release(sc, visited_ids)
-            visited, visited_ids = new_visited, new_visited_ids
-        nxt = (
-            frontier.join(adj, "n")
-            .select("s", F.col("m").alias("n"), "sigma")
-            .join(visited, ["s", "n"], "left_anti")
-            .groupBy("s", "n")
-            .agg(F.sum("sigma").alias("sigma"))
-        )
-        obs = Observation()
-        new_frontier, new_frontier_ids = _checkpoint(
-            nxt.observe(obs, F.count(F.lit(1)).alias("n"))
-        )
-        if (_observed(obs, new_frontier, "n", F.count(F.lit(1))) or 0) == 0:
-            _release(sc, new_frontier_ids)
-            break
-        depth = hop
-        frontier = new_frontier
-        levels.append((new_frontier, new_frontier_ids))
-    _release(sc, visited_ids)
+            contrib = (
+                succ.join(
+                    adj.select(F.col("n").alias("v"), F.col("m").alias("w")),
+                    "w",
+                )
+                .join(
+                    levels[d].select(
+                        "s", F.col("n").alias("v"),
+                        F.col("sigma").alias("sv"),
+                    ),
+                    ["s", "v"],
+                )
+                .groupBy("s", F.col("v").alias("n"))
+                .agg(
+                    F.sum(
+                        F.col("sv") / F.col("sw") * (F.lit(1.0) + F.col("dw"))
+                    ).alias("delta")
+                )
+            )
+            level_delta = scope.pin(contrib)
+            all_delta = all_delta.union(level_delta)
 
-    # ---- backward: dependency accumulation by level ----
-    # adj reversed: successors w of v are v→w edges; for the backward
-    # join we look up predecessors of w, i.e. join on the w side
-    deltas = []  # per-level (s, n, delta) frames
-    # deepest level starts at δ=0 — a lazy projection over its cached
-    # level frame, no extra materialization
-    level_delta, level_delta_ids = (
-        levels[depth][0].select("s", "n", F.lit(0.0).alias("delta")),
-        set(),
-    )
-    for d in range(depth - 1, -1, -1):
-        succ = (
-            levels[d + 1][0]
-            .join(level_delta, ["s", "n"], "left")
-            .select(
-                "s",
-                F.col("n").alias("w"),
-                F.col("sigma").alias("sw"),
-                F.coalesce(F.col("delta"), F.lit(0.0)).alias("dw"),
-            )
+        scale = float(n_nodes) / float(n_src)
+        result = (
+            # a pivot's own δ row never counts toward its score
+            # (Brandes: the source is excluded from its accumulation)
+            all_delta.where(F.col("n") != F.col("s"))
+            .groupBy("n")
+            .agg((F.sum("delta") * F.lit(scale)).alias("betweenness"))
+            .where(F.col("betweenness") > 0.0)
+            .select(F.col("n").alias(out_node), "betweenness")
         )
-        deltas.append((level_delta, level_delta_ids))
-        contrib = (
-            succ.join(
-                adj.select(F.col("n").alias("v"), F.col("m").alias("w")),
-                "w",
-            )
-            .join(
-                levels[d][0].select(
-                    "s", F.col("n").alias("v"),
-                    F.col("sigma").alias("sv"),
-                ),
-                ["s", "v"],
-            )
-            .groupBy("s", F.col("v").alias("n"))
-            .agg(
-                F.sum(
-                    F.col("sv") / F.col("sw") * (F.lit(1.0) + F.col("dw"))
-                ).alias("delta")
-            )
-        )
-        level_delta, level_delta_ids = _checkpoint(contrib)
-    deltas.append((level_delta, level_delta_ids))
-
-    all_delta = None
-    for frame, _ids in deltas:
-        all_delta = frame if all_delta is None else all_delta.union(frame)
-    scale = float(n_nodes) / float(n_src)
-    result = (
-        # a pivot's own δ row never counts toward its score (Brandes:
-        # the source is excluded from its accumulation)
-        all_delta.where(F.col("n") != F.col("s"))
-        .groupBy("n")
-        .agg((F.sum("delta") * F.lit(scale)).alias("betweenness"))
-        .where(F.col("betweenness") > 0.0)
-        .select(F.col("n").alias(out_node), "betweenness")
-    )
-    out, out_ids = _checkpoint(result)
-    for _frame, ids in deltas:
-        _release(sc, ids)
-    for _frame, ids in levels:
-        _release(sc, ids)
-    _release(sc, adj_ids)
-    return out
+        return scope.keep(scope.pin(result))

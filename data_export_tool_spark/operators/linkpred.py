@@ -39,6 +39,8 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from data_export_tool_spark.operators.checkpoint import CheckpointScope
+
 __all__ = ["link_prediction", "py_link_scores"]
 
 
@@ -102,20 +104,22 @@ def link_prediction(
     additionally ranks per endpoint (see module docstring)."""
     if min_common < 1:
         raise ValueError(f"min_common must be >= 1: {min_common}")
-    from data_export_tool_spark.operators.graph import _checkpoint
-
     a, b = F.col(src), F.col(dst)
     base = edges.where(a.isNotNull() & b.isNotNull() & (a != b))
     # the edge pipeline is referenced by sym (twice), the anti-join and
     # the degree table — materialize the canonical edge set ONCE (the
-    # connected_components policy, graph.py:88) so an expensive
+    # connected_components policy) so an expensive
     # upstream (a co-occurrence groupBy, a similarity join) does not
-    # re-execute per reference; the checkpoint backs the returned plan
-    canon, _canon_ids = _checkpoint(
-        base.select(
-            F.least(a, b).alias("u"), F.greatest(a, b).alias("w")
-        ).distinct()
-    )
+    # re-execute per reference; the checkpoint backs the returned plan,
+    # so it is kept
+    with CheckpointScope() as scope:
+        canon = scope.keep(
+            scope.pin(
+                base.select(
+                    F.least(a, b).alias("u"), F.greatest(a, b).alias("w")
+                ).distinct()
+            )
+        )
     sym = canon.select(
         F.col("u").alias("n"), F.col("w").alias("m")
     ).union(canon.select(F.col("w").alias("n"), F.col("u").alias("m")))

@@ -47,6 +47,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_export_tool_spark.operators.checkpoint import CheckpointScope
+
 __all__ = ["bradley_terry", "py_bradley_terry"]
 
 _EPS = 1e-12
@@ -162,9 +164,6 @@ def bradley_terry(
     localCheckpoint-per-round lineage control. Both paths execute the
     identical update/normalization/stop arithmetic.
     """
-    from data_export_tool_spark.operators.graph import _checkpoint, _release
-
-    sc = df.sparkSession.sparkContext
     a = F.col(item_a_col).cast("string")
     b = F.col(item_b_col).cast("string")
     w = F.col(winner_col).cast("string")
@@ -175,116 +174,116 @@ def bradley_terry(
         F.greatest(a, b).alias("hi"),
         (w == F.least(a, b)).cast("long").alias("lo_won"),
     )
-    pairs, pairs_ids = _checkpoint(
-        base.groupBy("lo", "hi").agg(
-            F.count(F.lit(1)).alias("n"), F.sum("lo_won").alias("w_lo")
+    with CheckpointScope() as scope:
+        pairs = scope.pin(
+            base.groupBy("lo", "hi").agg(
+                F.count(F.lit(1)).alias("n"), F.sum("lo_won").alias("w_lo")
+            )
         )
-    )
-    n_pairs = pairs.count()
-    if n_pairs <= max_driver_pairs:
-        rows = pairs.collect()
-        _release(sc, pairs_ids)
-        if not rows:
-            raise ValueError("no usable comparisons to fit on")
-        p, wins, cmps = _np_mm(rows, iters, tol)
-        out = [
-            (it, p[it], math.log(p[it]), wins[it], cmps[it])
-            for it in sorted(p, key=lambda x: (-p[x], x))
-        ]
-        return df.sparkSession.createDataFrame(
-            out,
-            "item string, strength double, log_strength double, "
-            "wins long, comparisons long",
-        )
-    # item-grain totals: wins and comparison counts
-    totals, totals_ids = _checkpoint(
-        pairs.select(
-            F.col("lo").alias("item"),
-            F.col("w_lo").alias("wins"),
-            F.col("n").alias("cmp"),
-        )
-        .unionByName(
+        n_pairs = pairs.count()
+        if n_pairs <= max_driver_pairs:
+            rows = pairs.collect()
+            scope.drop(pairs)
+            if not rows:
+                raise ValueError("no usable comparisons to fit on")
+            p, wins, cmps = _np_mm(rows, iters, tol)
+            out = [
+                (it, p[it], math.log(p[it]), wins[it], cmps[it])
+                for it in sorted(p, key=lambda x: (-p[x], x))
+            ]
+            return df.sparkSession.createDataFrame(
+                out,
+                "item string, strength double, log_strength double, "
+                "wins long, comparisons long",
+            )
+        # item-grain totals: wins and comparison counts
+        totals = scope.pin(
             pairs.select(
-                F.col("hi").alias("item"),
-                (F.col("n") - F.col("w_lo")).alias("wins"),
+                F.col("lo").alias("item"),
+                F.col("w_lo").alias("wins"),
                 F.col("n").alias("cmp"),
             )
-        )
-        .groupBy("item")
-        .agg(F.sum("wins").alias("wins"), F.sum("cmp").alias("comparisons"))
-    )
-    strengths, s_ids = _checkpoint(
-        totals.select("item", F.lit(1.0).alias("p"))
-    )
-    for _ in range(iters):
-        plo = strengths.select(
-            F.col("item").alias("lo"), F.col("p").alias("p_lo")
-        )
-        phi = strengths.select(
-            F.col("item").alias("hi"), F.col("p").alias("p_hi")
-        )
-        contrib = (
-            pairs.join(plo, "lo")
-            .join(phi, "hi")
-            .select(
-                "lo",
-                "hi",
-                (F.col("n") / (F.col("p_lo") + F.col("p_hi"))).alias("d"),
+            .unionByName(
+                pairs.select(
+                    F.col("hi").alias("item"),
+                    (F.col("n") - F.col("w_lo")).alias("wins"),
+                    F.col("n").alias("cmp"),
+                )
             )
-        )
-        denom = (
-            contrib.select(F.col("lo").alias("item"), "d")
-            .unionByName(contrib.select(F.col("hi").alias("item"), "d"))
             .groupBy("item")
-            .agg(F.sum("d").alias("denom"))
+            .agg(F.sum("wins").alias("wins"), F.sum("cmp").alias("comparisons"))
         )
-        raw = totals.join(denom, "item", "left").select(
-            "item",
-            F.when(
-                (F.col("wins") > 0) & (F.col("denom") > 0.0),
-                F.col("wins") / F.col("denom"),
+        strengths = scope.pin(
+            totals.select("item", F.lit(1.0).alias("p"))
+        )
+        for _ in range(iters):
+            plo = strengths.select(
+                F.col("item").alias("lo"), F.col("p").alias("p_lo")
             )
-            .otherwise(F.lit(_EPS))
-            .alias("p_raw"),
-        )
-        # geometric-mean normalization over items above the floor
-        gm = raw.agg(
-            F.avg(
-                F.when(F.col("p_raw") > _EPS, F.log(F.col("p_raw")))
-            ).alias("mlog")
-        ).first()["mlog"]
-        scale = math.exp(gm) if gm is not None else 1.0
-        new_s, new_ids = _checkpoint(
-            raw.select(
+            phi = strengths.select(
+                F.col("item").alias("hi"), F.col("p").alias("p_hi")
+            )
+            contrib = (
+                pairs.join(plo, "lo")
+                .join(phi, "hi")
+                .select(
+                    "lo",
+                    "hi",
+                    (F.col("n") / (F.col("p_lo") + F.col("p_hi"))).alias("d"),
+                )
+            )
+            denom = (
+                contrib.select(F.col("lo").alias("item"), "d")
+                .unionByName(contrib.select(F.col("hi").alias("item"), "d"))
+                .groupBy("item")
+                .agg(F.sum("d").alias("denom"))
+            )
+            raw = totals.join(denom, "item", "left").select(
                 "item",
                 F.when(
-                    F.col("p_raw") > _EPS, F.col("p_raw") / F.lit(scale)
+                    (F.col("wins") > 0) & (F.col("denom") > 0.0),
+                    F.col("wins") / F.col("denom"),
                 )
                 .otherwise(F.lit(_EPS))
-                .alias("p"),
+                .alias("p_raw"),
             )
+            # geometric-mean normalization over items above the floor
+            gm = raw.agg(
+                F.avg(
+                    F.when(F.col("p_raw") > _EPS, F.log(F.col("p_raw")))
+                ).alias("mlog")
+            ).first()["mlog"]
+            scale = math.exp(gm) if gm is not None else 1.0
+            new_s = scope.pin(
+                raw.select(
+                    "item",
+                    F.when(
+                        F.col("p_raw") > _EPS, F.col("p_raw") / F.lit(scale)
+                    )
+                    .otherwise(F.lit(_EPS))
+                    .alias("p"),
+                )
+            )
+            delta = (
+                new_s.join(strengths.withColumnRenamed("p", "p_old"), "item")
+                .agg(F.max(F.abs(F.log("p") - F.log("p_old"))).alias("d"))
+                .first()["d"]
+            )
+            scope.drop(strengths)
+            strengths = new_s
+            if delta is not None and delta < tol:
+                break
+        # totals and the final strengths back the returned plan and
+        # stay checkpointed (the connected_components final-labels
+        # policy); pairs are freed on exit
+        return scope.keep(
+            totals.join(strengths, "item")
+            .select(
+                "item",
+                F.col("p").alias("strength"),
+                F.log("p").alias("log_strength"),
+                "wins",
+                "comparisons",
+            )
+            .orderBy(F.col("strength").desc(), "item")
         )
-        delta = (
-            new_s.join(strengths.withColumnRenamed("p", "p_old"), "item")
-            .agg(F.max(F.abs(F.log("p") - F.log("p_old"))).alias("d"))
-            .first()["d"]
-        )
-        _release(sc, s_ids)
-        strengths, s_ids = new_s, new_ids
-        if delta is not None and delta < tol:
-            break
-    # pairs are dead once the strengths are final; totals and the
-    # final strengths back the returned plan and stay checkpointed
-    # (the connected_components final-labels policy, graph.py:138)
-    _release(sc, pairs_ids)
-    return (
-        totals.join(strengths, "item")
-        .select(
-            "item",
-            F.col("p").alias("strength"),
-            F.log("p").alias("log_strength"),
-            "wins",
-            "comparisons",
-        )
-        .orderBy(F.col("strength").desc(), "item")
-    )

@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from data_export_tool_spark.operators.checkpoint import CheckpointScope
+
 __all__ = ["duplicate_spans", "strip_duplicate_spans"]
 
 
@@ -136,24 +138,21 @@ def duplicate_spans(
 
     EAGER: calling this runs two Spark jobs immediately (the
     occurrence-table checkpoint and the span-result checkpoint —
-    r10, the two consumers share no reusable Exchange) and pins
-    the small span result's checkpoint blocks until the returned
-    DataFrame is garbage-collected. Compose lazily upstream of
-    this call, not downstream of it.
+    r10, the two consumers share no reusable Exchange) and keeps
+    the small span result's checkpoint blocks for the rest of the
+    session (the returned DataFrame reads them). Compose lazily
+    upstream of this call, not downstream of it.
     """
     if n < 1:
         raise ValueError("window length n must be >= 1")
-    from data_export_tool_spark.operators.graph import _checkpoint, _release
-
     # occ feeds TWO consumers (the duplication groupBy and the flagged
     # join) and the tokenize + n−1 zip_with fold is the pipeline's CPU
     # bill — materialize it once (r10; measured ~1.6 s per extra
     # recompute at sf0.1, the operator is EAGER from here). The small
-    # span result is pinned before the token-grain blocks are freed.
-    sc = df.sparkSession.sparkContext
-    occ, occ_ids = _checkpoint(_window_occurrences(df, n, id_col, text_col))
-    # release on EVERY exit (ADVICE r10)
-    try:
+    # span result is pinned and kept; the token-grain blocks are freed
+    # on every exit.
+    with CheckpointScope() as scope:
+        occ = scope.pin(_window_occurrences(df, n, id_col, text_col))
         dup = (
             occ.groupBy("whash")
             .agg(
@@ -173,18 +172,17 @@ def duplicate_spans(
         # `dup` carries ONE row per whash, so the join cannot fan out — a
         # distinct here would only add a full extra exchange
         spans = _merge_spans(flagged.select("__id", "pos"), n)
-        out, out_ids = _checkpoint(
-            spans.select(
-                F.col("__id").alias(id_col),
-                "span_start",
-                "span_end",
-                (F.col("span_end") - F.col("span_start")).alias("n_tokens"),
-                "n_windows",
+        return scope.keep(
+            scope.pin(
+                spans.select(
+                    F.col("__id").alias(id_col),
+                    "span_start",
+                    "span_end",
+                    (F.col("span_end") - F.col("span_start")).alias("n_tokens"),
+                    "n_windows",
+                )
             )
         )
-    finally:
-        _release(sc, occ_ids)
-    return out
 
 
 def strip_duplicate_spans(

@@ -39,6 +39,8 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from data_export_tool_spark.operators.checkpoint import CheckpointScope
+
 __all__ = [
     "km_survival",
     "logrank_test",
@@ -326,29 +328,23 @@ def cox_ph(
     source (b122 measured ~11 full parquet scans per fit before this);
     the three validation scalars (n, events, distinct t) ride ONE
     aggregate over the checkpoint instead of three separate jobs. The
-    checkpoint is released on every exit path.
+    checkpoint lives in one ``CheckpointScope``, freed on every exit
+    path.
     """
     import numpy as np
 
-    from data_export_tool_spark.operators.graph import (
-        _checkpoint,
-        _release,
-    )
-
-    base, base_ids = _checkpoint(
-        df.where(
-            F.col(duration_col).isNotNull()
-            & F.col(event_col).isNotNull()
-            & F.col(vec_col).isNotNull()
-        ).select(
-            F.col(duration_col).cast("double").alias("t"),
-            F.col(event_col).cast("int").alias("__e"),
-            F.col(vec_col).alias("__x"),
+    with CheckpointScope() as scope:
+        base = scope.pin(
+            df.where(
+                F.col(duration_col).isNotNull()
+                & F.col(event_col).isNotNull()
+                & F.col(vec_col).isNotNull()
+            ).select(
+                F.col(duration_col).cast("double").alias("t"),
+                F.col(event_col).cast("int").alias("__e"),
+                F.col(vec_col).alias("__x"),
+            )
         )
-    )
-    sc = df.sparkSession.sparkContext
-    fit_ids: set[int] = set()
-    try:
         stats = base.agg(
             F.count(F.lit(1)).alias("n"),
             F.sum("__e").alias("ev"),
@@ -391,7 +387,7 @@ def cox_ph(
         n_grain = int(stats["ng"])
         if n_grain <= n // 4:
             weighted = True
-            fit_df, fit_ids = _checkpoint(
+            fit_df = scope.pin(
                 base.groupBy("t", "__x").agg(
                     F.count(F.lit(1)).cast("double").alias("__m"),
                     F.sum("__e").cast("double").alias("__me"),
@@ -399,7 +395,7 @@ def cox_ph(
             )
             # the subject-grain blocks are dead once the grain table
             # is materialized
-            _release(sc, base_ids)
+            scope.drop(base)
 
         beta = np.zeros(d)
         ll_prev = None
@@ -419,9 +415,6 @@ def cox_ph(
             ll_prev = ll
         # final fold at the returned β for loglik + SE information
         rows = _cox_partials(fit_df, beta.tolist(), d, weighted=weighted)
-    finally:
-        _release(sc, base_ids)
-        _release(sc, fit_ids)
     ll, _, info = py_cox_fold(rows, beta, d)
     cov = np.linalg.inv(info + ridge * np.eye(d))
     se = np.sqrt(np.clip(np.diag(cov), 0.0, None))

@@ -39,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from data_export_tool_spark.operators.graph import _checkpoint, _release
+from data_export_tool_spark.operators.checkpoint import CheckpointScope
 
 
 def resolve_threads(
@@ -61,7 +61,6 @@ def resolve_threads(
     """
     if max_rounds < 1:
         raise ValueError(f"max_rounds must be >= 1: {max_rounds}")
-    sc = msgs.sparkSession.sparkContext
     base = msgs.select(
         F.col(id_col).alias("id"), F.col(parent_col).alias("p")
     ).where(F.col(id_col).isNotNull())
@@ -80,47 +79,48 @@ def resolve_threads(
             (F.col("p").isNull() | F.col("__pp").isNull()).alias("done"),
         )
     )
-    cur, cur_ids = _checkpoint(init)
-    for _ in range(max_rounds):
-        if cur.where(~F.col("done")).limit(1).count() == 0:
-            break
-        jump = cur.select(
-            F.col("id").alias("j_id"),
-            F.col("anc").alias("j_anc"),
-            F.col("depth").alias("j_depth"),
-            F.col("done").alias("j_done"),
-        )
-        stepped = (
-            cur.join(jump, cur["anc"] == F.col("j_id"), "left")
-            .select(
-                "id",
-                F.when(F.col("done") | F.col("j_id").isNull(), F.col("anc"))
-                .otherwise(F.col("j_anc")).alias("anc"),
-                F.when(F.col("done") | F.col("j_id").isNull(), F.col("depth"))
-                .otherwise(F.col("depth") + F.col("j_depth")).alias("depth"),
-                # the jump target being done makes US done; a missing
-                # jump target cannot happen for non-done rows (their anc
-                # is a present message by the init/step invariant)
-                (F.col("done") | F.col("j_done")).alias("done"),
+    with CheckpointScope() as scope:
+        cur = scope.pin(init)
+        for _ in range(max_rounds):
+            if cur.where(~F.col("done")).limit(1).count() == 0:
+                break
+            jump = cur.select(
+                F.col("id").alias("j_id"),
+                F.col("anc").alias("j_anc"),
+                F.col("depth").alias("j_depth"),
+                F.col("done").alias("j_done"),
+            )
+            stepped = (
+                cur.join(jump, cur["anc"] == F.col("j_id"), "left")
+                .select(
+                    "id",
+                    F.when(F.col("done") | F.col("j_id").isNull(), F.col("anc"))
+                    .otherwise(F.col("j_anc")).alias("anc"),
+                    F.when(F.col("done") | F.col("j_id").isNull(), F.col("depth"))
+                    .otherwise(F.col("depth") + F.col("j_depth")).alias("depth"),
+                    # the jump target being done makes US done; a missing
+                    # jump target cannot happen for non-done rows (their
+                    # anc is a present message by the init/step invariant)
+                    (F.col("done") | F.col("j_done")).alias("done"),
+                )
+            )
+            nxt = scope.pin(stepped)
+            scope.drop(cur)
+            cur = nxt
+        # the returned frame reads the loop's last checkpoint, which
+        # outlives the scope (the connected_components policy)
+        return scope.keep(
+            cur.select(
+                F.col("id").alias(id_col),
+                F.when(F.col("done"), F.col("anc")).otherwise(F.col("id")).alias(
+                    "root_id"
+                ),
+                F.when(F.col("done"), F.col("depth")).otherwise(F.lit(None)).alias(
+                    "depth"
+                ),
+                F.col("done").alias("resolved"),
             )
         )
-        nxt, nxt_ids = _checkpoint(stepped)
-        _release(sc, cur_ids)
-        cur, cur_ids = nxt, nxt_ids
-    out = cur.select(
-        F.col("id").alias(id_col),
-        F.when(F.col("done"), F.col("anc")).otherwise(F.col("id")).alias(
-            "root_id"
-        ),
-        F.when(F.col("done"), F.col("depth")).otherwise(F.lit(None)).alias(
-            "depth"
-        ),
-        F.col("done").alias("resolved"),
-    )
-    # the caller's frame outlives the loop's last checkpoint; hand back
-    # a plain DataFrame computed FROM it (blocks release with the app —
-    # same trade connected_components makes)
-    return out
 
 
 def thread_stats(

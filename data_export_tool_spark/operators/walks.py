@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_export_tool_spark.operators.checkpoint import CheckpointScope
+
 __all__ = ["random_walks"]
 
 
@@ -156,8 +158,6 @@ def random_walks(
         e = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     e = e.distinct()
 
-    from data_export_tool_spark.operators.graph import _checkpoint, _release
-
     # neighbor rank within ascending order, + degree: computed ONCE via
     # the two-phase range rank (_indexed_adjacency — no single-key
     # sort survives a hub) and CHECKPOINT-MATERIALIZED — every step
@@ -178,69 +178,64 @@ def random_walks(
         "v",
         "left",
     ).select("u", "v", "__rank", "__vdeg")
-    # NOTE (r11): pinning hash("u") on this checkpoint (the pagerank
-    # §2.4 trick) was MEASURED SLOWER in-session (8.7 vs 8.2 s): the
-    # frontier side broadcasts at this scale, so the pin's extra pass
-    # buys no per-step exchange.
-    adj, adj_ids = _checkpoint(adj1)
-    deg, _deg_ids = _checkpoint(deg0)
+    with CheckpointScope() as scope:
+        adj = scope.pin(adj1)
+        deg = scope.pin(deg0)
 
-    starts = deg.select(F.col("u").alias("start"), "__deg")
-    frontier = (
-        starts.crossJoin(
-            F.broadcast(
-                edges.sparkSession.range(n_walks).select(
-                    F.col("id").alias("__w")
+        starts = deg.select(F.col("u").alias("start"), "__deg")
+        frontier = (
+            starts.crossJoin(
+                F.broadcast(
+                    edges.sparkSession.range(n_walks).select(
+                        F.col("id").alias("__w")
+                    )
                 )
             )
+            .select(
+                F.concat_ws("#", F.col("start").cast("string"), F.col("__w")).alias(
+                    "walk_id"
+                ),
+                "start",
+                F.col("start").alias("node"),
+                "__deg",
+            )
         )
-        .select(
-            F.concat_ws("#", F.col("start").cast("string"), F.col("__w")).alias(
-                "walk_id"
-            ),
-            "start",
-            F.col("start").alias("node"),
-            "__deg",
+        out = frontier.select(
+            "walk_id", "start", F.lit(0).alias("step"), "node"
         )
-    )
-    out = frontier.select(
-        "walk_id", "start", F.lit(0).alias("step"), "node"
-    )
-    # each step's frontier is CHECKPOINT-MATERIALIZED (the pagerank
-    # per-round pattern): without it, step s's plan re-executes joins
-    # 1..s−1, so ANY action over the returned union costs O(L²) joins
-    # — and every further action repeats all of it (measured 4
-    # assertion actions ≈ 68s at 2M; materialized steps make them
-    # scans). Storage is the walk corpus itself — the caller's output,
-    # not a working set. Every adj consumer is materialized by the
-    # loop's eager checkpoints, so the adjacency blocks are RELEASED
-    # on exit instead of leaking for the session's lifetime (deg stays
-    # — the step-0 rows still scan it; a checkpoint's blocks must
-    # outlive its consumers because cut lineage cannot recompute).
-    step_ids: set[int] = set()
-    cur = frontier
-    for s in range(1, walk_length):
-        choice = cur.select(
-            "walk_id",
-            "start",
-            F.col("node").alias("u"),
-            (_h32(F.lit(seed), F.col("walk_id"), F.col("node"), F.lit(s)) % F.col("__deg")).alias(
-                "__rank"
-            ),
-        )
-        nxt = choice.join(adj, ["u", "__rank"]).select(
-            "walk_id",
-            "start",
-            F.col("v").alias("node"),
-            F.col("__vdeg").alias("__deg"),
-        )
-        nxt, ids = _checkpoint(nxt)
-        step_ids |= ids
-        # the reached node is emitted UNCONDITIONALLY; continuation
-        # dies on a NULL __deg (sink) at the next composite-key join
-        out = out.unionByName(
-            nxt.select("walk_id", "start", F.lit(s).alias("step"), "node")
-        )
-        cur = nxt.where(F.col("__deg").isNotNull())
-    _release(edges.sparkSession.sparkContext, adj_ids)
-    return out
+        # each step's frontier is CHECKPOINT-MATERIALIZED (the pagerank
+        # per-round pattern): without it, step s's plan re-executes
+        # joins 1..s−1, so ANY action over the returned union costs
+        # O(L²) joins — and every further action repeats all of it
+        # (measured 4 assertion actions ≈ 68s at 2M; materialized steps
+        # make them scans). Storage is the walk corpus itself — the
+        # caller's output, not a working set. The returned union reads
+        # deg (the step-0 rows) and every step checkpoint, so exactly
+        # those are kept; every adj consumer is materialized by the
+        # loop's eager checkpoints, so the adjacency blocks are freed
+        # on exit instead of leaking for the session's lifetime.
+        cur = frontier
+        for s in range(1, walk_length):
+            choice = cur.select(
+                "walk_id",
+                "start",
+                F.col("node").alias("u"),
+                (_h32(F.lit(seed), F.col("walk_id"), F.col("node"), F.lit(s)) % F.col("__deg")).alias(
+                    "__rank"
+                ),
+            )
+            nxt = scope.pin(
+                choice.join(adj, ["u", "__rank"]).select(
+                    "walk_id",
+                    "start",
+                    F.col("v").alias("node"),
+                    F.col("__vdeg").alias("__deg"),
+                )
+            )
+            # the reached node is emitted UNCONDITIONALLY; continuation
+            # dies on a NULL __deg (sink) at the next composite-key join
+            out = out.unionByName(
+                nxt.select("walk_id", "start", F.lit(s).alias("step"), "node")
+            )
+            cur = nxt.where(F.col("__deg").isNotNull())
+        return scope.keep(out)

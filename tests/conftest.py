@@ -67,6 +67,34 @@ def sf_dir():
     return SF_DIR
 
 
+def stored_rdd_ids(spark) -> set[int]:
+    """Ids of the RDDs the session holds persisted (local checkpoints
+    included), also those whose blocks are empty."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def rdd_lineage_ids(df) -> set[int]:
+    """Ids of the RDDs ``df``'s plan scans, with their lineage: a
+    checkpoint rebuilt by the stats guard scans an RDD derived from
+    the stored one."""
+    todo = []
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if leaf.getClass().getName().endswith(".LogicalRDD"):
+            todo.append(leaf.rdd())
+    seen: set[int] = set()
+    while todo:
+        rdd = todo.pop()
+        if rdd.id() in seen:
+            continue
+        seen.add(rdd.id())
+        deps = rdd.dependencies().iterator()
+        while deps.hasNext():
+            todo.append(deps.next().rdd())
+    return seen
+
+
 def _current_round() -> int | None:
     """Latest round number from the driver's PROGRESS.jsonl, if any."""
     import json

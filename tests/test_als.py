@@ -11,7 +11,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import record_opcheck
+from tests.conftest import record_opcheck, stored_rdd_ids
 from data_export_tool_spark.operators.als import als_implicit_fit, als_recommend
 
 RANK, REG, ALPHA, ITERS = 4, 0.1, 10.0, 3
@@ -152,14 +152,11 @@ def test_als_releases_iteration_checkpoints(spark, small):
     """The per-iteration factor checkpoints of superseded iterations
     must be released — only the final user/item factor tables (plus
     the step frames' blocks the caller still owns) survive."""
-    from data_export_tool_spark.operators.graph import _stored_rdd_ids
-
     _, df = small
-    sc = spark.sparkContext
-    before = _stored_rdd_ids(sc)
+    before = stored_rdd_ids(spark)
     uf, itf = als_implicit_fit(df, rating_col="w", rank=2, iters=3)
     uf.count(), itf.count()
-    after = _stored_rdd_ids(sc)
+    after = stored_rdd_ids(spark)
     # 3 iterations × 2 sides would leak 6+ checkpoints; exactly the 2
     # live factor tables (+ nothing from the released interactions)
     assert len(after - before) <= 2

@@ -272,13 +272,29 @@ def test_connect_warehouse_partitions_follow_up_shards(spark):
 
     def fake_reader(s, url, table, properties, partition_column=None, **kw):
         calls[table] = partition_column
-        return spark.range(1).withColumnRenamed("id", "x")
+        return s.range(1).withColumnRenamed("id", "x")
 
-    reg.connect_warehouse(spark, reader=fake_reader)
+    # the fake one-column views go to a throwaway session: registered on
+    # the shared one, they would shadow the warehouse views of every
+    # later test
+    reg.connect_warehouse(spark.newSession(), reader=fake_reader)
     assert set(calls) == set(all_table_schemas())
     assert calls["mamba_flat_encounter_follow_up"] == "client_id"
     assert calls["mamba_flat_encounter_follow_up_1"] == "client_id"
     assert calls["mamba_dim_location"] is None
+
+
+def test_follow_up_wide_needs_encounter_id_on_every_shard(spark):
+    from data_export_tool_spark.mamba.reports import ensure_follow_up_wide
+    from data_export_tool_spark.mamba.schemas import NUM_SHARDS
+
+    session = spark.newSession()
+    names = ["mamba_flat_encounter_follow_up"] + [
+        f"mamba_flat_encounter_follow_up_{i}" for i in range(1, NUM_SHARDS)
+    ]
+    for n in names:
+        session.range(1).withColumnRenamed("id", "x").createOrReplaceTempView(n)
+    assert ensure_follow_up_wide(session) is None
 
 
 # ---- CLI: reference config end-to-end -------------------------------------

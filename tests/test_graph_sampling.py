@@ -5,7 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import record_opcheck
+from tests.conftest import record_opcheck, rdd_lineage_ids, stored_rdd_ids
 
 
 def _cc(spark, pairs, **kw):
@@ -160,26 +160,110 @@ def test_pack_token_shards_two_phase_matches_single_window(spark):
             assert got == base, (strata, nr)
 
 
-def test_connected_components_releases_superseded_checkpoints(spark):
-    # each round's label table is localCheckpoint'ed; superseded rounds
-    # must be UNPERSISTED (neither DataFrame.unpersist nor GC frees
-    # local-checkpoint blocks) or O(V) tables pile up per round
-    from data_export_tool_spark.operators.graph import (
-        _stored_rdd_ids,
-        connected_components,
+def _path_edges(spark, n=64, cols=("id_a", "id_b")):
+    # a path graph forces several pointer-jumping / peeling rounds
+    return spark.createDataFrame(
+        [(i, i + 1, 1.0) for i in range(n)], f"{cols[0]} long, {cols[1]} long, w double"
     )
 
-    sc = spark.sparkContext
-    before = _stored_rdd_ids(sc)
-    # a path graph forces several pointer-jumping rounds
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(64)], "id_a long, id_b long"
-    )
-    out = connected_components(edges)
-    assert out.select("component_id").distinct().count() == 1
-    leaked = _stored_rdd_ids(sc) - before
-    # only the FINAL labels checkpoint may remain cached
-    assert len(leaked) <= 1, leaked
+
+def _scoped_cases():
+    """Each scoped operator as (spark -> result frame, expected error):
+    the result-returning runs and the raising / early-exit paths."""
+    from data_export_tool_spark.operators import graph as G
+    from data_export_tool_spark.operators.threads import resolve_threads
+    from data_export_tool_spark.operators.walks import random_walks
+
+    def sd(s):
+        return _path_edges(s, 16, ("src", "dst"))
+
+    return {
+        "connected_components": (lambda s: G.connected_components(_path_edges(s)), None),
+        "update_components": (
+            lambda s: G.update_components(
+                s.createDataFrame([(1, 1), (2, 1), (5, 5)], "node long, component_id long"),
+                s.createDataFrame([(2, 5), (7, 8)], "id_a long, id_b long"),
+            ),
+            None,
+        ),
+        "pagerank": (lambda s: G.pagerank(sd(s), max_iter=4), None),
+        "pagerank_tol0": (lambda s: G.pagerank(sd(s), max_iter=4, tol=0.0), None),
+        "pagerank_empty": (
+            lambda s: G.pagerank(s.createDataFrame([], "src long, dst long")), None
+        ),
+        "personalized_pagerank": (
+            lambda s: G.personalized_pagerank(sd(s), [0, 3], max_iter=4), None
+        ),
+        "label_propagation": (lambda s: G.label_propagation(sd(s), max_iter=3), None),
+        "k_core": (lambda s: G.k_core(sd(s), k=1), None),
+        "bfs_distances": (lambda s: G.bfs_distances(_path_edges(s, 16), [0]), None),
+        "sssp": (lambda s: G.sssp(_path_edges(s, 16), [0], "w"), None),
+        "hits": (lambda s: G.hits(_path_edges(s, 16), n_iter=3), None),
+        "betweenness": (lambda s: G.betweenness(_path_edges(s, 12), k_sources=3), None),
+        "resolve_threads": (
+            lambda s: resolve_threads(
+                s.createDataFrame(
+                    [(1, None)] + [(i, i - 1) for i in range(2, 20)],
+                    "msg_id long, parent_id long",
+                )
+            ),
+            None,
+        ),
+        "random_walks": (
+            lambda s: random_walks(sd(s), n_walks=2, walk_length=4, num_ranges=2),
+            None,
+        ),
+        "connected_components_no_convergence": (
+            lambda s: G.connected_components(_path_edges(s), max_iter=1),
+            RuntimeError,
+        ),
+        "k_core_no_convergence": (
+            lambda s: G.k_core(sd(s), k=2, max_iter=1), RuntimeError
+        ),
+        "sssp_no_convergence": (
+            lambda s: G.sssp(_path_edges(s, 16), [0], "w", max_iter=1), ValueError
+        ),
+    }
+
+
+@pytest.mark.parametrize("case", sorted(_scoped_cases()))
+def test_scoped_operators_free_their_checkpoints(spark, case):
+    # every loop checkpoint is local: neither DataFrame.unpersist nor GC
+    # frees its blocks, so an operator that returns (or raises) without
+    # unpersisting leaves O(V)/O(E) tables in storage for the session.
+    # Only the blocks the returned frame still reads may remain.
+    run, error = _scoped_cases()[case]
+    before = stored_rdd_ids(spark)
+    if error is None:
+        out = run(spark)
+        out.collect()  # the kept blocks are the ones it reads
+        kept = rdd_lineage_ids(out)
+    else:
+        with pytest.raises(error):
+            run(spark)
+        kept = set()
+    leaked = stored_rdd_ids(spark) - before - kept
+    assert not leaked, leaked
+
+
+def test_connected_components_leaves_caller_storage_alone(spark):
+    # the caller's own storage that first materializes during the
+    # operator's checkpoints is not the operator's to free
+    from data_export_tool_spark.operators.graph import connected_components
+
+    cached = _path_edges(spark, 32).select("id_a", "id_b").cache()
+    lazy = _path_edges(spark, 32).select("id_a", "id_b").localCheckpoint(eager=False)
+    try:
+        for edges in (cached, lazy):
+            out = connected_components(edges)
+            assert out.select("component_id").distinct().count() == 1
+        cache_mgr = spark._jsparkSession.sharedState().cacheManager()
+        entry = cache_mgr.lookupCachedData(cached._jdf).get()
+        cache_rdd = entry.cachedRepresentation().cacheBuilder().cachedColumnBuffers()
+        assert cache_rdd.id() in stored_rdd_ids(spark)
+        assert lazy.count() == 32
+    finally:
+        cached.unpersist()
 
 
 # ---------------------------------------------------------------------------
