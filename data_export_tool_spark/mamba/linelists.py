@@ -277,7 +277,9 @@ def tx_curr_outcome(
             & (F.col("art_dose_end") >= cutoff)
         )
 
-    latest_rn1 = cohort_at(end).cache()
+    # not cached: a cache outlives the export, and exchange reuse
+    # already serves this plan's repeated reads of the cohort
+    latest_rn1 = cohort_at(end)
     latest = on_treatment(latest_rn1, end)
     latest_pedi = latest.filter(F.col("age") < 15)
     latest_2 = latest_rn1.filter(F.col("art_start_date") <= end)

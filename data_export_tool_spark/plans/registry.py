@@ -8,18 +8,24 @@ checksum. The config shape is compatible with the reference's
 additionally accepts registered DataFrame builders).
 
 Execution is Catalyst end-to-end: SQL text goes through the dialect
-shim into ``spark.sql``; DataFrame-built queries skip the shim.
+shim into ``spark.sql``; DataFrame-built queries skip the shim. The
+reports of one export run concurrently on the caller's session (one
+driver thread each, up to the context's default parallelism); their
+results come back, and are zipped, in insertion order.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import logging
 import os
 from collections.abc import Callable, Sequence
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
 
 from data_export_tool_spark.plans.dialect import shim_mysql_to_spark
 from data_export_tool_spark.plans.report_window import ReportWindow, resolve_report_window
@@ -58,8 +64,9 @@ QueryBuilder = Callable[[SparkSession, ReportWindow], DataFrame]
 
 @dataclass
 class ReportRegistry:
-    """name → SQL text or DataFrame builder, run in insertion order
-    (the reference runs queries in dict order of ``queries_path``,
+    """name → SQL text or DataFrame builder. ``run_export`` runs them
+    concurrently and returns them in insertion order (the reference
+    runs queries one by one in dict order of ``queries_path``,
     export.py:96,281)."""
 
     sql_queries: dict[str, str] = field(default_factory=dict)
@@ -133,72 +140,92 @@ def run_export(
 ) -> dict[str, str | None]:
     """Run every registered report for the Ethiopian month/year window.
 
-    When ``facility`` is None it is looked up from the warehouse's
-    location tables, exactly as the reference does before its first
-    query (export.py:257-279) — S4's two lookup joins via
-    ``mamba.facility.lookup_facility_identity``.
+    Two phases on the caller's session, both through one thread pool
+    of ``min(reports, defaultParallelism)`` workers:
+
+    1. When ``facility`` is None it is looked up from the warehouse's
+       location tables (export.py:257-279; S4's two lookup joins via
+       ``mamba.facility.lookup_facility_identity``) in the pool, while
+       this thread builds and materializes the cached FollowUp wide
+       view.
+    2. Every report runs as one pool task: build it, then write its
+       CSV. The reference runs its queries one after another
+       (export.py:281-311); here they are independent Spark jobs on one
+       SparkContext, so they run at the same time. Each task's jobs
+       carry the report name as their job group.
 
     SQL-text reports go through the FULL MySQL→Spark shim
     (``shim_mysql_to_spark`` + per-report ``QUERY_PATCHES``: Ethiopian
     calendar inlining, truthiness CASE rewrites, structural patches) —
     the same path the parity suite value-checks — with ANSI mode off
-    for MySQL's lenient casts. The prior ANSI setting is restored on
+    for MySQL's lenient casts. A builder registered under a SQL
+    report's name replaces it. The prior ANSI setting is restored on
     exit; that's safe here because every result is fully materialized
     to CSV inside this function, unlike the lazy
     ``run_reference_report`` path.
 
-    Returns name → written CSV path (None where the result was empty —
-    skipped, matching export.py:307-308). When ``zip_name`` is given
-    the CSVs are packaged into ``{zip_name}_packaged18.zip`` and, per
-    the reference's post-zip cleanup (export.py:317-326), the source
-    CSVs are deleted unless ``cleanup_csvs=False``.
+    Returns name → written CSV path in registry order (None where the
+    result was empty — skipped, matching export.py:307-308 — or the
+    report raised: it is logged and the others still export, like
+    export.py:287-293). When ``zip_name`` is given the CSVs are
+    packaged into ``{zip_name}_packaged18.zip`` and, per the
+    reference's post-zip cleanup (export.py:317-326), the source CSVs
+    are deleted unless ``cleanup_csvs=False``. No pool thread outlives
+    the call.
     """
-    from data_export_tool_spark.mamba.reports import (
-        QUERY_PATCHES,
-        ensure_follow_up_wide,
-        rewrite_follow_up_assembly,
-    )
-
-    if facility is None:
-        from data_export_tool_spark.mamba.facility import lookup_facility_identity
-
-        facility = lookup_facility_identity(spark)
+    from data_export_tool_spark.mamba.reports import ensure_follow_up_wide
 
     window = resolve_report_window(eth_month, eth_year)
     label = month_label or str(eth_month)
-    written: dict[str, str | None] = {}
+    # more threads than cores only adds driver contention: 12 threads
+    # on 4 cores exported slower than 4
+    workers = min(len(set(registry.names())), spark.sparkContext.defaultParallelism)
+    pool = ThreadPoolExecutor(max(workers, 1), thread_name_prefix="run_export")
+
+    def submit(fn, *args):
+        # each task starts from its own copy of the caller's local
+        # properties: tasks sharing one copy would share a job group
+        return pool.submit(inheritable_thread_target(spark)(fn), *args)
 
     prior_ansi = spark.conf.get("spark.sql.ansi.enabled", None)
     spark.conf.set("spark.sql.ansi.enabled", "false")
-    # one cached FollowUp wide view serves every report's CTE
-    # references (J10 — the shard assembly runs once per export, not
-    # per CTE alias per report; the 100k-patient e2e run's heap is
-    # bounded by ONE InMemoryRelation instead of ~130 broadcast maps)
-    wide = ensure_follow_up_wide(spark)
+    wide = None
     try:
-        for name, sql in registry.sql_queries.items():
-            # per-query isolation like the reference (export.py:287-293):
-            # one broken report logs and is skipped; the other reports
-            # still export and the zip is still produced
-            try:
-                if wide is not None:
-                    sql = rewrite_follow_up_assembly(sql)
-                shimmed = shim_mysql_to_spark(
-                    sql, window.as_params(), QUERY_PATCHES.get(name)
-                )
-                df = spark.sql(shimmed)
-                written[name] = _sink(df, out_dir, name, facility, label, eth_year)
-            except Exception:
-                logging.exception("Error executing query %r — skipping", name)
-                written[name] = None
-        for name, builder in registry.df_queries.items():
-            try:
-                df = builder(spark, window)
-                written[name] = _sink(df, out_dir, name, facility, label, eth_year)
-            except Exception:
-                logging.exception("Error executing query %r — skipping", name)
-                written[name] = None
+        if facility is None:
+            from data_export_tool_spark.mamba.facility import lookup_facility_identity
+
+            looked_up = submit(lookup_facility_identity, spark)
+        # one cached FollowUp wide view serves every report's CTE
+        # references (J10 — the shard assembly runs once per export, not
+        # per CTE alias per report; the 100k-patient e2e run's heap is
+        # bounded by ONE InMemoryRelation instead of ~130 broadcast maps).
+        # Built here, before any report reads it, so concurrent reports
+        # scan the one cache instead of racing to fill it.
+        wide = ensure_follow_up_wide(spark)
+        if wide is not None:
+            wide.count()
+        if facility is None:
+            facility = looked_up.result()
+
+        builders: dict[str, Callable[[], DataFrame]] = {
+            name: functools.partial(
+                _build_sql, spark, name, sql, window, wide is not None
+            )
+            for name, sql in registry.sql_queries.items()
+        }
+        builders.update(
+            (name, functools.partial(builder, spark, window))
+            for name, builder in registry.df_queries.items()
+        )
+        futures = {
+            name: submit(
+                _export_report, spark, name, build, out_dir, facility, label, eth_year
+            )
+            for name, build in builders.items()
+        }
+        written = {name: f.result() for name, f in futures.items()}
     finally:
+        pool.shutdown(cancel_futures=True)
         if wide is not None:
             wide.unpersist()
         if prior_ansi is not None:
@@ -209,6 +236,51 @@ def run_export(
     if zip_name:
         zip_files_with_checksum(out_dir, zip_name, cleanup_csvs=cleanup_csvs)
     return written
+
+
+def _build_sql(
+    spark: SparkSession,
+    name: str,
+    sql: str,
+    window: ReportWindow,
+    wide: bool,
+) -> DataFrame:
+    """A SQL-text report through the shim; ``wide`` points its
+    FollowUp assembly at the cached wide view."""
+    from data_export_tool_spark.mamba.reports import (
+        QUERY_PATCHES,
+        rewrite_follow_up_assembly,
+    )
+
+    if wide:
+        sql = rewrite_follow_up_assembly(sql)
+    return spark.sql(
+        shim_mysql_to_spark(sql, window.as_params(), QUERY_PATCHES.get(name))
+    )
+
+
+def _export_report(
+    spark: SparkSession,
+    name: str,
+    build: Callable[[], DataFrame],
+    out_dir: str,
+    facility: FacilityIdentity,
+    month_label: str,
+    year: int,
+) -> str | None:
+    """One pool task: build the report and write its CSV under the
+    job group ``name``. Per-query isolation like the reference
+    (export.py:287-293): a broken report logs and maps to None."""
+    sc = spark.sparkContext
+    sc.setJobGroup(name, f"export report {name}")
+    try:
+        return _sink(build(), out_dir, name, facility, month_label, year)
+    except Exception:
+        logging.exception("Error executing query %r — skipping", name)
+        return None
+    finally:
+        # pool threads are reused by later reports
+        sc._jsc.clearJobGroup()
 
 
 def _sink(

@@ -30,23 +30,26 @@ def sha256_of(path: str, chunk: int = 4096) -> str:
 def zip_files_with_checksum(
     folder_path: str, zip_name: str, cleanup_csvs: bool = False
 ) -> str:
-    """Package every CSV under ``folder_path``; returns the final
-    ``*_packaged18.zip`` path. ``cleanup_csvs=True`` also removes the
-    source CSVs afterwards (the reference deletes them,
-    export.py:317-326)."""
+    """Package every CSV under ``folder_path`` in sorted name order;
+    returns the final ``*_packaged18.zip`` path. ``cleanup_csvs=True``
+    also removes the source CSVs afterwards (the reference deletes
+    them, export.py:317-326)."""
     csv_archive_path = os.path.join(folder_path, f"{zip_name}.zip")
     checksum_path = os.path.join(folder_path, f"{zip_name}_checksum.txt")
     final_zip_path = os.path.join(folder_path, f"{zip_name}_packaged18.zip")
 
-    csv_files = []
+    # sorted, so the member order depends neither on the filesystem's
+    # listing order nor on which report finished first
+    csv_files = sorted(
+        os.path.join(root_dir, fname)
+        for root_dir, _, files in os.walk(folder_path)
+        for fname in files
+        if fname.endswith(".csv")
+    )
     try:
         with zipfile.ZipFile(csv_archive_path, "w", zipfile.ZIP_DEFLATED) as zf:
-            for root_dir, _, files in os.walk(folder_path):
-                for fname in files:
-                    if fname.endswith(".csv"):
-                        fpath = os.path.join(root_dir, fname)
-                        csv_files.append(fpath)
-                        zf.write(fpath, arcname=os.path.relpath(fpath, folder_path))
+            for fpath in csv_files:
+                zf.write(fpath, arcname=os.path.relpath(fpath, folder_path))
 
         with open(checksum_path, "w") as f:
             f.write(sha256_of(csv_archive_path))

@@ -1,0 +1,231 @@
+"""run_export's concurrent runner: per-report isolation, registry
+order, job groups, no leaked threads, cache or conf, and CSVs equal to
+each native builder's output written alone."""
+
+from __future__ import annotations
+
+import hashlib
+import inspect
+import logging
+import os
+import sys
+import threading
+import zipfile
+
+import pytest
+from conftest import stored_rdd_ids
+
+from data_export_tool_spark.mamba import linelists as LL
+from data_export_tool_spark.mamba.reports import FOLLOW_UP_WIDE_VIEW
+from data_export_tool_spark.mamba.schemas import NUM_SHARDS, all_table_schemas
+from data_export_tool_spark.plans.registry import (
+    FacilityIdentity,
+    ReportRegistry,
+    run_export,
+)
+from data_export_tool_spark.plans.report_window import resolve_report_window
+from data_export_tool_spark.sources.csv_sink import (
+    with_facility_columns,
+    write_query_csv,
+)
+
+FACILITY = FacilityIdentity("Oromia", "Adama", "AdamaGen", "H1")
+
+#: export name -> native builder, in the reference's export order
+NATIVE = {
+    "Tx_Curr_LineList": LL.tx_curr_linelist,
+    "Tx_Curr_VLTestReceived_LineList": LL.tx_curr_vl_received_linelist,
+    "Tx_Curr_AHD_LineList": LL.tx_curr_ahd_linelist,
+    "Tx_Curr_HVL_LineList": LL.tx_curr_hvl_linelist,
+    "Tx_Curr_VLEligibleNew_LineList": LL.tx_curr_vl_eligible_new_linelist,
+    "Tx_Curr_TPT_LineList": LL.tx_curr_tpt_linelist,
+    "Tx_Curr_OutComeList": LL.tx_curr_outcome,
+    "Tx_Curr_CCANew_LineList": LL.tx_curr_cca_new_linelist,
+    "Tx_Curr_CCA_LineList": LL.tx_curr_cca_linelist,
+    "Tx_Curr_VLEligible_LineList": LL.tx_curr_vl_eligible_linelist,
+    "PMTCT_Maternal_LineList": LL.pmtct_maternal_linelist,
+    "PMTCT_HEI_LineList": LL.pmtct_hei_linelist,
+}
+
+
+def cached_plan_count(spark) -> int:
+    return spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
+
+
+def _with_fake_shards(session):
+    """Register one-row follow-up shard views that share only
+    ``encounter_id``, so ``run_export`` builds and caches a wide view."""
+    session.range(1).selectExpr(
+        "id AS encounter_id", "id AS client_id"
+    ).createOrReplaceTempView("mamba_flat_encounter_follow_up")
+    for i in range(1, NUM_SHARDS):
+        session.range(1).selectExpr(
+            "id AS encounter_id", f"id AS c{i}"
+        ).createOrReplaceTempView(f"mamba_flat_encounter_follow_up_{i}")
+
+
+def test_failing_reports_are_isolated_and_leave_nothing_behind(spark, tmp_path, caplog):
+    session = spark.newSession()
+    _with_fake_shards(session)
+    session.conf.set("spark.sql.ansi.enabled", "true")
+    session.createDataFrame(
+        [(1, "a"), (2, "b")], "id long, v string"
+    ).createOrReplaceTempView("src")
+
+    def boom(s, window):
+        raise RuntimeError("builder failed")
+
+    reg = ReportRegistry()
+    reg.register_sql("GoodSql", "SELECT id, v FROM src")
+    reg.register_sql("BadSql", "SELECT id FROM no_such_table")
+    reg.register_sql("EmptySql", "SELECT id FROM src WHERE id > 99")
+    reg.register_builder("GoodBuilder", lambda s, window: s.table("src").select("v"))
+    reg.register_builder("BadBuilder", boom)
+    threads = set(threading.enumerate())
+    cached = cached_plan_count(spark)
+
+    with caplog.at_level(logging.ERROR):
+        written = run_export(
+            session, reg, FACILITY, "Sene", 2015, str(tmp_path),
+            zip_name="exp", month_label="Sene", cleanup_csvs=False,
+        )
+
+    assert list(written) == reg.names()
+    assert written["BadSql"] is None and written["BadBuilder"] is None
+    assert written["EmptySql"] is None
+    assert os.path.exists(written["GoodSql"]) and os.path.exists(written["GoodBuilder"])
+    failed = {
+        r.args[0] for r in caplog.records
+        if r.msg.startswith("Error executing query")
+    }
+    assert failed == {"BadSql", "BadBuilder"}
+    with zipfile.ZipFile(tmp_path / "exp_packaged18.zip") as outer:
+        with zipfile.ZipFile(outer.open("exp.zip")) as inner:
+            assert inner.namelist() == sorted(
+                os.path.basename(written[n]) for n in ("GoodSql", "GoodBuilder")
+            )
+    assert set(threading.enumerate()) - threads == set()
+    assert not session.catalog.isCached(FOLLOW_UP_WIDE_VIEW)
+    assert cached_plan_count(spark) == cached
+    assert session.conf.get("spark.sql.ansi.enabled") == "true"
+
+
+def test_aborted_export_leaves_no_thread_behind(spark, tmp_path):
+    # no location views: the pooled facility lookup raises, and the
+    # pending exception keeps run_export's frame (and pool) alive
+    from pyspark.errors import AnalysisException
+
+    session = spark.newSession()
+    reg = ReportRegistry()
+    reg.register_sql("R", "SELECT 1 AS x")
+    threads = set(threading.enumerate())
+    ansi = session.conf.get("spark.sql.ansi.enabled")
+    with pytest.raises(AnalysisException):
+        run_export(session, reg, None, "Sene", 2015, str(tmp_path))
+    assert set(threading.enumerate()) - threads == set()
+    assert session.conf.get("spark.sql.ansi.enabled") == ansi
+
+
+def test_each_report_runs_under_its_own_job_group(spark, tmp_path):
+    """More reports than pool threads, with frequent thread switches:
+    every report's jobs carry its own group, even on a reused thread."""
+    session = spark.newSession()
+    session.range(64).createOrReplaceTempView("nums")
+    reg = ReportRegistry()
+    for k in range(8):
+        reg.register_sql(f"JobGroup{k}", f"SELECT id FROM nums WHERE id % 8 = {k}")
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        written = run_export(
+            session, reg, FACILITY, "Sene", 2015, str(tmp_path),
+            month_label="Sene", cleanup_csvs=False,
+        )
+    finally:
+        sys.setswitchinterval(interval)
+
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = spark.sparkContext.statusTracker()
+    groups = [set(tracker.getJobIdsForGroup(name)) for name in reg.names()]
+    assert all(groups)
+    assert sum(map(len, groups)) == len(set().union(*groups))
+    for k, name in enumerate(reg.names()):
+        with open(written[name]) as f:
+            ids = [int(line.split(",")[0]) for line in f.read().splitlines()[1:]]
+        assert sorted(ids) == list(range(k, 64, 8)), name
+    # the caller's thread keeps no report's group
+    assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None
+
+
+def _native_adapter(builder, tables):
+    takes_wide = "follow_up" in inspect.signature(builder).parameters
+
+    def build(spark, window):
+        frames = {t: spark.table(t) for t in tables}
+        extra = {"follow_up": spark.table(FOLLOW_UP_WIDE_VIEW)} if takes_wide else {}
+        return builder(frames, window.start, window.end, **extra)
+
+    return build
+
+
+def _csv_digest(path: str | None) -> str | None:
+    if path is None:
+        return None
+    with open(path) as f:
+        header, *rows = f.read().splitlines()
+    return hashlib.sha256("\n".join([header, *sorted(rows)]).encode()).hexdigest()
+
+
+@pytest.fixture(scope="module")
+def native_export(spark, tmp_path_factory):
+    """One run_export of the 12 native line-lists over a seeded fixture
+    warehouse on its own session, with the storage it found and left."""
+    from data_export_tool_spark.mamba.fixture_store import ensure_fixture_parquet
+
+    paths = ensure_fixture_parquet(seed=7, n_patients=60)
+    session = spark.newSession()
+    schemas = all_table_schemas()
+    for name, path in paths.items():
+        session.read.schema(schemas[name]).parquet(path).createOrReplaceTempView(name)
+    reg = ReportRegistry()
+    for name, builder in NATIVE.items():
+        reg.register_builder(name, _native_adapter(builder, list(paths)))
+    before = stored_rdd_ids(spark), cached_plan_count(spark)
+    out = tmp_path_factory.mktemp("native_export")
+    written = run_export(
+        session, reg, FACILITY, "Nehassie", 2015, str(out), month_label="Nehassie"
+    )
+    after = stored_rdd_ids(spark), cached_plan_count(spark)
+    return session, paths, written, before, after
+
+
+def test_native_export_leaves_storage_as_found(native_export):
+    _, _, _, before, after = native_export
+    assert after == before
+
+
+def test_native_export_matches_each_builder_written_alone(native_export, tmp_path):
+    from data_export_tool_spark.mamba.follow_up import assemble_follow_up
+
+    session, paths, written, _, _ = native_export
+    frames = {t: session.table(t) for t in paths}
+    window = resolve_report_window("Nehassie", 2015)
+    assert list(written) == list(NATIVE)
+    assert all(written.values()), "every line-list should have rows at this fixture"
+    wide = assemble_follow_up(frames)
+    try:
+        for name, builder in NATIVE.items():
+            takes_wide = "follow_up" in inspect.signature(builder).parameters
+            extra = {"follow_up": wide} if takes_wide else {}
+            df = with_facility_columns(
+                builder(frames, window.start, window.end, **extra),
+                FACILITY.region, FACILITY.woreda, FACILITY.facility,
+                FACILITY.hmis_sanitized,
+            )
+            alone = write_query_csv(
+                df, str(tmp_path), name, FACILITY.facility_sanitized,
+                FACILITY.hmis_sanitized, "Nehassie", 2015,
+            )
+            assert _csv_digest(written[name]) == _csv_digest(alone), name
+    finally:
+        wide.unpersist()

@@ -92,6 +92,17 @@ def test_zip_checksum_structure(tmp_path):
     assert not (tmp_path / "run1_checksum.txt").exists()
 
 
+def test_zip_members_in_sorted_name_order(tmp_path):
+    # concurrent reports finish in any order; the archive must not care
+    names = [f"{c}_report.csv" for c in "abcdefghijklmnop"]
+    for name in reversed(names):
+        (tmp_path / name).write_text("x\n1\n")
+    final = zip_files_with_checksum(str(tmp_path), "run2")
+    with zipfile.ZipFile(final) as zf:
+        with zipfile.ZipFile(zf.open("run2.zip")) as inner_zf:
+            assert inner_zf.namelist() == names
+
+
 # ---- facility-identity lookup (S4; export.py:123-141,257-279) -------------
 
 
