@@ -3,11 +3,11 @@
 Each function reproduces one query from
 /root/reference/sql_queries/*.sql — semantics, column names, and
 documented quirks — re-expressed Spark-first (window dedup operators,
-size-gated broadcast dim joins, pure-column Ethiopian dates —
-``maybe_broadcast`` hints only frames whose Catalyst size estimate
-clears the session threshold, so a 10M-patient dim_client degrades to
-a shuffle join instead of OOMing the build side). Citations point at
-the reference lines being mirrored; no SQL text is copied.
+pure-column Ethiopian dates). Join strategies carry no hints: Catalyst
+and AQE choose them under the session's broadcast threshold, so a
+10M-patient dim_client becomes a shuffle join instead of OOMing the
+build side. Citations point at the reference lines being mirrored; no
+SQL text is copied.
 
 Dialect/collation policy (SURVEY.md §4.7): string comparisons are
 **case-sensitive** (Spark/ANSI semantics). MySQL's default collation
@@ -39,7 +39,6 @@ from data_export_tool_spark.functions.datetime_ext import (
 from data_export_tool_spark.functions.ethiopian import eth_date_str
 from data_export_tool_spark.mamba.follow_up import assemble_follow_up
 from data_export_tool_spark.mamba.schemas import HEI_IMMUNIZATION_FLAGS
-from data_export_tool_spark.operators.joins import maybe_broadcast
 from data_export_tool_spark.operators.pivot import conditional_agg
 from data_export_tool_spark.operators.window_dedup import (
     earliest_per_key,
@@ -111,7 +110,7 @@ def tx_curr_linelist(
     ).select(
         F.col("client_id").alias("PatientId"), "inh_start_date", "inh_date_completed"
     )
-    fu = fu.join(maybe_broadcast(intake), on="PatientId", how="left")
+    fu = fu.join(intake, on="PatientId", how="left")
 
     # tx_curr_all (:58-68): latest eligible visit per patient
     eligible = fu.filter(
@@ -140,11 +139,7 @@ def tx_curr_linelist(
     client = tables["mamba_dim_client"]
     joined = (
         fu.join(tx_curr.drop("PatientId"), on="encounter_id", how="inner")
-        .join(
-            maybe_broadcast(client),
-            fu["PatientId"] == client["client_id"],
-            "left",
-        )
+        .join(client, fu["PatientId"] == client["client_id"], "left")
     )
 
     age = complete_years_between(F.col("date_of_birth"), end)
@@ -244,7 +239,7 @@ def tx_curr_outcome(
     fu_wide = follow_up if follow_up is not None else assemble_follow_up(tables)
     client = tables["mamba_dim_client"]
     fu = fu_wide.join(
-        maybe_broadcast(client.select("client_id", "date_of_birth")), "client_id", "inner"
+        client.select("client_id", "date_of_birth"), "client_id", "inner"
     ).select(
         "encounter_id",
         "client_id",
@@ -317,7 +312,7 @@ def tx_curr_outcome(
             latest_cohort.join(
                 previous.select("client_id"), "client_id", "left_anti"
             )
-            .join(maybe_broadcast(ti_clients), "client_id", "left")
+            .join(ti_clients, "client_id", "left")
             .select(
                 status_code.alias("status_code"),
                 F.when(
@@ -502,7 +497,7 @@ def tx_curr_vl_received_linelist(
     out = (
         fu.join(latest, fu["encounter_id"] == latest["lf_encounter_id"], "inner")
         .join(vlperf, fu["client_id"] == vlperf["vp_client_id"], "left")
-        .join(maybe_broadcast(client), "client_id", "left")
+        .join(client, "client_id", "left")
     )
     return (
         out.filter(
@@ -670,7 +665,7 @@ def tx_curr_cca_linelist(
 
     client = tables["mamba_dim_client"]
     return (
-        lfa.join(maybe_broadcast(client), "client_id", "inner")
+        lfa.join(client, "client_id", "inner")
         .join(cca, lfa["client_id"] == cca["cca_client_id"], "left")
         .filter(
             ((F.col("art_start_date") <= end) | F.col("art_start_date").isNull())
@@ -829,7 +824,7 @@ def tx_curr_tpt_linelist(
     client = tables["mamba_dim_client"]
     cohort = (
         fu.join(latest_visit, fu["encounter_id"] == latest_visit["lf_encounter_id"], "inner")
-        .join(maybe_broadcast(client), "client_id", "left")
+        .join(client, "client_id", "left")
         .filter(
             (F.col("art_end_date") >= end)
             & F.col("follow_up_status").isin("Alive", "Restart medication")
@@ -1104,7 +1099,7 @@ def pmtct_maternal_linelist(
 
     client = tables["mamba_dim_client"]
     return (
-        ew.join(maybe_broadcast(client), "client_id", "left")
+        ew.join(client, "client_id", "left")
         .join(visit, ew["enrollment_id"] == visit["v_eid"], "left")
         .join(vl_s, ew["enrollment_id"] == vl_s["s_eid"], "left")
         .join(vl_r, ew["enrollment_id"] == vl_r["r_eid"], "left")
@@ -1296,9 +1291,9 @@ def pmtct_hei_linelist(
             "client_id",
             "left",
         )
-        .join(maybe_broadcast(imm), "client_id", "left")
-        .join(maybe_broadcast(cpt_start), "client_id", "left")
-        .join(maybe_broadcast(cpt_stop), "client_id", "left")
+        .join(imm, "client_id", "left")
+        .join(cpt_start, "client_id", "left")
+        .join(cpt_stop, "client_id", "left")
         .join(
             fo.select(
                 "client_id", "hei_pmtct_final_outcome",
@@ -1308,7 +1303,7 @@ def pmtct_hei_linelist(
             "client_id",
             "left",
         )
-        .join(maybe_broadcast(future), "client_id", "left")
+        .join(future, "client_id", "left")
     )
 
     conclusion = (
@@ -1716,9 +1711,9 @@ def tx_curr_hvl_linelist(
     client = tables["mamba_dim_client"]
     h = (
         fu.join(latest_fu, on="encounter_id", how="inner")
-        .join(maybe_broadcast(latest_regimen), on="client_id", how="left")
+        .join(latest_regimen, on="client_id", how="left")
         .join(
-            maybe_broadcast(client.select("client_id", "patient_uuid", "date_of_birth", "sex")),
+            client.select("client_id", "patient_uuid", "date_of_birth", "sex"),
             on="client_id",
             how="left",
         )
@@ -1727,7 +1722,7 @@ def tx_curr_hvl_linelist(
         .join(eac1, on="client_id", how="left")
         .join(eac2, on="client_id", how="left")
         .join(eac3, on="client_id", how="left")
-        .join(maybe_broadcast(switch_date), on="client_id", how="left")
+        .join(switch_date, on="client_id", how="left")
     )
 
     art_dose = F.coalesce(F.col("latest_regimen"), F.col("regimen"))
@@ -2054,37 +2049,35 @@ def tx_curr_ahd_linelist(
         fu.join(latest_fu, on="encounter_id", how="inner")
         .join(tx_curr, on="PatientId", how="inner")
         .join(
-            maybe_broadcast(
-                client.select(
-                    F.col("client_id").alias("PatientId"),
-                    "patient_uuid",
-                    "date_of_birth",
-                    "sex",
-                )
+            client.select(
+                F.col("client_id").alias("PatientId"),
+                "patient_uuid",
+                "date_of_birth",
+                "sex",
             ),
             on="PatientId",
             how="left",
         )
         .join(vlperf, on="PatientId", how="left")
-        .join(maybe_broadcast(visitect), on="PatientId", how="left")
+        .join(visitect, on="PatientId", how="left")
         .join(vl_sent, on="PatientId", how="left")
-        .join(maybe_broadcast(tpt_start), on="PatientId", how="left")
-        .join(maybe_broadcast(tpt_completed), on="PatientId", how="left")
-        .join(maybe_broadcast(tpt_type), on="PatientId", how="left")
-        .join(maybe_broadcast(tpt_dose_alt), on="PatientId", how="left")
-        .join(maybe_broadcast(tpt_dose_inh), on="PatientId", how="left")
-        .join(maybe_broadcast(tpt_side_effect), on="PatientId", how="left")
-        .join(maybe_broadcast(tpt_screened), on="PatientId", how="left")
-        .join(maybe_broadcast(tpt_screening), on="PatientId", how="left")
-        .join(maybe_broadcast(tpt_adherence), on="PatientId", how="left")
-        .join(maybe_broadcast(tb_diag_result), on="PatientId", how="left")
-        .join(maybe_broadcast(tb_diag_test), on="PatientId", how="left")
-        .join(maybe_broadcast(tb_lf_lam), on="PatientId", how="left")
-        .join(maybe_broadcast(tb_gene_xpert), on="PatientId", how="left")
-        .join(maybe_broadcast(tb_rx_started), on="PatientId", how="left")
-        .join(maybe_broadcast(tb_rx_completed), on="PatientId", how="left")
-        .join(maybe_broadcast(tb_rx_discontinued), on="PatientId", how="left")
-        .join(maybe_broadcast(cca_screened), on="PatientId", how="left")
+        .join(tpt_start, on="PatientId", how="left")
+        .join(tpt_completed, on="PatientId", how="left")
+        .join(tpt_type, on="PatientId", how="left")
+        .join(tpt_dose_alt, on="PatientId", how="left")
+        .join(tpt_dose_inh, on="PatientId", how="left")
+        .join(tpt_side_effect, on="PatientId", how="left")
+        .join(tpt_screened, on="PatientId", how="left")
+        .join(tpt_screening, on="PatientId", how="left")
+        .join(tpt_adherence, on="PatientId", how="left")
+        .join(tb_diag_result, on="PatientId", how="left")
+        .join(tb_diag_test, on="PatientId", how="left")
+        .join(tb_lf_lam, on="PatientId", how="left")
+        .join(tb_gene_xpert, on="PatientId", how="left")
+        .join(tb_rx_started, on="PatientId", how="left")
+        .join(tb_rx_completed, on="PatientId", how="left")
+        .join(tb_rx_discontinued, on="PatientId", how="left")
+        .join(cca_screened, on="PatientId", how="left")
         .filter(F.col("follow_up_status") != "Dead")
     )
 
@@ -2312,12 +2305,10 @@ def tx_curr_vl_eligible_linelist(
     h = (
         fu.join(latest_fu, on="encounter_id", how="inner")
         .join(vlperf, on="client_id", how="left")
-        .join(maybe_broadcast(vl_sent), on="client_id", how="left")
-        .join(maybe_broadcast(switch), on="client_id", how="left")
+        .join(vl_sent, on="client_id", how="left")
+        .join(switch, on="client_id", how="left")
         .join(
-            maybe_broadcast(
-                client.select("client_id", "patient_uuid", "date_of_birth", "sex")
-            ),
+            client.select("client_id", "patient_uuid", "date_of_birth", "sex"),
             on="client_id",
             how="inner",
         )
@@ -2633,24 +2624,22 @@ def tx_curr_vl_eligible_new_linelist(
     h = (
         fu.join(latest_ar, on="encounter_id", how="inner")
         .join(
-            maybe_broadcast(
-                client.select(
-                    "client_id",
-                    "patient_uuid",
-                    "patient_name",
-                    "mobile_no",
-                    "mrn",
-                    "sex",
-                    "current_age",
-                    "date_of_birth",
-                )
+            client.select(
+                "client_id",
+                "patient_uuid",
+                "patient_name",
+                "mobile_no",
+                "mrn",
+                "sex",
+                "current_age",
+                "date_of_birth",
             ),
             on="client_id",
             how="left",
         )
         .join(vlperf, on="client_id", how="left")
-        .join(maybe_broadcast(vl_sent), on="client_id", how="left")
-        .join(maybe_broadcast(switch), on="client_id", how="left")
+        .join(vl_sent, on="client_id", how="left")
+        .join(switch, on="client_id", how="left")
         .join(all_art, on="client_id", how="left")
         .filter(
             F.col("aa_follow_up_status").isin("Alive", "Restart Medication")
@@ -3084,11 +3073,7 @@ def tx_curr_cca_new_linelist(
     h = (
         fu.join(tx, on="encounter_id", how="inner")
         .join(
-            maybe_broadcast(
-                client.select(
-                    "client_id", "patient_uuid", "mrn", "sex", "date_of_birth"
-                )
-            ),
+            client.select("client_id", "patient_uuid", "mrn", "sex", "date_of_birth"),
             on="client_id",
             how="left",
         )

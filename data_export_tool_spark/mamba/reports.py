@@ -18,6 +18,7 @@ from __future__ import annotations
 import os
 import re
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 from data_export_tool_spark.plans.dialect import shim_mysql_to_spark
@@ -102,15 +103,17 @@ def rewrite_follow_up_assembly(
 def ensure_follow_up_wide(session: SparkSession) -> DataFrame | None:
     """Assemble, cache, and register the FollowUp wide view on
     ``session`` from its registered shard views. Returns the cached
-    DataFrame (callers may ``unpersist()`` it after their run) or None
-    when the session doesn't expose the full shard set, or a shard
-    view lacks the ``encounter_id`` join key — the caller then leaves
-    report SQL unrewritten.
+    DataFrame or None when the session doesn't expose the full shard
+    set, or a shard view lacks the ``encounter_id`` join key — the
+    caller then leaves report SQL unrewritten.
 
     Sub-sessions of one SparkContext share the cache manager, so
     repeated calls (one per parity sub-session) re-use a single
     InMemoryRelation as long as the underlying views read the same
-    source.
+    source. A plan already cached by someone else is read from that
+    cache and not cached again: the returned frame's ``is_cached`` is
+    then False, and only a frame with ``is_cached`` set is the
+    caller's to ``unpersist()``.
     """
     from data_export_tool_spark.mamba.follow_up import assemble_follow_up
     from data_export_tool_spark.mamba.schemas import NUM_SHARDS
@@ -123,9 +126,9 @@ def ensure_follow_up_wide(session: SparkSession) -> DataFrame | None:
     shards = {n: session.table(n) for n in names}
     if not all("encounter_id" in df.columns for df in shards.values()):
         return None
-    wide = assemble_follow_up(shards)
+    wide = assemble_follow_up(shards, cache=False)
     wide.createOrReplaceTempView(FOLLOW_UP_WIDE_VIEW)
-    return wide
+    return wide.cache() if wide.storageLevel == StorageLevel.NONE else wide
 
 
 def locate_ti_flag_table(has_column) -> str | None:
@@ -164,7 +167,7 @@ def _ti_status_patches(flag_table: str | None = None) -> list[tuple[str, str]]:
     if flag_table is None:
         # default: the SYNTHETIC fixture layout's shard assignment.
         # Real MambaETL warehouses place columns differently —
-        # run_reference_report probes the live catalog via
+        # sql_report probes the live catalog via
         # locate_ti_flag_table and passes the actual table in.
         from data_export_tool_spark.mamba.schemas import (
             follow_up_shard_assignment,
@@ -316,28 +319,35 @@ def run_reference_report(
     behavior depend on when the caller materializes. Treat a session
     used this way as running in MySQL-compat mode from then on.
     """
-    sql = load_reference_sql(name, sql_dir)
     if parquet_views is not None:
         session = mysql_compat_session(spark, parquet_views)
     else:
         session = spark
         session.conf.set("spark.sql.ansi.enabled", "false")
-    # J10 on the transpile path: serve the FollowUp CTE's shard
-    # assembly from the one cached wide view (see
-    # rewrite_follow_up_assembly) whenever the session exposes the
-    # full shard set
-    if ensure_follow_up_wide(session) is not None:
+    wide = ensure_follow_up_wide(session) is not None
+    return sql_report(session, name, load_reference_sql(name, sql_dir), params, wide)
+
+
+def sql_report(
+    session: SparkSession, name: str, sql: str, params: dict[str, str], wide: bool
+) -> DataFrame:
+    """One report's MySQL text through the full shim on ``session``.
+
+    With ``wide`` its FollowUp shard assembly reads the cached wide
+    view (J10, see ``rewrite_follow_up_assembly``). The report's
+    ``QUERY_PATCHES`` apply, except that Tx_Curr_OutComeList's TI
+    patches join the shard that carries the transferred-in flag on
+    ``session``: the flag's shard placement varies per warehouse, so
+    the fixture layout's shard is used only when no registered shard
+    has the column.
+    """
+    if wide:
         sql = rewrite_follow_up_assembly(sql)
     patches = QUERY_PATCHES.get(name)
     if name == "Tx_Curr_OutComeList":
-        # the TI flag's shard placement varies per warehouse — probe
-        # the session's actual tables; the fixture-layout default only
-        # applies when no registered shard carries the column
-        def has_column(t: str) -> bool:
-            return "transferred_in_check_this_for_all_t" in session.table(t).columns
-
-        located = locate_ti_flag_table(has_column)
+        located = locate_ti_flag_table(
+            lambda t: "transferred_in_check_this_for_all_t" in session.table(t).columns
+        )
         if located is not None:
             patches = _ti_status_patches(flag_table=located)
-    shimmed = shim_mysql_to_spark(sql, params, patches)
-    return session.sql(shimmed)
+    return session.sql(shim_mysql_to_spark(sql, params, patches))

@@ -27,7 +27,6 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.util import inheritable_thread_target
 
-from data_export_tool_spark.plans.dialect import shim_mysql_to_spark
 from data_export_tool_spark.plans.report_window import ReportWindow, resolve_report_window
 from data_export_tool_spark.sources.csv_sink import with_facility_columns, write_query_csv
 from data_export_tool_spark.sources.packaging import zip_files_with_checksum
@@ -147,7 +146,8 @@ def run_export(
        location tables (export.py:257-279; S4's two lookup joins via
        ``mamba.facility.lookup_facility_identity``) in the pool, while
        this thread builds and materializes the cached FollowUp wide
-       view.
+       view. The view is unpersisted on exit unless the caller had
+       already cached it.
     2. Every report runs as one pool task: build it, then write its
        CSV. The reference runs its queries one after another
        (export.py:281-311); here they are independent Spark jobs on one
@@ -155,11 +155,11 @@ def run_export(
        carry the report name as their job group.
 
     SQL-text reports go through the FULL MySQL→Spark shim
-    (``shim_mysql_to_spark`` + per-report ``QUERY_PATCHES``: Ethiopian
-    calendar inlining, truthiness CASE rewrites, structural patches) —
-    the same path the parity suite value-checks — with ANSI mode off
-    for MySQL's lenient casts. A builder registered under a SQL
-    report's name replaces it. The prior ANSI setting is restored on
+    (``mamba.reports.sql_report``: Ethiopian calendar inlining,
+    truthiness CASE rewrites, per-report structural patches, the TI
+    flag probe) — the same path the parity suite value-checks — with
+    ANSI mode off for MySQL's lenient casts. A builder registered under
+    a SQL report's name replaces it. The prior ANSI setting is restored on
     exit; that's safe here because every result is fully materialized
     to CSV inside this function, unlike the lazy
     ``run_reference_report`` path.
@@ -173,7 +173,7 @@ def run_export(
     are deleted unless ``cleanup_csvs=False``. No pool thread outlives
     the call.
     """
-    from data_export_tool_spark.mamba.reports import ensure_follow_up_wide
+    from data_export_tool_spark.mamba.reports import ensure_follow_up_wide, sql_report
 
     window = resolve_report_window(eth_month, eth_year)
     label = month_label or str(eth_month)
@@ -209,7 +209,7 @@ def run_export(
 
         builders: dict[str, Callable[[], DataFrame]] = {
             name: functools.partial(
-                _build_sql, spark, name, sql, window, wide is not None
+                sql_report, spark, name, sql, window.as_params(), wide is not None
             )
             for name, sql in registry.sql_queries.items()
         }
@@ -226,7 +226,7 @@ def run_export(
         written = {name: f.result() for name, f in futures.items()}
     finally:
         pool.shutdown(cancel_futures=True)
-        if wide is not None:
+        if wide is not None and wide.is_cached:
             wide.unpersist()
         if prior_ansi is not None:
             spark.conf.set("spark.sql.ansi.enabled", prior_ansi)
@@ -236,27 +236,6 @@ def run_export(
     if zip_name:
         zip_files_with_checksum(out_dir, zip_name, cleanup_csvs=cleanup_csvs)
     return written
-
-
-def _build_sql(
-    spark: SparkSession,
-    name: str,
-    sql: str,
-    window: ReportWindow,
-    wide: bool,
-) -> DataFrame:
-    """A SQL-text report through the shim; ``wide`` points its
-    FollowUp assembly at the cached wide view."""
-    from data_export_tool_spark.mamba.reports import (
-        QUERY_PATCHES,
-        rewrite_follow_up_assembly,
-    )
-
-    if wide:
-        sql = rewrite_follow_up_assembly(sql)
-    return spark.sql(
-        shim_mysql_to_spark(sql, window.as_params(), QUERY_PATCHES.get(name))
-    )
 
 
 def _export_report(

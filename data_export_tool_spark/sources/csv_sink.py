@@ -11,10 +11,9 @@ Reference behavior (/root/reference/export.py:281-311):
 
 Spark-first translation: facility values become literal columns
 (constant-folded by Catalyst, zero runtime cost), and the sink writes
-a single CSV per query. For report-sized outputs a driver-side pandas
-write preserves exact column order and produces one file (what the
-downstream zip step needs); for big extracts ``distributed=True``
-writes a directory of part files with the same schema.
+a single CSV per query: a driver-side pandas write preserves exact
+column order and produces one file (what the downstream zip step
+needs).
 """
 
 from __future__ import annotations
@@ -59,23 +58,15 @@ def write_query_csv(
     hmis_code: str,
     month: str,
     year,
-    distributed: bool = False,
 ) -> str | None:
     """S6: write one CSV for a query result; returns the path, or None
     when the result is empty (the reference skips empty results,
-    export.py:307-308)."""
+    export.py:307-308). The query runs once: an error it raises
+    reaches the caller."""
     os.makedirs(out_dir, exist_ok=True)
     name = csv_name(query_name, facility, hmis_code, month, year)
     path = os.path.join(out_dir, name)
-    if distributed:
-        # empty-result skip applies here too (export.py:307-308); an
-        # isEmpty() probe scans at most one partition's first row
-        if df.isEmpty():
-            return None
-        # directory-of-parts for extracts too large for one file
-        df.write.option("header", True).mode("overwrite").csv(path)
-        return path
-    # Arrow-first conversion with NULLABLE integer dtypes: a plain
+    # Arrow conversion with NULLABLE integer dtypes: a plain
     # toPandas() under Arrow coerces an integer column containing any
     # NULL to float64, and to_csv then writes '123456.0' where the
     # reference's csv.writer writes '123456'. Int64/Int32 pandas
@@ -89,10 +80,7 @@ def write_query_csv(
         pa.int32(): pd.Int32Dtype(),
         pa.int64(): pd.Int64Dtype(),
     }
-    try:
-        pdf = df.toArrow().to_pandas(types_mapper=_INT_DTYPES.get)
-    except Exception:  # non-Arrow-convertible schema → plain path
-        pdf = df.toPandas()
+    pdf = df.toArrow().to_pandas(types_mapper=_INT_DTYPES.get)
     if len(pdf) == 0:
         return None
     pdf.to_csv(path, index=False)

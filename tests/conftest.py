@@ -69,7 +69,9 @@ def sf_dir():
 
 def stored_rdd_ids(spark) -> set[int]:
     """Ids of the RDDs the session holds persisted (local checkpoints
-    included), also those whose blocks are empty."""
+    included), also those whose blocks are empty. The context holds
+    them weakly: an RDD nothing references drops out at the next JVM
+    garbage collection."""
     return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
 

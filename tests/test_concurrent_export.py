@@ -48,8 +48,32 @@ NATIVE = {
 }
 
 
+#: order-free ``_csv_digest`` of each line-list's CSV from the
+#: ``native_export`` fixture (seed 7, 60 patients, Nehassie 2015)
+GOLDEN_DIGESTS = {
+    "Tx_Curr_LineList": "53d3c33ef46bfe153ff23a302282e59c94c352520916327c4648f498a81e7ee3",
+    "Tx_Curr_VLTestReceived_LineList": "226a496ffb528840d962d5d267137effaa2900f62e64fa01a72308228710a97f",
+    "Tx_Curr_AHD_LineList": "ac81dd6877c3bb761fb214fa7f9e8711863e9e56f3137f65c1ea4ac64831dc73",
+    "Tx_Curr_HVL_LineList": "5bf2d052ce863691ff28a2bdafa73ba6d3c4c9783af3472042c3122b917013b6",
+    "Tx_Curr_VLEligibleNew_LineList": "796050db07186a3f337a548c7f8051e4f70f0bc57e1d700655e807c21ab61e51",
+    "Tx_Curr_TPT_LineList": "7122a492c5fee594a8c9708d1ea5c2a51def6f89363d96c767a3192ec8fd9931",
+    "Tx_Curr_OutComeList": "e2340f15165a6c4ea8d1507fa0b7a3ff48e4ae64aa14ee5a4b2b286ecc00a174",
+    "Tx_Curr_CCANew_LineList": "5692b1db61e553b037eded1bdac62e47242a4b785e4cf3e66dbc6dc53f39825f",
+    "Tx_Curr_CCA_LineList": "8e32117c01ed2f31fe86b9abb9a328f379ff125ec28abb27e8402237b172de2d",
+    "Tx_Curr_VLEligible_LineList": "1ec8af8c9aab3fbab3cc04f48ec94cea5fcdcc461f814ed35e0fb81ef4d1850d",
+    "PMTCT_Maternal_LineList": "dd05f6123808178817488e3514b93f1d8ffff91aefe64f9c8f8144e93d1db726",
+    "PMTCT_HEI_LineList": "c8473f998873133bc2254420904524f96491b393768b6fb79ea8b9caa30971d8",
+}
+
+
 def cached_plan_count(spark) -> int:
     return spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
+
+
+def cached_partitions(spark, rdd_ids: set[int]) -> int:
+    """Cached partitions of the RDDs ``rdd_ids`` in the block store."""
+    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    return sum(i.numCachedPartitions() for i in infos if i.id() in rdd_ids)
 
 
 def _with_fake_shards(session):
@@ -126,6 +150,34 @@ def test_aborted_export_leaves_no_thread_behind(spark, tmp_path):
     assert session.conf.get("spark.sql.ansi.enabled") == ansi
 
 
+def test_export_keeps_a_wide_view_the_caller_cached(spark, tmp_path):
+    """The export reads a wide view the caller already cached and
+    leaves it cached: it unpersists only what it cached."""
+    from data_export_tool_spark.mamba.follow_up import assemble_follow_up
+
+    session = spark.newSession()
+    _with_fake_shards(session)
+    names = ["mamba_flat_encounter_follow_up"] + [
+        f"mamba_flat_encounter_follow_up_{i}" for i in range(1, NUM_SHARDS)
+    ]
+    ids = stored_rdd_ids(spark)
+    held = assemble_follow_up({n: session.table(n) for n in names})
+    try:
+        held.count()
+        held_ids = stored_rdd_ids(spark) - ids
+        cached = cached_plan_count(spark), cached_partitions(spark, held_ids)
+        reg = ReportRegistry()
+        reg.register_sql("Wide", f"SELECT encounter_id FROM {FOLLOW_UP_WIDE_VIEW}")
+        written = run_export(
+            session, reg, FACILITY, "Sene", 2015, str(tmp_path), month_label="Sene"
+        )
+        assert written["Wide"] is not None
+        assert held.storageLevel.useMemory
+        assert (cached_plan_count(spark), cached_partitions(spark, held_ids)) == cached
+    finally:
+        held.unpersist()
+
+
 def test_each_report_runs_under_its_own_job_group(spark, tmp_path):
     """More reports than pool threads, with frequent thread switches:
     every report's jobs carry its own group, even on a reused thread."""
@@ -190,18 +242,40 @@ def native_export(spark, tmp_path_factory):
     reg = ReportRegistry()
     for name, builder in NATIVE.items():
         reg.register_builder(name, _native_adapter(builder, list(paths)))
-    before = stored_rdd_ids(spark), cached_plan_count(spark)
+    ids = stored_rdd_ids(spark)
+    held = session.table("mamba_dim_client").cache()
+    held.count()
+    held_ids = stored_rdd_ids(spark) - ids
+
+    def storage():
+        return (
+            stored_rdd_ids(spark), cached_plan_count(spark),
+            cached_partitions(spark, held_ids),
+        )
+
+    before = storage()
     out = tmp_path_factory.mktemp("native_export")
-    written = run_export(
-        session, reg, FACILITY, "Nehassie", 2015, str(out), month_label="Nehassie"
-    )
-    after = stored_rdd_ids(spark), cached_plan_count(spark)
+    try:
+        written = run_export(
+            session, reg, FACILITY, "Nehassie", 2015, str(out), month_label="Nehassie"
+        )
+        after = storage()
+    finally:
+        held.unpersist()
     return session, paths, written, before, after
 
 
 def test_native_export_leaves_storage_as_found(native_export):
-    _, _, _, before, after = native_export
-    assert after == before
+    """The export persists nothing it leaves behind and frees nothing
+    it did not persist. The context lists persisted RDDs weakly: one
+    that earlier code persisted and no longer references drops out at
+    the next JVM garbage collection, and the ContextCleaner frees its
+    blocks, so the stored ids may shrink while the export runs; none
+    may be new."""
+    _, _, _, (ids, entries, held), (ids_after, entries_after, held_after) = native_export
+    assert ids_after <= ids
+    assert entries_after == entries
+    assert held_after == held > 0
 
 
 def test_native_export_matches_each_builder_written_alone(native_export, tmp_path):
@@ -212,6 +286,7 @@ def test_native_export_matches_each_builder_written_alone(native_export, tmp_pat
     window = resolve_report_window("Nehassie", 2015)
     assert list(written) == list(NATIVE)
     assert all(written.values()), "every line-list should have rows at this fixture"
+    assert {name: _csv_digest(path) for name, path in written.items()} == GOLDEN_DIGESTS
     wide = assemble_follow_up(frames)
     try:
         for name, builder in NATIVE.items():

@@ -178,11 +178,11 @@ def test_linelists_read_wide_view_from_cache(spark, sf_dir):
 
 
 def test_linelist_dim_joins_broadcast_at_fixture_scale(spark, sf_dir):
-    """VERDICT r9 weak-#1: the line-list dim joins route through the
-    size-gated ``maybe_broadcast`` instead of forced ``F.broadcast``.
-    At fixture scale every dim estimate clears the 64 MB threshold, so
-    the gate must still hand Catalyst the hint — the initial (pre-AQE)
-    plan keeps its BroadcastHashJoins."""
+    """The line-list dim joins carry no hint; Catalyst picks their
+    strategy from its own size estimate and the session's 64 MB
+    ``autoBroadcastJoinThreshold``. At fixture scale every dim side is
+    under it, so the initial (pre-AQE) plan keeps its
+    BroadcastHashJoins."""
     plan = plan_of(spark, sf_dir, "m01_tx_curr_linelist")
     # scope to the plan BODY: the cached wide-view InMemoryRelation
     # carries its own stored plan (planned when it was first cached),
@@ -192,11 +192,11 @@ def test_linelist_dim_joins_broadcast_at_fixture_scale(spark, sf_dir):
 
 
 def test_linelist_broadcasts_not_forced_over_threshold(spark, sf_dir):
-    """The other half of the gate: when the dim estimates DON'T clear
-    the threshold (simulated by dropping it to 1 byte — the 10M-patient
-    shape of mamba_dim_client), no hint may be forced. The initial plan
-    must fall back to shuffle joins; AQE can still promote small sides
-    at runtime, which is exactly the intended degradation path."""
+    """The other half of Catalyst's threshold decision: when no dim
+    side is under the threshold (simulated by dropping it to 1 byte —
+    the 10M-patient shape of mamba_dim_client), nothing may force a
+    broadcast. The initial plan falls back to shuffle joins; AQE can
+    still promote small sides at runtime."""
     prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
     try:
@@ -207,26 +207,8 @@ def test_linelist_broadcasts_not_forced_over_threshold(spark, sf_dir):
     # threshold) legitimately contains BHJs — scope to the plan body
     body = plan.split("InMemoryRelation")[0]
     assert "BroadcastHashJoin" not in body, (
-        "dim-join broadcast is still forced past the size gate"
+        "dim-join broadcast is forced past the session threshold"
     )
-
-
-def test_maybe_broadcast_gate_unit(spark):
-    """Unit contract for the gate itself: an under-threshold frame gets
-    the hint; an over-threshold frame comes back IDENTICAL (unhinted),
-    never a weaker copy."""
-    from data_export_tool_spark.operators.joins import (
-        maybe_broadcast,
-        size_estimate_bytes,
-    )
-
-    df = spark.range(100).selectExpr("id", "id * 2 as v")
-    est = size_estimate_bytes(df)
-    assert est is not None and est > 0
-    hinted = maybe_broadcast(df, threshold_bytes=est + 1)
-    assert "UnresolvedHint" in hinted._jdf.queryExecution().logical().toString()
-    assert maybe_broadcast(df, threshold_bytes=est - 1) is df
-    assert maybe_broadcast(df, threshold_bytes=-1) is df
 
 
 def test_minhash_signatures_bucketed_input_no_exchange(spark, sf_dir):

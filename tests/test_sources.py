@@ -66,6 +66,31 @@ def test_csv_sink_nullable_int_columns_stay_integral(spark, tmp_path):
     assert lines[2].split(",")[1] == ""
 
 
+def test_csv_sink_runs_a_failing_query_once(spark, tmp_path):
+    # a query that raises at run time reaches the caller after one
+    # job, not after a second run through another collect path
+    import pytest
+
+    from data_export_tool_spark.sources.csv_sink import write_query_csv
+
+    df = spark.range(10).select(
+        "id",
+        F.when(F.col("id") > 5, F.raise_error(F.lit("sink boom")))
+        .otherwise(F.col("id"))
+        .alias("v"),
+    )
+    sc = spark.sparkContext
+    group = "csv_sink_runs_a_failing_query_once"
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(Exception, match="sink boom"):
+            write_query_csv(df, str(tmp_path), "q", "Fac", "H1", "Meskerem", 2016)
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
 def test_facility_columns_append_not_replace(spark):
     # the reference APPENDS its identity tuple unconditionally
     # (export.py:294-304); a query selecting its own 'Region' column
