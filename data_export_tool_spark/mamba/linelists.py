@@ -9,6 +9,11 @@ and AQE choose them under the session's broadcast threshold, so a
 build side. Citations point at the reference lines being mirrored; no
 SQL text is copied.
 
+``LINELISTS`` at the end of the module is the one report table: report
+name → builder, in the reference's config order. The driver-gate
+catalog (``queries.mamba_q``), the scaled bench entries
+(``queries.bench_mamba``) and the tests all read it.
+
 Dialect/collation policy (SURVEY.md §4.7): string comparisons are
 **case-sensitive** (Spark/ANSI semantics). MySQL's default collation
 is case-insensitive, so rows carrying case-variant codes
@@ -25,7 +30,7 @@ FALSE so both sides agree on the reference's *actual* behavior.
 from __future__ import annotations
 
 import datetime as dt
-from collections.abc import Mapping
+from collections.abc import Callable, Mapping
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -3135,3 +3140,32 @@ def tx_curr_cca_new_linelist(
         F.col("curr_ccs_next_date").alias("Next_AppointmentDate_4_CCS"),
         F.col("patient_uuid").alias("PatientGUID"),
     )
+
+
+def _pmtct_hei(
+    tables: Mapping[str, DataFrame],
+    report_start: dt.date,
+    report_end: dt.date,
+    follow_up: DataFrame | None = None,
+) -> DataFrame:
+    # HEI builds from its own encounter tables, never the wide view
+    return pmtct_hei_linelist(tables, report_start, report_end)
+
+
+#: report name → builder, in the reference's config order
+#: (export_config.json). Every entry is callable as
+#: ``fn(tables, start, end, follow_up=wide)``.
+LINELISTS: dict[str, Callable[..., DataFrame]] = {
+    "Tx_Curr_LineList": tx_curr_linelist,
+    "Tx_Curr_VLTestReceived_LineList": tx_curr_vl_received_linelist,
+    "Tx_Curr_AHD_LineList": tx_curr_ahd_linelist,
+    "Tx_Curr_HVL_LineList": tx_curr_hvl_linelist,
+    "Tx_Curr_VLEligibleNew_LineList": tx_curr_vl_eligible_new_linelist,
+    "Tx_Curr_TPT_LineList": tx_curr_tpt_linelist,
+    "Tx_Curr_OutComeList": tx_curr_outcome,
+    "Tx_Curr_CCANew_LineList": tx_curr_cca_new_linelist,
+    "Tx_Curr_CCA_LineList": tx_curr_cca_linelist,
+    "Tx_Curr_VLEligible_LineList": tx_curr_vl_eligible_linelist,
+    "PMTCT_Maternal_LineList": pmtct_maternal_linelist,
+    "PMTCT_HEI_LineList": _pmtct_hei,
+}

@@ -27,22 +27,6 @@ REFERENCE_SQL_DIR = os.environ.get(
     "SPARK_GRAFT_REFERENCE_SQL_DIR", "/root/reference/sql_queries"
 )
 
-#: run order = the reference's config order (export_config.json)
-REPORT_NAMES: tuple[str, ...] = (
-    "Tx_Curr_LineList",
-    "Tx_Curr_VLTestReceived_LineList",
-    "Tx_Curr_AHD_LineList",
-    "Tx_Curr_HVL_LineList",
-    "Tx_Curr_VLEligibleNew_LineList",
-    "Tx_Curr_TPT_LineList",
-    "Tx_Curr_OutComeList",
-    "Tx_Curr_CCANew_LineList",
-    "Tx_Curr_CCA_LineList",
-    "Tx_Curr_VLEligible_LineList",
-    "PMTCT_Maternal_LineList",
-    "PMTCT_HEI_LineList",
-)
-
 #: temp-view name the cached 11-way FollowUp wide view registers under
 FOLLOW_UP_WIDE_VIEW = "__followup_wide"
 
@@ -131,21 +115,21 @@ def ensure_follow_up_wide(session: SparkSession) -> DataFrame | None:
     return wide.cache() if wide.storageLevel == StorageLevel.NONE else wide
 
 
-def locate_ti_flag_table(has_column) -> str | None:
-    """Find which follow-up shard table actually carries the
-    transferred-in flag. ``has_column`` is a callable
-    ``table_name -> bool`` (e.g. probing ``spark.table(t).columns``).
-    Returns None when no registered shard has it — the caller then
-    falls back to the fixture layout's assignment."""
+def locate_ti_flag_table(session: SparkSession) -> str | None:
+    """Find which follow-up shard table on ``session`` carries the
+    transferred-in flag. Tables the session does not have are skipped;
+    any other failure to read one raises, since a shard that cannot be
+    read may be the one carrying the flag. Returns None when no
+    registered shard has it — the caller then falls back to the
+    fixture layout's assignment."""
     candidates = ["mamba_flat_encounter_follow_up"] + [
         f"mamba_flat_encounter_follow_up_{i}" for i in range(1, 13)
     ]
     for t in candidates:
-        try:
-            if has_column(t):
-                return t
-        except Exception:
-            continue
+        if session.catalog.tableExists(t) and (
+            "transferred_in_check_this_for_all_t" in session.table(t).columns
+        ):
+            return t
     return None
 
 
@@ -281,21 +265,21 @@ def load_reference_sql(name: str, sql_dir: str | None = None) -> str:
 
 
 def mysql_compat_session(
-    spark: SparkSession, parquet_views: dict[str, str] | None = None
+    spark: SparkSession, parquet_views: dict[str, str]
 ) -> SparkSession:
     """A dedicated sub-session running in MySQL-compat mode (ANSI off:
     lenient casts — malformed numerics → NULL, not error) so compat
     semantics can't leak into other queries sharing the parent session.
 
-    Temp views are session-scoped, so the warehouse tables must be
-    (re)registered on the sub-session: ``parquet_views`` maps view name
+    Temp views are session-scoped, so the warehouse tables are
+    registered on the sub-session: ``parquet_views`` maps view name
     → parquet path (what ``write_fixture_parquet`` returns). Sub-
     sessions share the SparkContext and cached data — creating one is
     cheap.
     """
     s = spark.newSession()
     s.conf.set("spark.sql.ansi.enabled", "false")
-    for name, path in (parquet_views or {}).items():
+    for name, path in parquet_views.items():
         s.read.parquet(path).createOrReplaceTempView(name)
     return s
 
@@ -304,26 +288,15 @@ def run_reference_report(
     spark: SparkSession,
     name: str,
     params: dict[str, str],
+    parquet_views: dict[str, str],
     sql_dir: str | None = None,
-    parquet_views: dict[str, str] | None = None,
 ) -> DataFrame:
-    """Shim + execute one reference report against the registered
-    mamba_* temp views.
-
-    With ``parquet_views`` (view name → parquet path) the report runs
-    on an isolated ``mysql_compat_session`` and the caller's session
-    conf is untouched — the preferred path. Without it the report runs
-    on the GIVEN session with ANSI mode switched off and left off:
-    parts of a plan may re-read the conf at execution time, after this
-    call returns the lazy DataFrame, so restoring it would make cast
-    behavior depend on when the caller materializes. Treat a session
-    used this way as running in MySQL-compat mode from then on.
+    """Shim + execute one reference report over the warehouse tables
+    ``parquet_views`` (view name → parquet path). The report runs on
+    an isolated ``mysql_compat_session``; the caller's session conf is
+    untouched.
     """
-    if parquet_views is not None:
-        session = mysql_compat_session(spark, parquet_views)
-    else:
-        session = spark
-        session.conf.set("spark.sql.ansi.enabled", "false")
+    session = mysql_compat_session(spark, parquet_views)
     wide = ensure_follow_up_wide(session) is not None
     return sql_report(session, name, load_reference_sql(name, sql_dir), params, wide)
 
@@ -345,9 +318,7 @@ def sql_report(
         sql = rewrite_follow_up_assembly(sql)
     patches = QUERY_PATCHES.get(name)
     if name == "Tx_Curr_OutComeList":
-        located = locate_ti_flag_table(
-            lambda t: "transferred_in_check_this_for_all_t" in session.table(t).columns
-        )
+        located = locate_ti_flag_table(session)
         if located is not None:
             patches = _ti_status_patches(flag_table=located)
     return session.sql(shim_mysql_to_spark(sql, params, patches))

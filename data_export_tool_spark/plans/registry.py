@@ -158,11 +158,10 @@ def run_export(
     (``mamba.reports.sql_report``: Ethiopian calendar inlining,
     truthiness CASE rewrites, per-report structural patches, the TI
     flag probe) — the same path the parity suite value-checks — with
-    ANSI mode off for MySQL's lenient casts. A builder registered under
-    a SQL report's name replaces it. The prior ANSI setting is restored on
-    exit; that's safe here because every result is fully materialized
-    to CSV inside this function, unlike the lazy
-    ``run_reference_report`` path.
+    ANSI mode off on the caller's session for MySQL's lenient casts. A
+    builder registered under a SQL report's name replaces it. The prior
+    ANSI setting is restored on exit; that's safe here because every
+    result is fully materialized to CSV inside this function.
 
     Returns name → written CSV path in registry order (None where the
     result was empty — skipped, matching export.py:307-308 — or the

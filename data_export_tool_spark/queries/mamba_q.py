@@ -31,9 +31,21 @@ from pyspark.sql import functions as F
 
 from data_export_tool_spark.queries import QuerySpec
 
-_REFERENCE_SQL_DIR = os.environ.get(
-    "SPARK_GRAFT_REFERENCE_SQL_DIR", "/root/reference/sql_queries"
-)
+#: catalog name → report (its builder is ``mamba.linelists.LINELISTS``)
+REPORTS = {
+    "m01_tx_curr_linelist": "Tx_Curr_LineList",
+    "m02_tx_curr_outcome": "Tx_Curr_OutComeList",
+    "m03_vl_received_linelist": "Tx_Curr_VLTestReceived_LineList",
+    "m04_cca_linelist": "Tx_Curr_CCA_LineList",
+    "m05_tpt_linelist": "Tx_Curr_TPT_LineList",
+    "m06_pmtct_maternal": "PMTCT_Maternal_LineList",
+    "m07_pmtct_hei": "PMTCT_HEI_LineList",
+    "m08_tx_curr_hvl": "Tx_Curr_HVL_LineList",
+    "m09_tx_curr_ahd": "Tx_Curr_AHD_LineList",
+    "m10_vl_eligible": "Tx_Curr_VLEligible_LineList",
+    "m11_vl_eligible_new": "Tx_Curr_VLEligibleNew_LineList",
+    "m12_cca_new": "Tx_Curr_CCANew_LineList",
+}
 
 
 def _dedup_like_duckdb(columns: list[str]) -> list[str]:
@@ -52,83 +64,34 @@ def _dedup_like_duckdb(columns: list[str]) -> list[str]:
     return out
 
 
-#: per-application memo of (fixture frames, assembled wide view). Each
-#: builder call used to re-read ~26 parquet schemas and re-build the
-#: 11-way shard join (~2s of py4j/analysis per call × 12 reports in the
-#: driver gate); the frames and the cached wide view are identical
-#: across reports, so construct them once per SparkSession. Only the
-#: CURRENT application's entry is kept — a stale entry holds DataFrames
-#: bound to a stopped SparkSession, so a long-lived process that cycles
-#: sessions would otherwise accumulate dead JVM references.
-_FIXTURE_CACHE: dict[str, tuple[dict, DataFrame]] = {}
-
-
-def _fixture_frames(spark: SparkSession, paths: dict) -> tuple[dict, DataFrame]:
-    from data_export_tool_spark.mamba.follow_up import assemble_follow_up
-
-    app = spark.sparkContext.applicationId
-    if app not in _FIXTURE_CACHE:
-        _FIXTURE_CACHE.clear()  # evict entries of stopped sessions
-        frames = {t: spark.read.parquet(p) for t, p in paths.items()}
-        _FIXTURE_CACHE[app] = (frames, assemble_follow_up(frames))
-    return _FIXTURE_CACHE[app]
-
-
 def _report_specs() -> list[QuerySpec]:
-    from data_export_tool_spark.mamba import linelists as LL
-    from data_export_tool_spark.mamba.fixture_store import ensure_fixture_parquet
+    from data_export_tool_spark.mamba.fixture_store import (
+        DEFAULT_N_PATIENTS,
+        ensure_fixture_parquet,
+    )
     from data_export_tool_spark.mamba.fixtures import WINDOW_END, WINDOW_START
-
-    reports = [
-        ("m01_tx_curr_linelist", "Tx_Curr_LineList", LL.tx_curr_linelist),
-        ("m02_tx_curr_outcome", "Tx_Curr_OutComeList", LL.tx_curr_outcome),
-        (
-            "m03_vl_received_linelist",
-            "Tx_Curr_VLTestReceived_LineList",
-            LL.tx_curr_vl_received_linelist,
-        ),
-        ("m04_cca_linelist", "Tx_Curr_CCA_LineList", LL.tx_curr_cca_linelist),
-        ("m05_tpt_linelist", "Tx_Curr_TPT_LineList", LL.tx_curr_tpt_linelist),
-        ("m06_pmtct_maternal", "PMTCT_Maternal_LineList", LL.pmtct_maternal_linelist),
-        ("m07_pmtct_hei", "PMTCT_HEI_LineList", LL.pmtct_hei_linelist),
-        ("m08_tx_curr_hvl", "Tx_Curr_HVL_LineList", LL.tx_curr_hvl_linelist),
-        ("m09_tx_curr_ahd", "Tx_Curr_AHD_LineList", LL.tx_curr_ahd_linelist),
-        (
-            "m10_vl_eligible",
-            "Tx_Curr_VLEligible_LineList",
-            LL.tx_curr_vl_eligible_linelist,
-        ),
-        (
-            "m11_vl_eligible_new",
-            "Tx_Curr_VLEligibleNew_LineList",
-            LL.tx_curr_vl_eligible_new_linelist,
-        ),
-        ("m12_cca_new", "Tx_Curr_CCANew_LineList", LL.tx_curr_cca_new_linelist),
-    ]
+    from data_export_tool_spark.mamba.linelists import LINELISTS
+    from data_export_tool_spark.mamba.reports import REFERENCE_SQL_DIR
 
     try:
         paths = ensure_fixture_parquet()
     except Exception:
         return []
-    have_reference = os.path.isdir(_REFERENCE_SQL_DIR)
 
     oracles: dict[str, str | None] = {}
     duck_cols: dict[str, list[str] | None] = {}
-    if have_reference:
+    if os.path.isdir(REFERENCE_SQL_DIR):
         try:
-            oracles, duck_cols = _build_oracles(reports, paths)
+            oracles, duck_cols = _build_oracles(paths)
         except Exception:
             oracles, duck_cols = {}, {}
 
-    import inspect
-
-    def make_builder(fn, name):
-        takes_wide = "follow_up" in inspect.signature(fn).parameters
-
+    def make_builder(name, report):
         def build(spark: SparkSession, sf_dir: str) -> DataFrame:
-            frames, wide = _fixture_frames(spark, paths)
-            kw = {"follow_up": wide} if takes_wide else {}
-            df = fn(frames, WINDOW_START, WINDOW_END, **kw)
+            from data_export_tool_spark.queries.bench_mamba import fixture_warehouse
+
+            frames, wide = fixture_warehouse(spark, DEFAULT_N_PATIENTS)
+            df = LINELISTS[report](frames, WINDOW_START, WINDOW_END, follow_up=wide)
             cols = _dedup_like_duckdb(df.columns)
             df = df.toDF(*cols)
             target = duck_cols.get(name)
@@ -149,15 +112,15 @@ def _report_specs() -> list[QuerySpec]:
     return [
         QuerySpec(
             name,
-            make_builder(fn, name),
+            make_builder(name, report),
             oracles.get(name),
             f"native line-list: {report}",
         )
-        for name, report, fn in reports
+        for name, report in REPORTS.items()
     ]
 
 
-def _build_oracles(reports, paths):
+def _build_oracles(paths):
     """Shim each reference report to DuckDB, point it at the fixture
     parquet via name-shadowing CTEs, wrap in an all-VARCHAR outer
     select, and probe the resulting column names with a LIMIT 0 run."""
@@ -188,7 +151,7 @@ def _build_oracles(reports, paths):
 
     oracles: dict[str, str | None] = {}
     duck_cols: dict[str, list[str] | None] = {}
-    for name, report, _fn in reports:
+    for name, report in REPORTS.items():
         sql = shim_mysql_to_duckdb(
             load_reference_sql(report), params, QUERY_PATCHES.get(report)
         ).strip().rstrip(";")

@@ -5,7 +5,6 @@ each native builder's output written alone."""
 from __future__ import annotations
 
 import hashlib
-import inspect
 import logging
 import os
 import sys
@@ -15,7 +14,7 @@ import zipfile
 import pytest
 from conftest import stored_rdd_ids
 
-from data_export_tool_spark.mamba import linelists as LL
+from data_export_tool_spark.mamba.linelists import LINELISTS
 from data_export_tool_spark.mamba.reports import FOLLOW_UP_WIDE_VIEW
 from data_export_tool_spark.mamba.schemas import NUM_SHARDS, all_table_schemas
 from data_export_tool_spark.plans.registry import (
@@ -30,23 +29,6 @@ from data_export_tool_spark.sources.csv_sink import (
 )
 
 FACILITY = FacilityIdentity("Oromia", "Adama", "AdamaGen", "H1")
-
-#: export name -> native builder, in the reference's export order
-NATIVE = {
-    "Tx_Curr_LineList": LL.tx_curr_linelist,
-    "Tx_Curr_VLTestReceived_LineList": LL.tx_curr_vl_received_linelist,
-    "Tx_Curr_AHD_LineList": LL.tx_curr_ahd_linelist,
-    "Tx_Curr_HVL_LineList": LL.tx_curr_hvl_linelist,
-    "Tx_Curr_VLEligibleNew_LineList": LL.tx_curr_vl_eligible_new_linelist,
-    "Tx_Curr_TPT_LineList": LL.tx_curr_tpt_linelist,
-    "Tx_Curr_OutComeList": LL.tx_curr_outcome,
-    "Tx_Curr_CCANew_LineList": LL.tx_curr_cca_new_linelist,
-    "Tx_Curr_CCA_LineList": LL.tx_curr_cca_linelist,
-    "Tx_Curr_VLEligible_LineList": LL.tx_curr_vl_eligible_linelist,
-    "PMTCT_Maternal_LineList": LL.pmtct_maternal_linelist,
-    "PMTCT_HEI_LineList": LL.pmtct_hei_linelist,
-}
-
 
 #: order-free ``_csv_digest`` of each line-list's CSV from the
 #: ``native_export`` fixture (seed 7, 60 patients, Nehassie 2015)
@@ -210,12 +192,10 @@ def test_each_report_runs_under_its_own_job_group(spark, tmp_path):
 
 
 def _native_adapter(builder, tables):
-    takes_wide = "follow_up" in inspect.signature(builder).parameters
-
     def build(spark, window):
         frames = {t: spark.table(t) for t in tables}
-        extra = {"follow_up": spark.table(FOLLOW_UP_WIDE_VIEW)} if takes_wide else {}
-        return builder(frames, window.start, window.end, **extra)
+        wide = spark.table(FOLLOW_UP_WIDE_VIEW)
+        return builder(frames, window.start, window.end, follow_up=wide)
 
     return build
 
@@ -240,7 +220,7 @@ def native_export(spark, tmp_path_factory):
     for name, path in paths.items():
         session.read.schema(schemas[name]).parquet(path).createOrReplaceTempView(name)
     reg = ReportRegistry()
-    for name, builder in NATIVE.items():
+    for name, builder in LINELISTS.items():
         reg.register_builder(name, _native_adapter(builder, list(paths)))
     ids = stored_rdd_ids(spark)
     held = session.table("mamba_dim_client").cache()
@@ -284,16 +264,14 @@ def test_native_export_matches_each_builder_written_alone(native_export, tmp_pat
     session, paths, written, _, _ = native_export
     frames = {t: session.table(t) for t in paths}
     window = resolve_report_window("Nehassie", 2015)
-    assert list(written) == list(NATIVE)
+    assert list(written) == list(LINELISTS)
     assert all(written.values()), "every line-list should have rows at this fixture"
     assert {name: _csv_digest(path) for name, path in written.items()} == GOLDEN_DIGESTS
     wide = assemble_follow_up(frames)
     try:
-        for name, builder in NATIVE.items():
-            takes_wide = "follow_up" in inspect.signature(builder).parameters
-            extra = {"follow_up": wide} if takes_wide else {}
+        for name, builder in LINELISTS.items():
             df = with_facility_columns(
-                builder(frames, window.start, window.end, **extra),
+                builder(frames, window.start, window.end, follow_up=wide),
                 FACILITY.region, FACILITY.woreda, FACILITY.facility,
                 FACILITY.hmis_sanitized,
             )

@@ -465,6 +465,20 @@ def test_run_export_raw_facility_in_columns_sanitized_in_name(spark, tmp_path):
     assert lines[1].split(",")[3] == "Adama General_Hosp"
 
 
+#: a minimal report carrying the three sites the TI patches anchor on
+#: (Tx_Curr_OutComeList.sql)
+_TI_SQL = """
+WITH temp_latest AS (SELECT client_id FROM mamba_flat_encounter_follow_up),
+previous_follow_up AS (SELECT client_id FROM temp_latest)
+SELECT latest.client_id,
+       fn_get_ti_status(latest.client_id,
+                        date_add(REPORT_START_DATE, INTERVAL -1 DAY),
+                        REPORT_END_DATE) AS ti
+FROM temp_latest latest
+LEFT JOIN previous_follow_up AS previous ON latest.client_id = previous.client_id
+"""
+
+
 def test_run_export_sql_probes_ti_flag_shard(spark, tmp_path):
     """Tx_Curr_OutComeList's TI patches join the shard that carries
     the transferred-in flag on the session, on run_export's SQL path
@@ -483,19 +497,8 @@ def test_run_export_sql_probes_ti_flag_shard(spark, tmp_path):
     session.createDataFrame(
         [(1, "Yes"), (2, "No")], f"encounter_id long, {flag} string"
     ).createOrReplaceTempView(f"mamba_flat_encounter_follow_up_{shard}")
-    # the three sites the TI patches anchor on (Tx_Curr_OutComeList.sql)
-    sql = """
-    WITH temp_latest AS (SELECT client_id FROM mamba_flat_encounter_follow_up),
-    previous_follow_up AS (SELECT client_id FROM temp_latest)
-    SELECT latest.client_id,
-           fn_get_ti_status(latest.client_id,
-                            date_add(REPORT_START_DATE, INTERVAL -1 DAY),
-                            REPORT_END_DATE) AS ti
-    FROM temp_latest latest
-    LEFT JOIN previous_follow_up AS previous ON latest.client_id = previous.client_id
-    """
     reg = ReportRegistry()
-    reg.register_sql("Tx_Curr_OutComeList", sql)
+    reg.register_sql("Tx_Curr_OutComeList", _TI_SQL)
     written = run_export(
         session, reg, FacilityIdentity("O", "A", "F", "H"), "Sene", 2015,
         str(tmp_path), month_label="Sene", cleanup_csvs=False,
@@ -504,6 +507,39 @@ def test_run_export_sql_probes_ti_flag_shard(spark, tmp_path):
     assert path is not None, "the report failed analysis"
     rows = sorted(line.split(",")[:2] for line in open(path).read().splitlines()[1:])
     assert rows == [["10", "TI"], ["20", "NTI"]]
+
+
+def test_ti_flag_probe_raises_on_an_unreadable_shard(spark):
+    """A shard view the session lists but cannot read may be the one
+    carrying the transferred-in flag, so the TI probe raises instead of
+    falling back to the fixture layout's shard."""
+    from pyspark.errors import AnalysisException
+
+    from data_export_tool_spark.mamba.reports import sql_report
+    from data_export_tool_spark.mamba.schemas import follow_up_shard_assignment
+
+    flag = "transferred_in_check_this_for_all_t"
+    shard = follow_up_shard_assignment()[flag]
+    assert shard > 1  # the broken shard 1 is probed first
+    window = resolve_report_window("Sene", 2015)
+    session = spark.newSession()
+    session.createDataFrame(
+        [(1, 10, window.start)],
+        "encounter_id long, client_id long, follow_up_date_followup_ date",
+    ).createOrReplaceTempView("mamba_flat_encounter_follow_up")
+    session.createDataFrame(
+        [(1, "Yes")], f"encounter_id long, {flag} string"
+    ).createOrReplaceTempView(f"mamba_flat_encounter_follow_up_{shard}")
+    session.range(1).selectExpr("id AS encounter_id").createOrReplaceTempView("src")
+    session.sql(
+        "CREATE TEMPORARY VIEW mamba_flat_encounter_follow_up_1 AS SELECT * FROM src"
+    )
+    session.catalog.dropTempView("src")
+    assert session.catalog.tableExists("mamba_flat_encounter_follow_up_1")
+    with pytest.raises(AnalysisException):
+        sql_report(
+            session, "Tx_Curr_OutComeList", _TI_SQL, window.as_params(), wide=False
+        )
 
 
 def test_rewrite_follow_up_assembly_hvl_text():

@@ -20,6 +20,7 @@ from data_export_tool_spark.mamba.fixtures import (
     create_fixture_frames,
     write_fixture_parquet,
 )
+from data_export_tool_spark.mamba.linelists import LINELISTS
 from data_export_tool_spark.plans.dialect import (
     install_duckdb_macros,
     shim_mysql_to_duckdb,
@@ -268,13 +269,7 @@ def test_tx_curr_cca_new_linelist_parity(spark, fixture_env):
 # ---- transpile path: every reference report through spark.sql ------------
 
 
-def _report_names():
-    from data_export_tool_spark.mamba.reports import REPORT_NAMES
-
-    return REPORT_NAMES
-
-
-@pytest.mark.parametrize("name", _report_names())
+@pytest.mark.parametrize("name", list(LINELISTS))
 def test_reference_report_transpile_parity(name, spark, fixture_env):
     """S2 (SURVEY.md §2a): the reference's own query text, shimmed and
     executed by Catalyst, must match the same text shimmed for DuckDB —

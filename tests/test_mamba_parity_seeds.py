@@ -22,6 +22,7 @@ from data_export_tool_spark.mamba.fixtures import (
     WINDOW_START,
     create_fixture_frames,
 )
+from data_export_tool_spark.mamba.linelists import LINELISTS
 from data_export_tool_spark.plans.dialect import (
     install_duckdb_macros,
     shim_mysql_to_duckdb,
@@ -48,25 +49,6 @@ EXTRA_SEEDS = tuple(
 )
 
 
-def _report_pairs():
-    from data_export_tool_spark.mamba import linelists as LL
-
-    return [
-        ("Tx_Curr_LineList", LL.tx_curr_linelist),
-        ("Tx_Curr_OutComeList", LL.tx_curr_outcome),
-        ("Tx_Curr_VLTestReceived_LineList", LL.tx_curr_vl_received_linelist),
-        ("Tx_Curr_CCA_LineList", LL.tx_curr_cca_linelist),
-        ("Tx_Curr_TPT_LineList", LL.tx_curr_tpt_linelist),
-        ("PMTCT_Maternal_LineList", LL.pmtct_maternal_linelist),
-        ("PMTCT_HEI_LineList", LL.pmtct_hei_linelist),
-        ("Tx_Curr_HVL_LineList", LL.tx_curr_hvl_linelist),
-        ("Tx_Curr_AHD_LineList", LL.tx_curr_ahd_linelist),
-        ("Tx_Curr_VLEligible_LineList", LL.tx_curr_vl_eligible_linelist),
-        ("Tx_Curr_VLEligibleNew_LineList", LL.tx_curr_vl_eligible_new_linelist),
-        ("Tx_Curr_CCANew_LineList", LL.tx_curr_cca_new_linelist),
-    ]
-
-
 @pytest.fixture(scope="module", params=EXTRA_SEEDS, ids=lambda s: f"seed{s}")
 def seeded_env(request, spark, tmp_path_factory):
     seed = request.param
@@ -81,13 +63,12 @@ def seeded_env(request, spark, tmp_path_factory):
     return seed, frames, con
 
 
-@pytest.mark.parametrize("query_file", [n for n, _ in _report_pairs()])
+@pytest.mark.parametrize("query_file", list(LINELISTS))
 def test_linelist_parity_across_seeds(query_file, spark, seeded_env):
     from data_export_tool_spark.mamba.reports import QUERY_PATCHES
 
     seed, frames, con = seeded_env
-    builder = dict(_report_pairs())[query_file]
-    mine = builder(frames, WINDOW_START, WINDOW_END).toPandas()
+    mine = LINELISTS[query_file](frames, WINDOW_START, WINDOW_END).toPandas()
     sql = open(os.path.join(REFERENCE_SQL_DIR, f"{query_file}.sql")).read()
     oracle = con.sql(
         shim_mysql_to_duckdb(sql, PARAMS, QUERY_PATCHES.get(query_file))
@@ -101,6 +82,6 @@ def test_seeded_corpora_are_nontrivial(spark, seeded_env):
     seed, frames, con = seeded_env
     total = sum(
         builder(frames, WINDOW_START, WINDOW_END).count()
-        for _, builder in _report_pairs()
+        for builder in LINELISTS.values()
     )
     assert total > 100, f"seed {seed} produced a near-empty corpus ({total} rows)"
