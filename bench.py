@@ -4,7 +4,7 @@ Prints ONE COMPACT JSON line (the driver captures only the final ~2000
 characters of stdout, so the line carries just the headline fields):
     {"metric":"catalog_total_wall","value":<total_sec>,"unit":"sec",
      "queries":{"q01_...":sec,...},"sf":0.1,"loadavg_1m":...,
-     "global_shift":...,"regressions":[...],"subset_total_r03":...}
+     "global_shift":...,"regressions":[...],...}
 Everything bulky (per-query spreads, prev-round deltas, protocol
 notes) goes to BENCH_DETAIL.json in the repo root instead.
 
@@ -21,8 +21,8 @@ Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
 Protocol (BASELINE.md "Measurement protocol"): warm the JVM, then per
 query discard the first run and report the MEDIAN of the next
 SPARK_GRAFT_BENCH_RUNS runs — single-run numbers at this scale carry
-±40% JVM/page-cache noise (BENCH_r01: 52.55s vs a 38.3s clean run of
-the same commit). Execution is measured with a `noop` sink (full
+±40% JVM/page-cache noise (one early run: 52.55s vs a 38.3s clean run
+of the same commit). Execution is measured with a `noop` sink (full
 pipeline runs, nothing is collected to the driver) — the number is the
 engine, not pandas conversion.
 
@@ -213,8 +213,8 @@ def main() -> None:
         return
 
     # ---- parent: idle gate, fan chunks out, merge, report ----
-    # quiet-machine gate (VERDICT r8 #1): BENCH_r08 ran at loadavg 5.61
-    # and its numbers were uninterpretable (spreads to 14.7 s, 11
+    # quiet-machine gate (VERDICT r8 #1): a round-8 bench ran at loadavg
+    # 5.61 and its numbers were uninterpretable (spreads to 14.7 s, 11
     # phantom regressions). Before timing anything, WAIT for the 1-min
     # load to drop under the threshold — warn-and-proceed after the
     # budget rather than refuse, because a refusal would leave the
@@ -364,38 +364,7 @@ def main() -> None:
         # generation) — makes the memoized entries' medians auditable
         "cold_costs": cold_costs,
     }
-    # the catalog GROWS round over round, so the headline total is not
-    # comparable across rounds; also publish the total over exactly the
-    # query set of each earlier round's recorded bench
-    import glob
-
-    latest_prev: dict[str, float] = {}
-    prev_detail: dict = {}
-    for prior in sorted(glob.glob(os.path.join(HERE, "BENCH_r*.json"))):
-        try:
-            with open(prior) as fh:
-                prev = json.load(fh)
-            # driver-recorded files wrap the bench line under "parsed"
-            prev = prev.get("parsed", prev) or {}
-            if prev.get("sf") != sf:  # deltas only make sense at equal scale
-                continue
-            shared = [q for q in prev.get("queries", {}) if q in timings]
-            if shared:
-                tag = os.path.basename(prior)[len("BENCH_") : -len(".json")]
-                # only the LATEST comparable subset rides in the compact
-                # stdout line (capture-window budget); every round's
-                # subset lands in the detail file
-                detail[f"subset_total_{tag}"] = round(
-                    sum(timings[q] for q in shared), 3
-                )
-                out[f"subset_total_{tag}"] = detail[f"subset_total_{tag}"]
-                for k in [k for k in out if k.startswith("subset_total_") and k != f"subset_total_{tag}"]:
-                    del out[k]
-                latest_prev = prev["queries"]
-        except (OSError, ValueError):
-            continue
-
-    # per-query regression guard vs the latest committed round: flag a
+    # per-query regression guard vs the committed BENCH_DETAIL.json: flag a
     # slip when, after normalizing out the whole-run shift, the delta
     # exceeds ALL of (a) 35% of the prior time, (b) this run's own
     # observed noise spread, and (c) a 0.35 s absolute floor.
@@ -413,42 +382,40 @@ def main() -> None:
     # floor under which this host simply cannot testify. A real
     # regression (r3's d13 +2.06 s / +54%) clears all three
     # comfortably.
-    # b-set baselines live in the committed previous-round
-    # BENCH_DETAIL.json (they left the compact line for the capture
-    # budget); merge them in UNDER the driver-recorded values
+    # baseline: its queries_full table, compared only at equal scale
+    baseline: dict[str, float] = {}
     try:
         with open(os.path.join(HERE, "BENCH_DETAIL.json")) as fh:
             prev_detail = json.load(fh)
         if prev_detail.get("sf") == sf:
-            for q, t in prev_detail.get("queries_full", {}).items():
-                latest_prev.setdefault(q, t)
+            baseline = prev_detail.get("queries_full", {})
     except (OSError, ValueError):
         prev_detail = {}
-    shared = [q for q in timings if q in latest_prev]
+    shared = [q for q in timings if q in baseline]
     if shared:  # median() raises on empty (disjoint query sets)
         shift = statistics.median(
-            timings[q] / max(latest_prev[q], 1e-9) for q in shared
+            timings[q] / max(baseline[q], 1e-9) for q in shared
         )
         out["global_shift"] = round(shift, 3)
         detail["prev_deltas"] = {
-            q: round(timings[q] - latest_prev[q], 3) for q in sorted(shared)
+            q: round(timings[q] - baseline[q], 3) for q in sorted(shared)
         }
         out["regressions"] = sorted(
             q
             for q in shared
-            if timings[q] / shift - latest_prev[q]
-            > max(0.35 * latest_prev[q], spreads[q], 0.35)
+            if timings[q] / shift - baseline[q]
+            > max(0.35 * baseline[q], spreads[q], 0.35)
         )
         # second tier (VERDICT r9 #5): tight-spread creep — deltas too
         # small for the hard criterion but too consistent to ignore
         # (r9's b44 +33%/0.225 s spread slipped through). Detail-only:
         # the compact line's capture budget stays intact.
         detail["watch_deltas"] = {
-            q: round(timings[q] / shift - latest_prev[q], 3)
+            q: round(timings[q] / shift - baseline[q], 3)
             for q in sorted(shared)
             if q not in set(out["regressions"])
-            and timings[q] / shift - latest_prev[q]
-            > max(0.2 * latest_prev[q], 1.5 * spreads[q], 0.1)
+            and timings[q] / shift - baseline[q]
+            > max(0.2 * baseline[q], 1.5 * spreads[q], 0.1)
         }
     # isolated entries' numbers come from a different protocol (fresh
     # single-entry JVM replacing an unsettled chunk measure) — mark

@@ -29,13 +29,12 @@ from pyspark.sql import DataFrame
 from data_export_tool_spark.mamba.schemas import NUM_SHARDS
 
 
-def assemble_follow_up(
-    tables: Mapping[str, DataFrame], cache: bool = True
-) -> DataFrame:
+def assemble_follow_up(tables: Mapping[str, DataFrame]) -> DataFrame:
     """11-way LEFT JOIN of the follow-up shards into the wide logical
-    encounter table. ``tables`` maps mamba table names to DataFrames."""
+    encounter table. ``tables`` maps mamba table names to DataFrames.
+    Returns the uncached plan; a caller that reuses it caches it."""
     wide = tables["mamba_flat_encounter_follow_up"]
     for i in range(1, NUM_SHARDS):
         shard = tables[f"mamba_flat_encounter_follow_up_{i}"]
         wide = wide.join(shard, on="encounter_id", how="left")
-    return wide.cache() if cache else wide
+    return wide

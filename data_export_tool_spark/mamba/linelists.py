@@ -42,7 +42,6 @@ from data_export_tool_spark.functions.datetime_ext import (
     period_diff_months,
 )
 from data_export_tool_spark.functions.ethiopian import eth_date_str
-from data_export_tool_spark.mamba.follow_up import assemble_follow_up
 from data_export_tool_spark.mamba.schemas import HEI_IMMUNIZATION_FLAGS
 from data_export_tool_spark.operators.pivot import conditional_agg
 from data_export_tool_spark.operators.window_dedup import (
@@ -62,7 +61,7 @@ def tx_curr_linelist(
     tables: Mapping[str, DataFrame],
     report_start: dt.date,
     report_end: dt.date,
-    follow_up: DataFrame | None = None,
+    follow_up: DataFrame,
 ) -> DataFrame:
     """Tx_Curr_LineList — one row per current-on-ART patient
     (Tx_Curr_LineList.sql:1-157).
@@ -74,10 +73,9 @@ def tx_curr_linelist(
     (:156) → the 40-column projection (:88-152).
     """
     end = F.lit(report_end.isoformat()).cast("date")
-    fu_wide = follow_up if follow_up is not None else assemble_follow_up(tables)
 
     # FollowUp CTE projection (:1-28) — rename to the reference's aliases
-    fu = fu_wide.select(
+    fu = follow_up.select(
         F.col("encounter_id"),
         F.col("client_id").alias("PatientId"),
         F.col("follow_up_status"),
@@ -222,7 +220,7 @@ def tx_curr_outcome(
     tables: Mapping[str, DataFrame],
     report_start: dt.date,
     report_end: dt.date,
-    follow_up: DataFrame | None = None,
+    follow_up: DataFrame,
 ) -> DataFrame:
     """Tx_Curr_OutComeList — single-row cohort-transition counters
     (Tx_Curr_OutComeList.sql:1-259).
@@ -241,9 +239,8 @@ def tx_curr_outcome(
     end = F.lit(report_end.isoformat()).cast("date")
     prev_end = F.date_add(F.lit(report_start.isoformat()).cast("date"), -1)
 
-    fu_wide = follow_up if follow_up is not None else assemble_follow_up(tables)
     client = tables["mamba_dim_client"]
-    fu = fu_wide.join(
+    fu = follow_up.join(
         client.select("client_id", "date_of_birth"), "client_id", "inner"
     ).select(
         "encounter_id",
@@ -412,7 +409,7 @@ def tx_curr_vl_received_linelist(
     tables: Mapping[str, DataFrame],
     report_start: dt.date,
     report_end: dt.date,
-    follow_up: DataFrame | None = None,
+    follow_up: DataFrame,
 ) -> DataFrame:
     """Tx_Curr_VLTestReceived_LineList — one row per patient with a VL
     result in the last 365 days (Tx_Curr_VLTestReceived_LineList.sql).
@@ -425,9 +422,8 @@ def tx_curr_vl_received_linelist(
     ``GROUP BY client_id, encounter_id`` (A5) is dropped.
     """
     end = F.lit(report_end.isoformat()).cast("date")
-    fu_wide = follow_up if follow_up is not None else assemble_follow_up(tables)
 
-    fu = fu_wide.select(
+    fu = follow_up.select(
         "client_id",
         "encounter_id",
         F.col("date_viral_load_results_received").alias("viral_load_perform_date"),
@@ -549,7 +545,7 @@ def tx_curr_cca_linelist(
     tables: Mapping[str, DataFrame],
     report_start: dt.date,
     report_end: dt.date,
-    follow_up: DataFrame | None = None,
+    follow_up: DataFrame,
 ) -> DataFrame:
     """Tx_Curr_CCA_LineList — cervical-cancer screening line list
     (Tx_Curr_CCA_LineList.sql).
@@ -561,7 +557,6 @@ def tx_curr_cca_linelist(
     oracle. The self-conjunct duplicate null-guard (:48-49) folds away.
     """
     end = F.lit(report_end.isoformat()).cast("date")
-    fu_wide = follow_up if follow_up is not None else assemble_follow_up(tables)
 
     screen_date = (
         F.when(F.col("colposcopy_exam_date").isNotNull(), F.col("colposcopy_exam_date"))
@@ -586,7 +581,7 @@ def tx_curr_cca_linelist(
             F.col("follow_up_date_followup_"),
         )
     )
-    fu = fu_wide.select(
+    fu = follow_up.select(
         "encounter_id",
         "client_id",
         F.col("follow_up_date_followup_").alias("follow_up_date"),
@@ -723,7 +718,7 @@ def tx_curr_tpt_linelist(
     tables: Mapping[str, DataFrame],
     report_start: dt.date,
     report_end: dt.date,
-    follow_up: DataFrame | None = None,
+    follow_up: DataFrame,
 ) -> DataFrame:
     """Tx_Curr_TPT_LineList — TB-preventive-therapy line list, one row
     per on-treatment patient (Tx_Curr_TPT_LineList.sql:1-201).
@@ -737,9 +732,8 @@ def tx_curr_tpt_linelist(
     ``art_start_date <= REPORT_END_DATE`` and folds away.
     """
     end = F.lit(report_end.isoformat()).cast("date")
-    fu_wide = follow_up if follow_up is not None else assemble_follow_up(tables)
 
-    fu = fu_wide.select(
+    fu = follow_up.select(
         "encounter_id",
         "client_id",
         F.col("date_of_event").alias("hiv_confirmed_date"),
@@ -925,7 +919,7 @@ def pmtct_maternal_linelist(
     tables: Mapping[str, DataFrame],
     report_start: dt.date,
     report_end: dt.date,
-    follow_up: DataFrame | None = None,
+    follow_up: DataFrame,
 ) -> DataFrame:
     """PMTCT_Maternal_LineList — one row per PMTCT enrollment episode
     (PMTCT_Maternal_LineList.sql:1-177).
@@ -943,7 +937,6 @@ def pmtct_maternal_linelist(
     (encounter_id DESC on the VL windows).
     """
     end = F.lit(report_end.isoformat()).cast("date")
-    fu_wide = follow_up if follow_up is not None else assemble_follow_up(tables)
 
     # Enrollment / Discharge ranked positionally (:1-22)
     enr = ranked(
@@ -994,7 +987,7 @@ def pmtct_maternal_linelist(
     )
 
     # FollowUp projection (:44-100) from the cached wide view
-    fu = fu_wide.select(
+    fu = follow_up.select(
         "encounter_id",
         F.col("client_id").alias("PatientId"),
         "follow_up_status",
@@ -1422,7 +1415,7 @@ def tx_curr_hvl_linelist(
     tables: Mapping[str, DataFrame],
     report_start: dt.date,
     report_end: dt.date,
-    follow_up: DataFrame | None = None,
+    follow_up: DataFrame,
 ) -> DataFrame:
     """Tx_Curr_HVL_LineList — high-viral-load cohort with the
     confirmatory-test follow-through (Tx_Curr_HVL_LineList.sql:1-357).
@@ -1441,7 +1434,6 @@ def tx_curr_hvl_linelist(
 
     end = F.lit(report_end.isoformat()).cast("date")
     end_minus_6m = F.add_months(end, -6)
-    fu_wide = follow_up if follow_up is not None else assemble_follow_up(tables)
 
     # FollowUp CTE projection (:1-61)
     _EAC_REPEAT = (
@@ -1452,7 +1444,7 @@ def tx_curr_hvl_linelist(
         "Viral load after EAC: confirmatory viral load where initial viral "
         "load greater than 1000 copies per ml"
     )
-    fu = fu_wide.select(
+    fu = follow_up.select(
         "encounter_id",
         "client_id",
         F.col("follow_up_date_followup_").alias("follow_up_date"),
@@ -1815,7 +1807,7 @@ def tx_curr_ahd_linelist(
     tables: Mapping[str, DataFrame],
     report_start: dt.date,
     report_end: dt.date,
-    follow_up: DataFrame | None = None,
+    follow_up: DataFrame,
 ) -> DataFrame:
     """Tx_Curr_AHD_LineList — advanced-HIV-disease profile of the
     on-treatment cohort (Tx_Curr_AHD_LineList.sql:1-428).
@@ -1835,9 +1827,8 @@ def tx_curr_ahd_linelist(
     share that single partitioning.
     """
     end = F.lit(report_end.isoformat()).cast("date")
-    fu_wide = follow_up if follow_up is not None else assemble_follow_up(tables)
 
-    fu = fu_wide.select(
+    fu = follow_up.select(
         "encounter_id",
         F.col("client_id").alias("PatientId"),
         "follow_up_status",
@@ -2223,7 +2214,7 @@ def tx_curr_vl_eligible_linelist(
     tables: Mapping[str, DataFrame],
     report_start: dt.date,
     report_end: dt.date,
-    follow_up: DataFrame | None = None,
+    follow_up: DataFrame,
 ) -> DataFrame:
     """Tx_Curr_VLEligible_LineList — next-VL-eligibility date per
     on-treatment patient (Tx_Curr_VLEligible_LineList.sql:1-267).
@@ -2235,9 +2226,8 @@ def tx_curr_vl_eligible_linelist(
     (QUERY_PATCHES policy, SURVEY.md §4.5).
     """
     end = F.lit(report_end.isoformat()).cast("date")
-    fu_wide = follow_up if follow_up is not None else assemble_follow_up(tables)
 
-    fu = fu_wide.select(
+    fu = follow_up.select(
         "client_id",
         "encounter_id",
         F.col("date_viral_load_results_received").alias("viral_load_perform_date"),
@@ -2462,7 +2452,7 @@ def tx_curr_vl_eligible_new_linelist(
     tables: Mapping[str, DataFrame],
     report_start: dt.date,
     report_end: dt.date,
-    follow_up: DataFrame | None = None,
+    follow_up: DataFrame,
 ) -> DataFrame:
     """Tx_Curr_VLEligibleNew_LineList — the revised VL-eligibility
     algorithm (Tx_Curr_VLEligibleNew_LineList.sql:1-569).
@@ -2484,9 +2474,8 @@ def tx_curr_vl_eligible_new_linelist(
     start = F.lit(report_start.isoformat()).cast("date")
     end = F.lit(report_end.isoformat()).cast("date")
     sentinel = F.to_date(F.lit("1900-01-01"))
-    fu_wide = follow_up if follow_up is not None else assemble_follow_up(tables)
 
-    fu = fu_wide.select(
+    fu = follow_up.select(
         "client_id",
         "encounter_id",
         F.col("date_viral_load_results_received").alias("viral_load_perform_date"),
@@ -2784,7 +2773,7 @@ def tx_curr_cca_new_linelist(
     tables: Mapping[str, DataFrame],
     report_start: dt.date,
     report_end: dt.date,
-    follow_up: DataFrame | None = None,
+    follow_up: DataFrame,
 ) -> DataFrame:
     """Tx_Curr_CCANew_LineList — cervical-cancer screening cascade, new
     format (Tx_Curr_CCANew_LineList.sql:1-530).
@@ -2797,9 +2786,8 @@ def tx_curr_cca_new_linelist(
     """
     start = F.lit(report_start.isoformat()).cast("date")
     end = F.lit(report_end.isoformat()).cast("date")
-    fu_wide = follow_up if follow_up is not None else assemble_follow_up(tables)
 
-    fu = fu_wide.select(
+    fu = follow_up.select(
         "encounter_id",
         "client_id",
         F.col("follow_up_date_followup_").alias("follow_up_date"),

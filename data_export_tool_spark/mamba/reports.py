@@ -110,7 +110,7 @@ def ensure_follow_up_wide(session: SparkSession) -> DataFrame | None:
     shards = {n: session.table(n) for n in names}
     if not all("encounter_id" in df.columns for df in shards.values()):
         return None
-    wide = assemble_follow_up(shards, cache=False)
+    wide = assemble_follow_up(shards)
     wide.createOrReplaceTempView(FOLLOW_UP_WIDE_VIEW)
     return wide.cache() if wide.storageLevel == StorageLevel.NONE else wide
 

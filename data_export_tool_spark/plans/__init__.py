@@ -2,4 +2,3 @@
 dialect shim, and the parameterized query registry (SURVEY.md §3/§7)."""
 
 from data_export_tool_spark.plans.report_window import resolve_report_window  # noqa: F401
-from data_export_tool_spark.plans.dialect import shim_mysql_sql  # noqa: F401

@@ -228,21 +228,6 @@ def substitute_params(sql: str, params: dict[str, str]) -> str:
     return sql
 
 
-def shim_mysql_sql(sql: str, params: dict[str, str] | None = None) -> str:
-    """Full shim: comments → PERIOD_DIFF → DATE_ADD/SUB → DATE_FORMAT
-    → ISNULL → CURDATE → params."""
-    out = _strip_hash_comments(sql)
-    out = _rewrite_calls(out, "PERIOD_DIFF", _render_period_diff)
-    out = _rewrite_calls(out, "DATE_ADD", _render_date_addsub(+1))
-    out = _rewrite_calls(out, "DATE_SUB", _render_date_addsub(-1))
-    out = _rewrite_calls(out, "DATE_FORMAT", _render_date_format)
-    out = _rewrite_calls(out, "ISNULL", _render_isnull)
-    out = re.sub(r"\bCURDATE\s*\(\s*\)", "current_date()", out, flags=re.IGNORECASE)
-    if params:
-        out = substitute_params(out, params)
-    return out
-
-
 # --------------------------------------------------------------------------
 # DuckDB oracle target: lets the reference's MySQL query text run on
 # DuckDB as the parity oracle for the engine's DataFrame line-lists.
@@ -426,25 +411,9 @@ def _render_eth_fn(args: list[str]) -> str:
     return _eth_inline_expr(args[0])
 
 
-def shim_mysql_to_spark(
-    sql: str,
-    params: dict[str, str] | None = None,
-    patches: list[tuple[str, str]] | None = None,
-) -> str:
-    """Rewrite the reference's MySQL text into Spark SQL.
-
-    Superset of ``shim_mysql_sql``: also inlines the Ethiopian-calendar
-    stored function as column arithmetic and applies the MySQL
-    truthiness quirk rewrites (Spark refuses string-typed CASE
-    conditions even in non-ANSI mode). ``patches`` are per-query
-    (regex, replacement) pairs applied first — used for
-    semantics-preserving structural rewrites the text shim can't do
-    generically (loose GROUP BY drops, correlated-LIMIT-1
-    decorrelation).
-
-    Run the result with ``spark.sql.ansi.enabled=false`` for MySQL's
-    lenient cast behavior (CAST('abc' AS DECIMAL) → NULL).
-    """
+def _strip_and_patch(sql: str, patches: list[tuple[str, str]] | None) -> str:
+    """Drop ``#`` comments, then apply each per-query (regex,
+    replacement) patch; shared by both shim targets."""
     out = _strip_hash_comments(sql)
     for pat, repl in patches or []:
         out, n = re.subn(pat, repl, out, flags=re.IGNORECASE | re.DOTALL)
@@ -453,6 +422,29 @@ def shim_mysql_to_spark(
             # drifted — the semantics it pins (tie-breaks, GROUP BY
             # drops, TI joins) would be SILENTLY lost; fail loudly
             raise ValueError(f"query patch matched nothing: {pat!r}")
+    return out
+
+
+def shim_mysql_to_spark(
+    sql: str,
+    params: dict[str, str] | None = None,
+    patches: list[tuple[str, str]] | None = None,
+) -> str:
+    """Rewrite the reference's MySQL text into Spark SQL.
+
+    Comments → PERIOD_DIFF → DATE_ADD/SUB → DATE_FORMAT → ISNULL →
+    CURDATE → params; also inlines the Ethiopian-calendar stored
+    function as column arithmetic and applies the MySQL truthiness
+    quirk rewrites (Spark refuses string-typed CASE conditions even in
+    non-ANSI mode). ``patches`` are per-query (regex, replacement)
+    pairs applied first — used for semantics-preserving structural
+    rewrites the text shim can't do generically (loose GROUP BY drops,
+    correlated-LIMIT-1 decorrelation).
+
+    Run the result with ``spark.sql.ansi.enabled=false`` for MySQL's
+    lenient cast behavior (CAST('abc' AS DECIMAL) → NULL).
+    """
+    out = _strip_and_patch(sql, patches)
     out = _rewrite_calls(out, "fn_gregorian_to_ethiopian_calendar", _render_eth_fn)
     out = _rewrite_calls(out, "PERIOD_DIFF", _render_period_diff)
     out = _rewrite_calls(out, "DATE_ADD", _render_date_addsub(+1))
@@ -476,14 +468,7 @@ def shim_mysql_to_duckdb(
     ``install_duckdb_macros`` on the connection). ``patches`` as in
     ``shim_mysql_to_spark`` — both targets get identical structural
     rewrites so the oracle comparison stays apples-to-apples."""
-    out = _strip_hash_comments(sql)
-    for pat, repl in patches or []:
-        out, n = re.subn(pat, repl, out, flags=re.IGNORECASE | re.DOTALL)
-        if n == 0:
-            # a patch that no longer matches means the reference SQL
-            # drifted — the semantics it pins (tie-breaks, GROUP BY
-            # drops, TI joins) would be SILENTLY lost; fail loudly
-            raise ValueError(f"query patch matched nothing: {pat!r}")
+    out = _strip_and_patch(sql, patches)
     out = _TSDIFF_RE.sub(lambda m: f"mysql_tsdiff_{m.group(1).lower()}(", out)
     out = _rewrite_calls(
         out, "PERIOD_DIFF", lambda a: _render_period_diff(a, int_div="//")

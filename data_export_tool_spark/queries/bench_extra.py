@@ -6,7 +6,7 @@ landed after the freeze still need their wall-time guarded round over
 round, so ``bench.py`` appends these specs to its run set. Each one
 exercises an operator whose correctness evidence lives in pytest
 (DuckDB / independent-reference parity, summarized machine-readably in
-``OPCHECK_r{N}.json``): funnel + retention (operators/funnel.py),
+``OPCHECK.json``): funnel + retention (operators/funnel.py),
 time-series resample + LOCF gap fill (operators/timeseries.py),
 grouped two-pass heavy hitters (operators/sketch.py), line-level
 corpus dedup (operators/dedup.py), and HTML→text + URL

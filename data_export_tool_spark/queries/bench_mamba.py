@@ -79,7 +79,7 @@ def fixture_warehouse(
         COLD_COSTS["mb_fixture_parquet_sec"] = round(time.perf_counter() - t0, 3)
         frames = {t: spark.read.parquet(p) for t, p in paths.items()}
         t0 = time.perf_counter()
-        wide = assemble_follow_up(frames, cache=True)
+        wide = assemble_follow_up(frames).cache()
         wide.count()  # materialize the cache so report runs don't pay it
         COLD_COSTS["mb_wide_cache_sec"] = round(time.perf_counter() - t0, 3)
         _WAREHOUSES[key] = (frames, wide)
@@ -92,7 +92,7 @@ def mb_wide_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_export_tool_spark.mamba.follow_up import assemble_follow_up
 
     frames, _ = fixture_warehouse(spark, _scaled_n(sf_dir))
-    return assemble_follow_up(frames, cache=False)
+    return assemble_follow_up(frames)
 
 
 #: entry name → (report, docstring), in ``QUERIES`` order

@@ -18,7 +18,7 @@ def pytest_collection_modifyitems(config, items):
        contracts + 10⁵ hot-key tests already cover, so the default run
        skips it. SPARK_GRAFT_STRESS=1 arms it.
     2. The slow tier (r11, VERDICT r10 #2): the full suite grew past
-       the driver's verify window (~32 min; VERIFY_r10 recorded
+       the driver's verify window (~32 min; the r10 verify recorded
        tests_ok=false on a mid-run truncation with zero failures).
        tests/slow_tests.txt lists the heavy functions (streaming
        parity, property fuzz, seed corpora — each re-proved by the
@@ -97,19 +97,6 @@ def rdd_lineage_ids(df) -> set[int]:
     return seen
 
 
-def _current_round() -> int | None:
-    """Latest round number from the driver's PROGRESS.jsonl, if any."""
-    import json
-
-    path = os.path.join(os.path.dirname(os.path.dirname(__file__)), "PROGRESS.jsonl")
-    try:
-        with open(path) as fh:
-            rounds = [json.loads(ln).get("round") for ln in fh if ln.strip()]
-        return max(r for r in rounds if isinstance(r, int))
-    except (OSError, ValueError):
-        return None
-
-
 def record_stream_parity(twin: str, rows_compared: int, match: bool) -> None:
     """Append a stream-vs-batch twin parity result to the repo-root
     STREAMPARITY artifact (VERDICT r3 #8: X21–X25 need machine-readable
@@ -118,9 +105,9 @@ def record_stream_parity(twin: str, rows_compared: int, match: bool) -> None:
     one process, so no locking needed."""
     import json
 
-    n = _current_round()
-    name = f"STREAMPARITY_r{n:02d}.json" if n else "STREAMPARITY.json"
-    path = os.path.join(os.path.dirname(os.path.dirname(__file__)), name)
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(__file__)), "STREAMPARITY.json"
+    )
     try:
         with open(path) as fh:
             doc = json.load(fh)
@@ -157,9 +144,7 @@ def record_opcheck(
     not just a still-green floor assertion)."""
     import json
 
-    n = _current_round()
-    name = f"OPCHECK_r{n:02d}.json" if n else "OPCHECK.json"
-    path = os.path.join(os.path.dirname(os.path.dirname(__file__)), name)
+    path = os.path.join(os.path.dirname(os.path.dirname(__file__)), "OPCHECK.json")
     try:
         with open(path) as fh:
             doc = json.load(fh)

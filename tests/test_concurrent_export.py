@@ -143,7 +143,7 @@ def test_export_keeps_a_wide_view_the_caller_cached(spark, tmp_path):
         f"mamba_flat_encounter_follow_up_{i}" for i in range(1, NUM_SHARDS)
     ]
     ids = stored_rdd_ids(spark)
-    held = assemble_follow_up({n: session.table(n) for n in names})
+    held = assemble_follow_up({n: session.table(n) for n in names}).cache()
     try:
         held.count()
         held_ids = stored_rdd_ids(spark) - ids
@@ -267,7 +267,7 @@ def test_native_export_matches_each_builder_written_alone(native_export, tmp_pat
     assert list(written) == list(LINELISTS)
     assert all(written.values()), "every line-list should have rows at this fixture"
     assert {name: _csv_digest(path) for name, path in written.items()} == GOLDEN_DIGESTS
-    wide = assemble_follow_up(frames)
+    wide = assemble_follow_up(frames).cache()
     try:
         for name, builder in LINELISTS.items():
             df = with_facility_columns(

@@ -11,7 +11,7 @@ import zipfile
 
 import pytest
 
-from data_export_tool_spark.plans.dialect import shim_mysql_sql, substitute_params
+from data_export_tool_spark.plans.dialect import shim_mysql_to_spark, substitute_params
 from data_export_tool_spark.plans.registry import (
     FacilityIdentity,
     ReportRegistry,
@@ -344,18 +344,76 @@ def test_cli_reference_config_end_to_end(spark, tmp_path):
     assert not list(tmp_path.glob("*.csv"))
 
 
+def test_cli_config_end_to_end_over_fixture_warehouse(spark, tmp_path, monkeypatch):
+    """python -m data_export_tool_spark with a two-report config over
+    the seeded fixture warehouse: the zip is named from the facility
+    the warehouse's location tables hold, the empty report is skipped,
+    and only ``--keep-csvs`` leaves CSVs behind."""
+    import json
+
+    import data_export_tool_spark.session as session_mod
+    from data_export_tool_spark.__main__ import main
+    from data_export_tool_spark.mamba.facility import lookup_facility_identity
+    from data_export_tool_spark.mamba.fixture_store import (
+        ensure_fixture_parquet,
+        fixture_dir,
+    )
+
+    ensure_fixture_parquet(seed=7, n_patients=60)
+    (tmp_path / "clients.sql").write_text(
+        "SELECT client_id, sex, REPORT_START_DATE AS start_date,"
+        " REPORT_END_DATE AS end_date FROM mamba_dim_client"
+    )
+    (tmp_path / "empty.sql").write_text(
+        "SELECT client_id FROM mamba_dim_client WHERE client_id < 0"
+    )
+    config = tmp_path / "export_config.json"
+    config.write_text(
+        json.dumps({"queries_path": {"Clients": "clients.sql", "Empty": "empty.sql"}})
+    )
+    # the CLI registers its views on this session, not the shared one
+    session = spark.newSession()
+    monkeypatch.setattr(session_mod, "get_spark", lambda *a, **k: session)
+
+    def run(out, *extra):
+        return main(
+            [
+                "--config", str(config),
+                "--month", "Sene",
+                "--year", "2015",
+                "--out", str(out),
+                "--parquet-warehouse", fixture_dir(seed=7, n_patients=60),
+                *extra,
+            ]
+        )
+
+    assert run(tmp_path / "out") == 0
+    facility = lookup_facility_identity(session)
+    zip_name = (
+        f"{facility.facility_sanitized}{facility.hmis_code}_Sene_2015_packaged18.zip"
+    )
+    assert [p.name for p in (tmp_path / "out").iterdir()] == [zip_name]
+
+    assert run(tmp_path / "kept", "--keep-csvs") == 0
+    assert sorted(p.name for p in (tmp_path / "kept").glob("*.csv")) == [
+        f"Clients_{facility.facility_sanitized}{facility.hmis_sanitized}"
+        "_Sene_2015.csv"
+    ]
+    assert (tmp_path / "kept" / zip_name).exists()
+
+
 # ---- dialect shim (§4/§7.4) ------------------------------------------------
 
 
 def test_shim_strips_hash_comments():
     sql = "SELECT a # trailing comment\nFROM t WHERE s = 'keep # this'"
-    out = shim_mysql_sql(sql)
+    out = shim_mysql_to_spark(sql)
     assert "trailing" not in out
     assert "keep # this" in out
 
 
 def test_shim_isnull_rewrite(spark):
-    out = shim_mysql_sql("SELECT ISNULL(x) FROM t")
+    out = shim_mysql_to_spark("SELECT ISNULL(x) FROM t")
     assert "CASE WHEN x IS NULL THEN 1 ELSE 0 END" in out
     spark.createDataFrame([(None,), (5,)], "x int").createOrReplaceTempView("t")
     vals = sorted(r[0] for r in spark.sql(out).collect())
@@ -367,7 +425,7 @@ def test_shim_period_diff(spark):
     spark.createDataFrame(
         [(dt.date(2020, 1, 31), dt.date(2020, 3, 1))], "a date, b date"
     ).createOrReplaceTempView("t")
-    assert spark.sql(shim_mysql_sql(sql)).first().m == 2
+    assert spark.sql(shim_mysql_to_spark(sql)).first().m == 2
 
 
 def test_shim_date_add_expression(spark):
@@ -376,7 +434,7 @@ def test_shim_date_add_expression(spark):
     spark.createDataFrame(
         [(dt.date(2020, 1, 1), 2)], "d date, n int"
     ).createOrReplaceTempView("t")
-    row = spark.sql(shim_mysql_sql(sql)).first()
+    row = spark.sql(shim_mysql_to_spark(sql)).first()
     assert row.x == dt.date(2021, 12, 31)
     assert row.y == dt.date(2019, 7, 1)
 
@@ -390,7 +448,7 @@ def test_shim_param_substitution():
 
 
 def test_shim_curdate(spark):
-    out = shim_mysql_sql("SELECT CURDATE() AS today")
+    out = shim_mysql_to_spark("SELECT CURDATE() AS today")
     assert "current_date()" in out
     assert spark.sql(out).first().today == dt.date.today()
 

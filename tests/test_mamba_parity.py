@@ -50,6 +50,17 @@ def fixture_env(spark, tmp_path_factory):
     return frames, con, paths
 
 
+@pytest.fixture(scope="module")
+def wide(fixture_env):
+    """The fixtures' cached follow-up wide view, shared by every
+    builder that reads it."""
+    from data_export_tool_spark.mamba.follow_up import assemble_follow_up
+
+    view = assemble_follow_up(fixture_env[0]).cache()
+    yield view
+    view.unpersist()
+
+
 def _canon(pdf):
     """Order-insensitive canonical rows; midnight timestamps equal
     dates; integral floats equal ints (DuckDB HUGEINT aggregates reach
@@ -112,23 +123,23 @@ def _assert_parity(mine_pdf, oracle_pdf, query_file: str):
     assert not mismatches, f"{query_file}: first diffs {mismatches[:2]}"
 
 
-def test_tx_curr_linelist_parity(spark, fixture_env):
+def test_tx_curr_linelist_parity(spark, fixture_env, wide):
     from data_export_tool_spark.mamba.linelists import tx_curr_linelist
 
     frames, con, _ = fixture_env
-    mine = tx_curr_linelist(frames, WINDOW_START, WINDOW_END).toPandas()
+    mine = tx_curr_linelist(frames, WINDOW_START, WINDOW_END, follow_up=wide).toPandas()
     oracle = _reference_on_duckdb(con, "Tx_Curr_LineList.sql")
     assert len(mine) > 20, "cohort unexpectedly small — fixture drift?"
     _assert_parity(mine, oracle, "Tx_Curr_LineList.sql")
 
 
-def test_tx_curr_outcome_parity(spark, fixture_env):
+def test_tx_curr_outcome_parity(spark, fixture_env, wide):
     from data_export_tool_spark.mamba.linelists import tx_curr_outcome
     from data_export_tool_spark.mamba.reports import QUERY_PATCHES
     from data_export_tool_spark.plans.dialect import shim_mysql_to_duckdb
 
     frames, con, _ = fixture_env
-    mine = tx_curr_outcome(frames, WINDOW_START, WINDOW_END).toPandas()
+    mine = tx_curr_outcome(frames, WINDOW_START, WINDOW_END, follow_up=wide).toPandas()
     sql = open(os.path.join(REFERENCE_SQL_DIR, "Tx_Curr_OutComeList.sql")).read()
     oracle = con.sql(
         shim_mysql_to_duckdb(sql, PARAMS, QUERY_PATCHES.get("Tx_Curr_OutComeList"))
@@ -137,13 +148,13 @@ def test_tx_curr_outcome_parity(spark, fixture_env):
     _assert_parity(mine, oracle, "Tx_Curr_OutComeList.sql")
 
 
-def test_vl_received_linelist_parity(spark, fixture_env):
+def test_vl_received_linelist_parity(spark, fixture_env, wide):
     from data_export_tool_spark.mamba.linelists import tx_curr_vl_received_linelist
     from data_export_tool_spark.mamba.reports import QUERY_PATCHES
     from data_export_tool_spark.plans.dialect import shim_mysql_to_duckdb
 
     frames, con, _ = fixture_env
-    mine = tx_curr_vl_received_linelist(frames, WINDOW_START, WINDOW_END).toPandas()
+    mine = tx_curr_vl_received_linelist(frames, WINDOW_START, WINDOW_END, follow_up=wide).toPandas()
     sql = open(
         os.path.join(REFERENCE_SQL_DIR, "Tx_Curr_VLTestReceived_LineList.sql")
     ).read()
@@ -156,22 +167,22 @@ def test_vl_received_linelist_parity(spark, fixture_env):
     _assert_parity(mine, oracle, "Tx_Curr_VLTestReceived_LineList.sql")
 
 
-def test_cca_linelist_parity(spark, fixture_env):
+def test_cca_linelist_parity(spark, fixture_env, wide):
     from data_export_tool_spark.mamba.linelists import tx_curr_cca_linelist
 
     frames, con, _ = fixture_env
-    mine = tx_curr_cca_linelist(frames, WINDOW_START, WINDOW_END).toPandas()
+    mine = tx_curr_cca_linelist(frames, WINDOW_START, WINDOW_END, follow_up=wide).toPandas()
     oracle = _reference_on_duckdb(con, "Tx_Curr_CCA_LineList.sql")
     assert len(mine) > 0
     _assert_parity(mine, oracle, "Tx_Curr_CCA_LineList.sql")
 
 
-def test_tpt_linelist_parity(spark, fixture_env):
+def test_tpt_linelist_parity(spark, fixture_env, wide):
     from data_export_tool_spark.mamba.linelists import tx_curr_tpt_linelist
     from data_export_tool_spark.mamba.reports import QUERY_PATCHES
 
     frames, con, _ = fixture_env
-    mine = tx_curr_tpt_linelist(frames, WINDOW_START, WINDOW_END).toPandas()
+    mine = tx_curr_tpt_linelist(frames, WINDOW_START, WINDOW_END, follow_up=wide).toPandas()
     sql = open(os.path.join(REFERENCE_SQL_DIR, "Tx_Curr_TPT_LineList.sql")).read()
     oracle = con.sql(
         shim_mysql_to_duckdb(sql, PARAMS, QUERY_PATCHES.get("Tx_Curr_TPT_LineList"))
@@ -180,13 +191,13 @@ def test_tpt_linelist_parity(spark, fixture_env):
     _assert_parity(mine, oracle, "Tx_Curr_TPT_LineList.sql")
 
 
-def test_pmtct_maternal_linelist_parity(spark, fixture_env):
+def test_pmtct_maternal_linelist_parity(spark, fixture_env, wide):
     from data_export_tool_spark.mamba.linelists import pmtct_maternal_linelist
     from data_export_tool_spark.mamba.reports import QUERY_PATCHES
     from data_export_tool_spark.plans.dialect import shim_mysql_to_duckdb
 
     frames, con, _ = fixture_env
-    mine = pmtct_maternal_linelist(frames, WINDOW_START, WINDOW_END).toPandas()
+    mine = pmtct_maternal_linelist(frames, WINDOW_START, WINDOW_END, follow_up=wide).toPandas()
     sql = open(os.path.join(REFERENCE_SQL_DIR, "PMTCT_Maternal_LineList.sql")).read()
     oracle = con.sql(
         shim_mysql_to_duckdb(sql, PARAMS, QUERY_PATCHES.get("PMTCT_Maternal_LineList"))
@@ -205,33 +216,33 @@ def test_pmtct_hei_linelist_parity(spark, fixture_env):
     _assert_parity(mine, oracle, "PMTCT_HEI_LineList.sql")
 
 
-def test_tx_curr_hvl_linelist_parity(spark, fixture_env):
+def test_tx_curr_hvl_linelist_parity(spark, fixture_env, wide):
     from data_export_tool_spark.mamba.linelists import tx_curr_hvl_linelist
 
     frames, con, _ = fixture_env
-    mine = tx_curr_hvl_linelist(frames, WINDOW_START, WINDOW_END).toPandas()
+    mine = tx_curr_hvl_linelist(frames, WINDOW_START, WINDOW_END, follow_up=wide).toPandas()
     oracle = _reference_on_duckdb(con, "Tx_Curr_HVL_LineList.sql")
     assert len(mine) > 0, "HVL cohort empty — fixture drift?"
     _assert_parity(mine, oracle, "Tx_Curr_HVL_LineList.sql")
 
 
-def test_tx_curr_ahd_linelist_parity(spark, fixture_env):
+def test_tx_curr_ahd_linelist_parity(spark, fixture_env, wide):
     from data_export_tool_spark.mamba.linelists import tx_curr_ahd_linelist
 
     frames, con, _ = fixture_env
-    mine = tx_curr_ahd_linelist(frames, WINDOW_START, WINDOW_END).toPandas()
+    mine = tx_curr_ahd_linelist(frames, WINDOW_START, WINDOW_END, follow_up=wide).toPandas()
     oracle = _reference_on_duckdb(con, "Tx_Curr_AHD_LineList.sql")
     assert len(mine) > 20, "AHD cohort unexpectedly small — fixture drift?"
     _assert_parity(mine, oracle, "Tx_Curr_AHD_LineList.sql")
 
 
-def test_tx_curr_vl_eligible_linelist_parity(spark, fixture_env):
+def test_tx_curr_vl_eligible_linelist_parity(spark, fixture_env, wide):
     from data_export_tool_spark.mamba.linelists import tx_curr_vl_eligible_linelist
     from data_export_tool_spark.mamba.reports import QUERY_PATCHES
     from data_export_tool_spark.plans.dialect import shim_mysql_to_duckdb
 
     frames, con, _ = fixture_env
-    mine = tx_curr_vl_eligible_linelist(frames, WINDOW_START, WINDOW_END).toPandas()
+    mine = tx_curr_vl_eligible_linelist(frames, WINDOW_START, WINDOW_END, follow_up=wide).toPandas()
     sql = open(
         os.path.join(REFERENCE_SQL_DIR, "Tx_Curr_VLEligible_LineList.sql")
     ).read()
@@ -244,23 +255,23 @@ def test_tx_curr_vl_eligible_linelist_parity(spark, fixture_env):
     _assert_parity(mine, oracle, "Tx_Curr_VLEligible_LineList.sql")
 
 
-def test_tx_curr_vl_eligible_new_linelist_parity(spark, fixture_env):
+def test_tx_curr_vl_eligible_new_linelist_parity(spark, fixture_env, wide):
     from data_export_tool_spark.mamba.linelists import (
         tx_curr_vl_eligible_new_linelist,
     )
 
     frames, con, _ = fixture_env
-    mine = tx_curr_vl_eligible_new_linelist(frames, WINDOW_START, WINDOW_END).toPandas()
+    mine = tx_curr_vl_eligible_new_linelist(frames, WINDOW_START, WINDOW_END, follow_up=wide).toPandas()
     oracle = _reference_on_duckdb(con, "Tx_Curr_VLEligibleNew_LineList.sql")
     assert len(mine) > 0, "VL-eligible-new cohort empty — fixture drift?"
     _assert_parity(mine, oracle, "Tx_Curr_VLEligibleNew_LineList.sql")
 
 
-def test_tx_curr_cca_new_linelist_parity(spark, fixture_env):
+def test_tx_curr_cca_new_linelist_parity(spark, fixture_env, wide):
     from data_export_tool_spark.mamba.linelists import tx_curr_cca_new_linelist
 
     frames, con, _ = fixture_env
-    mine = tx_curr_cca_new_linelist(frames, WINDOW_START, WINDOW_END).toPandas()
+    mine = tx_curr_cca_new_linelist(frames, WINDOW_START, WINDOW_END, follow_up=wide).toPandas()
     oracle = _reference_on_duckdb(con, "Tx_Curr_CCANew_LineList.sql")
     assert len(mine) > 0, "CCANew cohort empty — fixture drift?"
     _assert_parity(mine, oracle, "Tx_Curr_CCANew_LineList.sql")

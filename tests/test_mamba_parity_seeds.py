@@ -22,6 +22,7 @@ from data_export_tool_spark.mamba.fixtures import (
     WINDOW_START,
     create_fixture_frames,
 )
+from data_export_tool_spark.mamba.follow_up import assemble_follow_up
 from data_export_tool_spark.mamba.linelists import LINELISTS
 from data_export_tool_spark.plans.dialect import (
     install_duckdb_macros,
@@ -60,15 +61,19 @@ def seeded_env(request, spark, tmp_path_factory):
         path = os.path.join(out, name)
         df.write.mode("overwrite").parquet(path)
         con.sql(f"CREATE VIEW {name} AS SELECT * FROM '{path}/*.parquet'")
-    return seed, frames, con
+    wide = assemble_follow_up(frames).cache()
+    yield seed, frames, con, wide
+    wide.unpersist()
 
 
 @pytest.mark.parametrize("query_file", list(LINELISTS))
 def test_linelist_parity_across_seeds(query_file, spark, seeded_env):
     from data_export_tool_spark.mamba.reports import QUERY_PATCHES
 
-    seed, frames, con = seeded_env
-    mine = LINELISTS[query_file](frames, WINDOW_START, WINDOW_END).toPandas()
+    seed, frames, con, wide = seeded_env
+    mine = LINELISTS[query_file](
+        frames, WINDOW_START, WINDOW_END, follow_up=wide
+    ).toPandas()
     sql = open(os.path.join(REFERENCE_SQL_DIR, f"{query_file}.sql")).read()
     oracle = con.sql(
         shim_mysql_to_duckdb(sql, PARAMS, QUERY_PATCHES.get(query_file))
@@ -79,9 +84,9 @@ def test_linelist_parity_across_seeds(query_file, spark, seeded_env):
 def test_seeded_corpora_are_nontrivial(spark, seeded_env):
     """The fuzz only means something if the alternative corpus still
     exercises the cohorts: total line-list rows must be substantial."""
-    seed, frames, con = seeded_env
+    seed, frames, con, wide = seeded_env
     total = sum(
-        builder(frames, WINDOW_START, WINDOW_END).count()
+        builder(frames, WINDOW_START, WINDOW_END, follow_up=wide).count()
         for builder in LINELISTS.values()
     )
     assert total > 100, f"seed {seed} produced a near-empty corpus ({total} rows)"

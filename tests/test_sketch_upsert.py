@@ -595,10 +595,9 @@ def test_stored_quantile_sketches(spark, sf_dir, tmp_path):
     med = float(row["quantiles"][1])
     rk = merge_rank_estimate(spark.read.parquet(store), med).first()["rank_est"]
     ok = ok and abs(float(rk) - 0.5) < 0.035
-    record_opcheck(
-        "stored_quantile_sketch", len(probs) + 2, ok, oracle="duckdb",
-        value=round(float(rk), 6),
-    )
+    # no value=: the KLL rank estimate is randomized, so recording it
+    # would rewrite the committed artifact on an unchanged result
+    record_opcheck("stored_quantile_sketch", len(probs) + 2, ok, oracle="duckdb")
     assert ok, (row, rk)
 
 

@@ -1,6 +1,5 @@
 """Capture one bench/catalog entry's ``explain("formatted")`` plan to a
-file — the before/after plan-diff evidence the optimization rounds
-commit under ``plans/r{N}/``.
+file — before/after plan-diff evidence for an optimization.
 
 Usage: python tools/capture_plan.py <entry_name> <out.txt> [sf_dir]
 

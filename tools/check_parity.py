@@ -62,7 +62,10 @@ def main() -> int:
     from data_export_tool_spark.session import get_spark
     from data_export_tool_spark.queries import all_queries
 
-    spark = get_spark("parity-check")
+    # no console progress bar: its \r fragments would prefix result lines
+    spark = get_spark(
+        "parity-check", extra_conf={"spark.ui.showConsoleProgress": "false"}
+    )
     con = duckdb.connect()
     for t in TESTDATA_TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")

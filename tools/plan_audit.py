@@ -4,7 +4,7 @@ plan for scale anti-patterns, and record the result as an artifact.
 The repo's 100 TB claims live in plan SHAPES (pushed-down scans,
 bounded joins, no row-grain global sorts). Individual plan contracts
 pin the critical operators in pytest; this tool sweeps EVERY entry the
-bench runs and writes ``PLANAUDIT_r{N}.json`` so "the plans are the
+bench runs and writes ``PLANAUDIT.json`` so "the plans are the
 plans we want" is an auditable statement, not prose:
 
 - ``cartesian``: CartesianProduct nodes (a bounded/broadcast cross is
@@ -30,17 +30,6 @@ import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-
-
-def _round_name() -> str:
-    n = None
-    try:
-        with open(os.path.join(REPO, "PROGRESS.jsonl")) as fh:
-            rounds = [json.loads(ln).get("round") for ln in fh if ln.strip()]
-        n = max(r for r in rounds if isinstance(r, int))
-    except (OSError, ValueError):
-        pass
-    return f"PLANAUDIT_r{n:02d}.json" if n else "PLANAUDIT.json"
 
 
 def audit_plan(plan: str) -> dict:
@@ -81,7 +70,7 @@ BOUNDED_GLOBAL_WINDOWS = {
 
 def main() -> int:
     out_path = sys.argv[1] if len(sys.argv) > 1 else os.path.join(
-        REPO, _round_name()
+        REPO, "PLANAUDIT.json"
     )
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001"

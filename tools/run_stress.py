@@ -7,7 +7,7 @@ round instead of a dormant opt-in marker. Usage:
 
     python tools/run_stress.py [out.json] [rows]
 
-Defaults: ``STRESS_r06.json`` in the repo root, rows =
+Defaults: ``STRESS.json`` in the repo root, rows =
 ``SPARK_GRAFT_STRESS_ROWS`` or the tier's 2,000,000 default.
 """
 
@@ -23,23 +23,10 @@ import xml.etree.ElementTree as ET
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _default_out() -> str:
-    """STRESS_r{N}.json for the driver's current round (PROGRESS.jsonl,
-    the conftest.record_opcheck convention) — a hardcoded round number
-    here silently overwrote the PRIOR round's artifact."""
-    n = None
-    try:
-        with open(os.path.join(REPO, "PROGRESS.jsonl")) as fh:
-            rounds = [json.loads(ln).get("round") for ln in fh if ln.strip()]
-        n = max(r for r in rounds if isinstance(r, int))
-    except (OSError, ValueError):
-        pass
-    name = f"STRESS_r{n:02d}.json" if n else "STRESS.json"
-    return os.path.join(REPO, name)
-
-
 def main() -> int:
-    out_path = sys.argv[1] if len(sys.argv) > 1 else _default_out()
+    out_path = sys.argv[1] if len(sys.argv) > 1 else os.path.join(
+        REPO, "STRESS.json"
+    )
     rows = sys.argv[2] if len(sys.argv) > 2 else os.environ.get(
         "SPARK_GRAFT_STRESS_ROWS", "2000000"
     )
