@@ -184,7 +184,10 @@ def test_scan_selectivity_measures_sorted_layout(spark, grid, tmp_path):
     assert after["rows_in_candidates"] >= matching
     assert before["rows_total"] == after["rows_total"] == 40_000
     ok = after["skip_ratio"] > before["skip_ratio"]
+    # no value=: the slice is 1/8 of the noise range, and the range
+    # partitioner's sampled boundaries decide whether one or two of the
+    # 8 files overlap it, so the ratio moves between runs (0.75/0.875)
     record_opcheck(
         "scan_selectivity", after["n_files"] + before["n_files"], ok,
-        oracle="parquet-footer", value=round(after["skip_ratio"], 4),
+        oracle="parquet-footer",
     )
