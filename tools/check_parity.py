@@ -9,10 +9,11 @@ order-insensitive value hash. Usage:
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def canonicalize(df_pandas):
@@ -40,7 +41,6 @@ def canonicalize(df_pandas):
 
 def main() -> int:
     import duckdb
-    import os
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
