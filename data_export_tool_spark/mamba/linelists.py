@@ -9,6 +9,17 @@ and AQE choose them under the session's broadcast threshold, so a
 build side. Citations point at the reference lines being mirrored; no
 SQL text is copied.
 
+A builder keeps the row its window picks. The reference selects a
+client's latest visit with ``ROW_NUMBER() ... WHERE row_num = 1`` in a
+narrow CTE and joins FollowUp back on ``encounter_id`` to fetch the rest
+of the row (Tx_Curr_LineList.sql:153-154 and siblings). A DataFrame
+window carries every column of its input, so the builders window over
+the FollowUp frame they need and read the chosen row directly. This is
+exact: ``encounter_id`` is the wide view's key (the base table's
+primary key, and the shards join 1:1), so the re-join would return
+exactly the row the window chose. Catalyst prunes the window's input to
+the columns read downstream.
+
 ``LINELISTS`` at the end of the module is the one report table: report
 name → builder, in the reference's config order. The driver-gate
 catalog (``queries.mamba_q``), the scaled bench entries
@@ -68,9 +79,9 @@ def tx_curr_linelist(
 
     Pipeline: wide FollowUp (+ latest intake_b per client,
     :48-56) → tx_curr cohort = latest eligible visit per patient
-    (W1 dedup, :58-68) filtered to on-treatment statuses (:80-85) →
-    re-join the full visit row (:153-154) → broadcast dim_client
-    (:156) → the 40-column projection (:88-152).
+    (W1 dedup, :58-68), the whole visit row, filtered to on-treatment
+    statuses (:80-85) → dim_client (:156) → the 40-column projection
+    (:88-152).
     """
     end = F.lit(report_end.isoformat()).cast("date")
 
@@ -121,29 +132,18 @@ def tx_curr_linelist(
         & F.col("art_start_date").isNotNull()
         & (F.col("follow_up_date") <= end)
     )
-    w = Window.partitionBy("PatientId").orderBy(
-        F.col("follow_up_date").desc(), F.col("encounter_id").desc()
-    )
-    tx_curr = (
-        eligible.withColumn("row_num", F.row_number().over(w))
-        .filter(
-            (F.col("row_num") == 1)
-            # on-treatment gate (:83-85)
-            & (F.col("treatment_end_date") >= end)
-            & F.col("follow_up_status").isin("Alive", "Restart medication")
-            & (F.datediff(end, F.col("art_start_date")) >= 0)
-        )
-        .select("encounter_id", "PatientId", "follow_up_status", "art_start_date")
-        .withColumnRenamed("follow_up_status", "tc_follow_up_status")
-        .withColumnRenamed("art_start_date", "tc_art_start_date")
+    tx_curr = latest_per_key(
+        eligible, ["PatientId"], ["follow_up_date"], tiebreak="encounter_id"
+    ).filter(
+        # on-treatment gate (:83-85)
+        (F.col("treatment_end_date") >= end)
+        & F.col("follow_up_status").isin("Alive", "Restart medication")
+        & (F.datediff(end, F.col("art_start_date")) >= 0)
     )
 
-    # FollowUp ⋈ tx_curr on encounter_id (:153-154) + dim_client (:156)
+    # tx_curr ⋈ dim_client (:156)
     client = tables["mamba_dim_client"]
-    joined = (
-        fu.join(tx_curr.drop("PatientId"), on="encounter_id", how="inner")
-        .join(client, fu["PatientId"] == client["client_id"], "left")
-    )
+    joined = tx_curr.join(client, F.col("PatientId") == client["client_id"], "left")
 
     age = complete_years_between(F.col("date_of_birth"), end)
     fp = F.col("method_of_family_planning")
@@ -168,12 +168,12 @@ def tx_curr_linelist(
         F.substring(F.col("regimen"), 1, 2).alias("ARVRegimen"),
         F.substring(F.col("regimen"), 1, 1).alias("RegimensLine"),
         F.col("ARTDoseDays"),
-        F.col("tc_follow_up_status").alias("FollowupStatus"),
+        F.col("follow_up_status").alias("FollowupStatus"),
         eth_date_str(F.col("treatment_end_date")).alias("ARTDoseEndDate"),
         F.col("treatment_end_date").alias("ARTDoseEndDate_DC"),
         F.col("AdherenceLevel").alias("AdheranceLevel"),
-        eth_date_str(F.col("tc_art_start_date")).alias("ARTStartDate"),
-        F.col("tc_art_start_date").alias("ARTStartDate_GC"),
+        eth_date_str(F.col("art_start_date")).alias("ARTStartDate"),
+        F.col("art_start_date").alias("ARTStartDate_GC"),
         eth_date_str(F.col("inh_start_date")).alias("INH_Start_Date"),
         F.col("inh_start_date").alias("INH_Start_Date_GC"),
         eth_date_str(F.col("inh_date_completed")).alias("INH_Completed_Date"),
@@ -210,7 +210,7 @@ def tx_curr_linelist(
         F.col("breast_feeding_status").alias("BreastFeeding"),
         eth_date_str(F.col("LMP_Date")).alias("LMP_Date"),
         F.col("LMP_Date").alias("LMP_Date_GC"),
-        period_diff_months(end, F.col("tc_art_start_date")).alias("MonthsOnART"),
+        period_diff_months(end, F.col("art_start_date")).alias("MonthsOnART"),
         F.col("dsd_category").alias("DSD_Category"),
         F.col("stages_of_disclosure").alias("ChildDisclosueStatus"),
     )
@@ -483,21 +483,16 @@ def tx_curr_vl_received_linelist(
             F.col("targeted_viral_load_test_indication").alias("vp_targeted_ind"),
         )
     )
-    latest = (
-        ranked(
-            eligible.filter(F.col("follow_up_date") <= end),
-            keys=["client_id"],
-            order_by=["follow_up_date"],
-            tiebreak="encounter_id",
-        )
-        .filter(F.col("row_num") == 1)
-        .select(F.col("encounter_id").alias("lf_encounter_id"))
+    latest = latest_per_key(
+        eligible.filter(F.col("follow_up_date") <= end),
+        keys=["client_id"],
+        order_by=["follow_up_date"],
+        tiebreak="encounter_id",
     )
 
     client = tables["mamba_dim_client"]
     out = (
-        fu.join(latest, fu["encounter_id"] == latest["lf_encounter_id"], "inner")
-        .join(vlperf, fu["client_id"] == vlperf["vp_client_id"], "left")
+        latest.join(vlperf, latest["client_id"] == vlperf["vp_client_id"], "left")
         .join(client, "client_id", "left")
     )
     return (
@@ -648,20 +643,14 @@ def tx_curr_cca_linelist(
         )
     )
 
-    latest = (
-        ranked(
-            fu.filter(
-                (F.col("follow_up_date") <= end)
-                & F.col("follow_up_status").isNotNull()
-            ),
-            keys=["client_id"],
-            order_by=["follow_up_date"],
-            tiebreak="encounter_id",
-        )
-        .filter(F.col("row_num") == 1)
-        .select(F.col("encounter_id").alias("lf_encounter_id"))
+    lfa = latest_per_key(
+        fu.filter(
+            (F.col("follow_up_date") <= end) & F.col("follow_up_status").isNotNull()
+        ),
+        keys=["client_id"],
+        order_by=["follow_up_date"],
+        tiebreak="encounter_id",
     )
-    lfa = fu.join(latest, fu["encounter_id"] == latest["lf_encounter_id"], "inner")
 
     client = tables["mamba_dim_client"]
     return (
@@ -807,23 +796,18 @@ def tx_curr_tpt_linelist(
         "tc",
         ["InhprophylaxisCompletedDate"],
     )
-    latest_visit = (
-        ranked(
-            fu.filter(
-                F.col("follow_up_status").isNotNull() & (F.col("followup_date") <= end)
-            ),
-            keys=["client_id"],
-            order_by=["followup_date"],
-            tiebreak="encounter_id",
-        )
-        .filter(F.col("row_num") == 1)
-        .select(F.col("encounter_id").alias("lf_encounter_id"))
+    latest_visit = latest_per_key(
+        fu.filter(
+            F.col("follow_up_status").isNotNull() & (F.col("followup_date") <= end)
+        ),
+        keys=["client_id"],
+        order_by=["followup_date"],
+        tiebreak="encounter_id",
     )
 
     client = tables["mamba_dim_client"]
     cohort = (
-        fu.join(latest_visit, fu["encounter_id"] == latest_visit["lf_encounter_id"], "inner")
-        .join(client, "client_id", "left")
+        latest_visit.join(client, "client_id", "left")
         .filter(
             (F.col("art_end_date") >= end)
             & F.col("follow_up_status").isin("Alive", "Restart medication")
@@ -1499,7 +1483,7 @@ def tx_curr_hvl_linelist(
                     "Suspected ART failure", "Suspected Antiretroviral failure"
                 )
             )
-        ).select("encounter_id", "client_id", "viral_load_performed_date"),
+        ),
         keys=["client_id"],
         order_by=["viral_load_performed_date"],
         tiebreak="encounter_id",
@@ -1523,8 +1507,7 @@ def tx_curr_hvl_linelist(
     # vl_performed_date (:96-119) + the correlated LIMIT 1 regimen
     # subquery (:109-115) as an as-of join on (client_id, ref date)
     vlperf_base = (
-        fu.join(vl1.select("encounter_id"), on="encounter_id", how="inner")
-        .join(sent, on="client_id", how="left")
+        vl1.join(sent, on="client_id", how="left")
         .select(
             "encounter_id",
             "client_id",
@@ -1596,19 +1579,15 @@ def tx_curr_hvl_linelist(
         )
         .withColumn("row_num", F.row_number().over(w_cf))
         .filter(F.col("row_num") == 1)
-        .select(
-            "encounter_id",
-            "client_id",
-            F.col("viral_load_performed_date").alias("viral_load_perform_date"),
-        )
+    )
+    cf2_date = cf2.select(
+        "client_id", F.col("viral_load_performed_date").alias("viral_load_perform_date")
     )
 
     # tmp_switch_sub_date / switch_sub_date (:145-154): first regimen
     # switch within [confirmatory date, report end]
     switch_date = earliest_per_key(
-        fu.join(
-            cf2.select("client_id", "viral_load_perform_date"), on="client_id", how="inner"
-        )
+        fu.join(cf2_date, on="client_id", how="inner")
         .filter(
             F.col("follow_up_date").between(F.col("viral_load_perform_date"), end)
             & F.col("switch").isNotNull()
@@ -1627,11 +1606,7 @@ def tx_curr_hvl_linelist(
     )
     sent_cf = (
         fu.withColumnRenamed("viral_load_performed_date", "viral_load_perform_date")
-        .join(
-            cf2.select("client_id", "viral_load_perform_date"),
-            on=["client_id", "viral_load_perform_date"],
-            how="inner",
-        )
+        .join(cf2_date, on=["client_id", "viral_load_perform_date"], how="inner")
         .filter((F.col("follow_up_date") <= end) & F.col("viral_load_sent_date").isNotNull())
         .select("client_id", "encounter_id", F.col("viral_load_sent_date").alias("VL_Sent_Date"))
         .withColumn("row_num", F.row_number().over(w_sent_cf))
@@ -1641,8 +1616,7 @@ def tx_curr_hvl_linelist(
 
     # tmp_vl_performed_date_cf_3 (:171-188)
     cf3 = (
-        fu.join(cf2.select("encounter_id"), on="encounter_id", how="inner")
-        .join(sent_cf, on="client_id", how="left")
+        cf2.join(sent_cf, on="client_id", how="left")
         .select(
             "client_id",
             F.col("viral_load_performed_date").alias("viral_load_perform_date_cf"),
@@ -1687,11 +1661,11 @@ def tx_curr_hvl_linelist(
     latest_fu = latest_per_key(
         fu.filter(
             F.col("follow_up_status").isNotNull() & (F.col("follow_up_date") <= end)
-        ).select("client_id", "encounter_id", "follow_up_date"),
+        ),
         keys=["client_id"],
         order_by=["follow_up_date"],
         tiebreak="encounter_id",
-    ).select("encounter_id")
+    )
 
     # latest_alive_restart_regimen (:225-234)
     latest_regimen = latest_per_key(
@@ -1707,8 +1681,7 @@ def tx_curr_hvl_linelist(
     # hvl assembly (:236-287)
     client = tables["mamba_dim_client"]
     h = (
-        fu.join(latest_fu, on="encounter_id", how="inner")
-        .join(latest_regimen, on="client_id", how="left")
+        latest_fu.join(latest_regimen, on="client_id", how="left")
         .join(
             client.select("client_id", "patient_uuid", "date_of_birth", "sex"),
             on="client_id",
@@ -1985,14 +1958,13 @@ def tx_curr_ahd_linelist(
             & F.col("art_start_date").isNotNull()
             & (F.col("follow_up_date") <= end)
             & F.col("vl_perform_date_raw").isNotNull()
-        ).select("PatientId", "encounter_id", "vl_perform_date_raw"),
+        ),
         keys=["PatientId"],
         order_by=["vl_perform_date_raw"],
         tiebreak="encounter_id",
-    ).select("encounter_id")
+    )
     vlperf = (
-        fu.join(vl1, on="encounter_id", how="inner")
-        .join(vl_sent, on="PatientId", how="left")
+        vl1.join(vl_sent, on="PatientId", how="left")
         .select(
             "PatientId",
             F.col("vl_perform_date_raw").alias("a_vl_perform_date"),
@@ -2008,11 +1980,11 @@ def tx_curr_ahd_linelist(
     latest_fu = latest_per_key(
         fu.filter(
             F.col("follow_up_status").isNotNull() & F.col("art_start_date").isNotNull()
-        ).select("PatientId", "encounter_id", "follow_up_date"),
+        ),
         keys=["PatientId"],
         order_by=["follow_up_date"],
         tiebreak="encounter_id",
-    ).select("encounter_id")
+    )
 
     # tx_curr (:270-286)
     tx_curr = (
@@ -2042,8 +2014,7 @@ def tx_curr_ahd_linelist(
 
     client = tables["mamba_dim_client"]
     h = (
-        fu.join(latest_fu, on="encounter_id", how="inner")
-        .join(tx_curr, on="PatientId", how="inner")
+        latest_fu.join(tx_curr, on="PatientId", how="inner")
         .join(
             client.select(
                 F.col("client_id").alias("PatientId"),
@@ -2269,14 +2240,13 @@ def tx_curr_vl_eligible_linelist(
 
     # vl_performed_date(_2) (:74-98)
     vl1 = latest_per_key(
-        capped.select("client_id", "encounter_id", "viral_load_perform_date"),
+        capped,
         keys=["client_id"],
         order_by=["viral_load_perform_date"],
         tiebreak="encounter_id",
-    ).select("encounter_id")
+    )
     vlperf = (
-        fu.join(vl1, on="encounter_id", how="inner")
-        .join(vl_sent, on="client_id", how="left")
+        vl1.join(vl_sent, on="client_id", how="left")
         .select(
             "client_id",
             F.col("viral_load_perform_date").alias("vp_performed_date"),
@@ -2290,16 +2260,12 @@ def tx_curr_vl_eligible_linelist(
 
     # latest_follow_up (:99-105): NO status/art gates here
     latest_fu = latest_per_key(
-        capped.select("client_id", "encounter_id", "follow_up_date"),
-        keys=["client_id"],
-        order_by=["follow_up_date"],
-        tiebreak="encounter_id",
-    ).select("encounter_id")
+        capped, keys=["client_id"], order_by=["follow_up_date"], tiebreak="encounter_id"
+    )
 
     client = tables["mamba_dim_client"]
     h = (
-        fu.join(latest_fu, on="encounter_id", how="inner")
-        .join(vlperf, on="client_id", how="left")
+        latest_fu.join(vlperf, on="client_id", how="left")
         .join(vl_sent, on="client_id", how="left")
         .join(switch, on="client_id", how="left")
         .join(
@@ -2556,11 +2522,11 @@ def tx_curr_vl_eligible_new_linelist(
                 )
                 | F.col("viral_load_perform_date").isNull()
             )
-        ).select("client_id", "encounter_id", "viral_load_perform_date"),
+        ),
         keys=["client_id"],
         order_by=["viral_load_perform_date"],
         tiebreak="encounter_id",
-    ).select("encounter_id")
+    )
 
     # tmp_vl_performed_date_3 (:108-165): send-date-masked result view
     perf = F.col("viral_load_perform_date")
@@ -2586,8 +2552,7 @@ def tx_curr_vl_eligible_new_linelist(
         .when((perf >= sent_c) & (isnull_cnt <= F.lit(50.0)), "S")
     )
     vlperf = (
-        fu.join(vl2, on="encounter_id", how="inner")
-        .join(vl_sent, on="client_id", how="left")
+        vl2.join(vl_sent, on="client_id", how="left")
         .select(
             "client_id",
             F.when(perf < sent_c, F.lit(None).cast("date"))
@@ -2606,18 +2571,15 @@ def tx_curr_vl_eligible_new_linelist(
 
     # latest_alive_restart (:166-174)
     latest_ar = latest_per_key(
-        in_window.filter(
-            F.col("follow_up_status").isin("Alive", "Restart medication")
-        ).select("client_id", "encounter_id", "follow_up_date"),
+        in_window.filter(F.col("follow_up_status").isin("Alive", "Restart medication")),
         keys=["client_id"],
         order_by=["follow_up_date"],
         tiebreak="encounter_id",
-    ).select("encounter_id")
+    )
 
     client = tables["mamba_dim_client"]
     h = (
-        fu.join(latest_ar, on="encounter_id", how="inner")
-        .join(
+        latest_ar.join(
             client.select(
                 "client_id",
                 "patient_uuid",
@@ -2780,8 +2742,8 @@ def tx_curr_cca_new_linelist(
 
     Two symmetric per-client "screening episode" snapshots — the latest
     'Cervical cancer screening performed' visit BEFORE the report start
-    (prev) and INSIDE the window (curr) — each a W1 dedup re-joined to
-    the full wide row, then a tx_curr-gated assembly over dim_client
+    (prev) and INSIDE the window (curr) — each a W1 dedup that keeps
+    the whole visit row, then a tx_curr-gated assembly over dim_client
     with the eligibility ladder. All joins/dedups key on client_id.
     """
     start = F.lit(report_start.isoformat()).cast("date")
@@ -2839,17 +2801,14 @@ def tx_curr_cca_new_linelist(
     )
 
     def episode(base: DataFrame) -> DataFrame:
-        """Latest screening-performed visit of ``base``, re-joined to
-        the full wide row (:61-68 / :215-225)."""
-        chosen = latest_per_key(
-            base.filter(
-                F.col("screening_status") == "Cervical cancer screening performed"
-            ).select("client_id", "encounter_id", "follow_up_date"),
+        """Latest screening-performed visit of ``base``, the whole
+        visit row (:61-68 / :215-225)."""
+        return latest_per_key(
+            base.filter(F.col("screening_status") == "Cervical cancer screening performed"),
             keys=["client_id"],
             order_by=["follow_up_date"],
             tiebreak="encounter_id",
-        ).select("encounter_id")
-        return fu.join(chosen, on="encounter_id", how="inner")
+        )
 
     def screen_done_date():
         # identical CASE in both branches (:98-113 / :228-243)
@@ -3040,32 +2999,20 @@ def tx_curr_cca_new_linelist(
     )
 
     # tx_curr (:351-365)
-    tx = (
-        ranked(
-            fu.filter(F.col("follow_up_date") <= end).select(
-                "client_id",
-                "encounter_id",
-                "follow_up_date",
-                "follow_up_status",
-                "art_end_date",
-            ),
-            ["client_id"],
-            ["follow_up_date"],
-            tiebreak="encounter_id",
-        )
-        .filter(
-            (F.col("row_num") == 1)
-            & F.col("follow_up_status").isin("Alive", "Restart medication")
-            & (F.col("art_end_date") >= end)
-        )
-        .select("encounter_id", F.col("follow_up_status").alias("tc_status"))
+    tx = latest_per_key(
+        fu.filter(F.col("follow_up_date") <= end),
+        ["client_id"],
+        ["follow_up_date"],
+        tiebreak="encounter_id",
+    ).filter(
+        F.col("follow_up_status").isin("Alive", "Restart medication")
+        & (F.col("art_end_date") >= end)
     )
 
     client = tables["mamba_dim_client"]
     age = complete_years_between(F.col("date_of_birth"), end)
     h = (
-        fu.join(tx, on="encounter_id", how="inner")
-        .join(
+        tx.join(
             client.select("client_id", "patient_uuid", "mrn", "sex", "date_of_birth"),
             on="client_id",
             how="left",
@@ -3107,7 +3054,7 @@ def tx_curr_cca_new_linelist(
         age.alias("Age"),
         F.col("follow_up_date").alias("FollowUpDate"),
         F.col("art_start_date").alias("ArtStartDate"),
-        F.col("tc_status").alias("FollowUpStatus"),
+        F.col("follow_up_status").alias("FollowUpStatus"),
         "next_visit_date",
         F.substring(F.col("regimen"), 1, 2).alias("ARVRegimen"),
         F.substring(F.col("regimen"), 1, 1).alias("RegimenLine"),

@@ -40,8 +40,16 @@ def ranked(
     tiebreak: str | None = None,
     rank_col: str = "row_num",
 ) -> DataFrame:
-    """Attach a ROW_NUMBER per key group (consumed by J3-style joins:
-    ``ON a.k = b.k AND b.row_num = 1``, PMTCT_HEI_LineList.sql:197-202)."""
+    """Attach a ROW_NUMBER per key group.
+
+    The reference filters ``row_num = 1`` inside a narrow CTE and then
+    joins the base table back on its key to fetch the rest of the row
+    (J3, ``ON a.k = b.k AND b.row_num = 1``, PMTCT_HEI_LineList.sql:197-202;
+    Tx_Curr_LineList.sql:153-154): a CTE only carries the columns it
+    selects. A ranked DataFrame carries every column of its input, so
+    ``ranked(df, ...).filter(row_num == 1)`` (or ``latest_per_key`` /
+    ``earliest_per_key``) already is the chosen row; window over the
+    frame whose columns you need instead of joining it back."""
     w = Window.partitionBy(*keys).orderBy(*_order_cols(order_by, descending, tiebreak))
     return df.withColumn(rank_col, F.row_number().over(w))
 

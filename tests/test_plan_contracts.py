@@ -16,6 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_export_tool_spark.queries import all_queries
+from data_export_tool_spark.queries.mamba_q import REPORTS as MAMBA_REPORTS
 
 SPECS = all_queries()
 
@@ -162,19 +163,50 @@ def test_cohorts_entry_plans_real_anti_and_semi_joins(spark, sf_dir):
     assert "LeftSemi" in plan, "semi-join missing from cohorts plan"
 
 
-def test_linelists_read_wide_view_from_cache(spark, sf_dir):
+#: the catalog's line-list entries that read the cached wide view (the
+#: HEI list assembles its own shard tables)
+_WIDE_VIEW_ENTRIES = [
+    name for name, report in MAMBA_REPORTS.items() if report != "PMTCT_HEI_LineList"
+]
+
+_ENCOUNTER_ID_EQ = re.compile(r"encounter_id#\d+L? = \w*encounter_id#\d+L?")
+
+
+def inner_encounter_id_joins(df) -> list[str]:
+    """Conditions of the inner equi-joins on ``encounter_id`` in the
+    body of ``df``'s optimized plan. A cached relation is a leaf of
+    that plan, so the walk never enters the wide view's own shard
+    assembly."""
+    found, stack = [], [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "Join" and node.joinType().toString() == "Inner":
+            condition = node.condition().toString()
+            if _ENCOUNTER_ID_EQ.search(condition):
+                found.append(condition)
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return found
+
+
+@pytest.mark.parametrize("name", _WIDE_VIEW_ENTRIES)
+def test_linelists_read_wide_view_from_cache(spark, sf_dir, name):
     """J10 (CTE reuse) as a hard plan pin: the reference re-states its
     11-way FollowUp CTE in every report (HVL references it 12 times);
     the engine assembles the wide view once and caches it, so every
     branch of a line-list plan must read InMemoryTableScan, never
-    re-join the 11 shards."""
-    plan = plan_of(spark, sf_dir, "m08_tx_curr_hvl")
+    re-join the 11 shards. Nor may a branch join the view back to
+    itself on its key, ``encounter_id``: a window already carries the
+    whole row it picks, so a re-join only fetches that row again."""
+    plan = plan_of(spark, sf_dir, name)
     assert "InMemoryTableScan" in plan
     # the 11-shard assembly join itself must not appear outside the
     # cached relation: every encounter_id equi-join in the plan body
     # would re-run the assembly per reference
     body = plan.split("InMemoryRelation")[0]
     assert body.count("SortMergeJoin") < 11, "wide view re-assembled in plan body"
+    joins = inner_encounter_id_joins(SPECS[name].builder(spark, sf_dir))
+    assert joins == [], f"{len(joins)} encounter_id re-joins in the plan body"
 
 
 def test_linelist_dim_joins_broadcast_at_fixture_scale(spark, sf_dir):
