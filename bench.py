@@ -190,11 +190,22 @@ def run_chunk(names: list[str], sf_dir: str, n_runs: int) -> dict:
     return result
 
 
+def baseline_timings(prev_detail: dict, sf: float, cpus: int) -> dict[str, float]:
+    """The regression guard's baseline: the committed detail file's
+    ``queries_full``, only when that run had the same scale and core
+    count. A file without ``cpus`` is no baseline, since timings taken
+    at 32 cores say nothing about a 4-core run."""
+    if prev_detail.get("sf") == sf and prev_detail.get("cpus") == cpus:
+        return prev_detail.get("queries_full", {})
+    return {}
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
     n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
     n_chunks = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_CHUNKS", "5")))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     # ---- chunk-child mode: run a slice, print it as JSON, exit ----
     if len(sys.argv) >= 3 and sys.argv[1] == "--chunk":
@@ -357,6 +368,7 @@ def main() -> None:
             f" {n_chunks}_fresh_jvm_chunks"
         ),
         "sf": sf,
+        "cpus": cpus,
         "n_queries": len(timings),
         "queries_full": timings,
         # one-time costs memoizing builders paid outside the timed
@@ -382,15 +394,12 @@ def main() -> None:
     # floor under which this host simply cannot testify. A real
     # regression (r3's d13 +2.06 s / +54%) clears all three
     # comfortably.
-    # baseline: its queries_full table, compared only at equal scale
-    baseline: dict[str, float] = {}
     try:
         with open(os.path.join(HERE, "BENCH_DETAIL.json")) as fh:
             prev_detail = json.load(fh)
-        if prev_detail.get("sf") == sf:
-            baseline = prev_detail.get("queries_full", {})
     except (OSError, ValueError):
         prev_detail = {}
+    baseline = baseline_timings(prev_detail, sf, cpus)
     shared = [q for q in timings if q in baseline]
     if shared:  # median() raises on empty (disjoint query sets)
         shift = statistics.median(

@@ -20,6 +20,18 @@ primary key, and the shards join 1:1), so the re-join would return
 exactly the row the window chose. Catalyst prunes the window's input to
 the columns read downstream.
 
+Two rules decide between a window and an aggregate:
+
+- A report's base row (the latest visit, a tx_curr cohort, the latest
+  VL result whose columns are read on) is a window over the FollowUp
+  frame, and the builder carries the chosen row.
+- A lookup that only lends a value to a client's row (the reference's
+  "latest non-null X per client" CTE, LEFT JOINed on client_id) is an
+  aggregate column, ``latest_value`` or the ``max``/``min`` of a masked
+  date. All lookups over one FollowUp frame are one
+  ``groupBy(client).agg(...)``, joined once. ``latest_value``'s
+  docstring says why this picks the row the window would.
+
 ``LINELISTS`` at the end of the module is the one report table: report
 name → builder, in the reference's config order. The driver-gate
 catalog (``queries.mamba_q``), the scaled bench entries
@@ -56,6 +68,7 @@ from data_export_tool_spark.functions.ethiopian import eth_date_str
 from data_export_tool_spark.mamba.schemas import HEI_IMMUNIZATION_FLAGS
 from data_export_tool_spark.operators.pivot import conditional_agg
 from data_export_tool_spark.operators.window_dedup import (
+    latest_value,
     earliest_per_key,
     latest_per_key,
     ranked,
@@ -712,9 +725,10 @@ def tx_curr_tpt_linelist(
     """Tx_Curr_TPT_LineList — TB-preventive-therapy line list, one row
     per on-treatment patient (Tx_Curr_TPT_LineList.sql:1-201).
 
-    Four W1 dedup stacks over one FollowUp selection (latest visit,
-    latest TPT-type row, latest TPT start, latest TPT completion,
-    :61-97), joined per client (:192-197). Mixed-type CASE branches
+    The reference's four W1 dedups over one FollowUp selection (:61-97)
+    are the latest visit, a window over the report's base row, and one
+    aggregate of three lookups (latest TPT type, latest start, latest
+    completion), joined per client (:192-197). Mixed-type CASE branches
     (``TPT_Type`` yields 0/2/1 or the raw string, :140-144) are emitted
     as strings — MySQL/DuckDB coerce such CASEs to text anyway. The
     final day-diff guard (:201) is redundant with
@@ -758,43 +772,22 @@ def tx_curr_tpt_linelist(
         F.col("transferred_in_check_this_for_all_t").alias("Transfer_In"),
     )
 
-    def _latest(df: DataFrame, order_col: str, prefix: str, cols: list[str]):
-        """W1 dedup: latest row per client by ``order_col`` DESC,
-        encounter_id DESC (:61-97), projected with disjoint names."""
-        return (
-            ranked(df, keys=["client_id"], order_by=[order_col], tiebreak="encounter_id")
-            .filter(F.col("row_num") == 1)
-            .select(
-                F.col("client_id").alias(f"{prefix}_client_id"),
-                *[F.col(c).alias(f"{prefix}_{c}") for c in cols],
-            )
-        )
-
-    tpt_type = _latest(
-        fu.filter(
-            (F.col("followup_date") <= end) & F.col("TB_ProphylaxisType").isNotNull()
+    # latest TPT type, start and completion per client (:61-97), capped
+    # at the report end: one aggregate, joined once
+    capped = F.col("followup_date") <= end
+    has_type = capped & F.col("TB_ProphylaxisType").isNotNull()
+    tpt = fu.groupBy("client_id").agg(
+        F.max(F.when(capped, F.col("inhprophylaxis_started_date"))).alias(
+            "TPT_Started_Date"
         ),
-        "followup_date",
-        "tt",
-        ["TB_ProphylaxisType", "TB_ProphylaxisTypeALT", "tpt_follow_up_inh"],
-    )
-    tpt_start = _latest(
-        fu.filter(
-            F.col("inhprophylaxis_started_date").isNotNull()
-            & (F.col("followup_date") <= end)
+        F.max(F.when(capped, F.col("InhprophylaxisCompletedDate"))).alias(
+            "TPT_Completed_Date"
         ),
-        "inhprophylaxis_started_date",
-        "ts",
-        ["inhprophylaxis_started_date"],
-    )
-    tpt_completed = _latest(
-        fu.filter(
-            F.col("InhprophylaxisCompletedDate").isNotNull()
-            & (F.col("followup_date") <= end)
-        ),
-        "InhprophylaxisCompletedDate",
-        "tc",
-        ["InhprophylaxisCompletedDate"],
+        *[
+            latest_value(c, ["followup_date"], where=has_type, tiebreak="encounter_id")
+            .alias(f"latest_{c}")
+            for c in ("TB_ProphylaxisType", "TB_ProphylaxisTypeALT")
+        ],
     )
     latest_visit = latest_per_key(
         fu.filter(
@@ -815,21 +808,17 @@ def tx_curr_tpt_linelist(
         )
     )
 
-    out = (
-        cohort.join(tpt_start, cohort["client_id"] == tpt_start["ts_client_id"], "left")
-        .join(tpt_completed, cohort["client_id"] == tpt_completed["tc_client_id"], "left")
-        .join(tpt_type, cohort["client_id"] == tpt_type["tt_client_id"], "left")
-    )
-    tpt_type_col = F.col("tt_TB_ProphylaxisType")
-    tpt_type_alt = F.col("tt_TB_ProphylaxisTypeALT")
+    out = cohort.join(tpt, "client_id", "left")
+    tpt_type_col = F.col("latest_TB_ProphylaxisType")
+    tpt_type_alt = F.col("latest_TB_ProphylaxisTypeALT")
     return out.select(
         F.when(F.col("sex") == "FEMALE", "F")
         .when(F.col("sex") == "MALE", "M")
         .alias("Sex"),
         F.col("weight_in_kg").alias("Weight"),
         complete_years_between(F.col("date_of_birth"), end).alias("Age"),
-        F.col("ts_inhprophylaxis_started_date").alias("TPT_Started_Date"),
-        F.col("tc_InhprophylaxisCompletedDate").alias("TPT_Completed_Date"),
+        "TPT_Started_Date",
+        "TPT_Completed_Date",
         F.when(tpt_type_col == "6H", "0")
         .when(tpt_type_col == "3HP", "2")
         .when(tpt_type_col == "Continuous", "1")
@@ -1406,9 +1395,11 @@ def tx_curr_hvl_linelist(
 
     The reference references its FollowUp CTE 12 times across 24 CTEs;
     here every branch reads the one cached wide view. Operator mix:
-    seven W1/W2 window dedups (mixed ASC/DESC orders), the correlated
+    window dedups (mixed ASC/DESC orders) where the chosen row is
+    carried on, aggregates where it only lends a value (the three EAC
+    dates, the latest Alive/Restart regimen), the correlated
     `regimen ... LIMIT 1` scalar subquery (:109-115) as an as-of join
-    (J9), and a ten-way LEFT JOIN assembly on client_id (:274-287).
+    (J9), and a LEFT JOIN assembly on client_id (:274-287).
 
     Scale: every dedup/join keys on client_id, so on a client_id-
     bucketed warehouse layout the whole report is one Exchange; the
@@ -1629,33 +1620,23 @@ def tx_curr_hvl_linelist(
     )
 
     # vl_perf_date_eac_1/2/3 (:189-215): earliest EAC-k date at-or-after
-    # the routine result (ASC date, DESC encounter)
-    def eac(col_name: str, out: str) -> DataFrame:
-        w = Window.partitionBy("client_id").orderBy(
-            F.col(col_name).asc(), F.col("encounter_id").desc()
+    # the routine result, one aggregate over one join
+    routine = F.col("routine_perf_date")
+    eac = (
+        fu.join(
+            vlperf.select("client_id", F.col("vp_performed_date").alias("routine_perf_date")),
+            on="client_id",
+            how="inner",
         )
-        return (
-            fu.join(
-                vlperf.select(
-                    "client_id",
-                    F.col("vp_performed_date").alias("routine_perf_date"),
-                ),
-                on="client_id",
-                how="inner",
-            )
-            .filter(
-                F.col(col_name).isNotNull()
-                & (F.col("routine_perf_date") <= F.col(col_name))
-                & (F.col(col_name) <= end)
-            )
-            .withColumn("row_num", F.row_number().over(w))
-            .filter(F.col("row_num") == 1)
-            .select("client_id", F.col(col_name).alias(out))
+        .groupBy("client_id")
+        .agg(
+            *[
+                F.min(F.when((routine <= F.col(c)) & (F.col(c) <= end), F.col(c)))
+                .alias(f"date_eac_provided_{k}")
+                for k, c in ((1, "eac_1"), (2, "eac_2"), (3, "eac_3"))
+            ]
         )
-
-    eac1 = eac("eac_1", "date_eac_provided_1")
-    eac2 = eac("eac_2", "date_eac_provided_2")
-    eac3 = eac("eac_3", "date_eac_provided_3")
+    )
 
     # tmp_latest_follow_up (:216-235)
     latest_fu = latest_per_key(
@@ -1668,15 +1649,15 @@ def tx_curr_hvl_linelist(
     )
 
     # latest_alive_restart_regimen (:225-234)
-    latest_regimen = latest_per_key(
-        fu.filter(
-            F.col("follow_up_status").isin("Alive", "Restart medication")
-            & (F.col("follow_up_date") <= end)
-        ).select("client_id", "encounter_id", "follow_up_date", "regimen"),
-        keys=["client_id"],
-        order_by=["follow_up_date"],
-        tiebreak="encounter_id",
-    ).select("client_id", F.col("regimen").alias("latest_regimen"))
+    latest_regimen = fu.groupBy("client_id").agg(
+        latest_value(
+            "regimen",
+            ["follow_up_date"],
+            where=F.col("follow_up_status").isin("Alive", "Restart medication")
+            & (F.col("follow_up_date") <= end),
+            tiebreak="encounter_id",
+        ).alias("latest_regimen")
+    )
 
     # hvl assembly (:236-287)
     client = tables["mamba_dim_client"]
@@ -1689,9 +1670,7 @@ def tx_curr_hvl_linelist(
         )
         .join(vlperf, on="client_id", how="left")
         .join(cf3, on="client_id", how="left")
-        .join(eac1, on="client_id", how="left")
-        .join(eac2, on="client_id", how="left")
-        .join(eac3, on="client_id", how="left")
+        .join(eac, on="client_id", how="left")
         .join(switch_date, on="client_id", how="left")
     )
 
@@ -1787,17 +1766,19 @@ def tx_curr_ahd_linelist(
 
     The reference is 46 CTEs / 21 LEFT JOINs, but 18 of the CTE pairs
     are ONE shape: "latest non-null value of attribute X per patient"
-    (W1). Here each is a ``latest_per_key`` over the one cached wide
-    view, assembled with left joins on client_id.
+    (W1). Here those 18, the VISITECT result and the VL sent date are
+    one ``groupBy(PatientId)`` aggregate of ``latest_value``/``max``
+    columns over the one cached wide view, joined once. Windows remain
+    only where the chosen row is carried on: the latest visit, the
+    tx_curr cohort and the latest VL result.
 
     Dialect pins (plans/dialect.py): the VISITECT `WHEN 'a' OR 'b'`
     simple-CASE branch is dead (never matches) on both engines
     (SURVEY.md §4.2); free-text numeric columns compare as
     TRY_CAST-to-DOUBLE (malformed → NULL → false).
 
-    Scale: every dedup and join keys on the patient id — one logical
-    Exchange on a client_id-bucketed layout; the 18 attribute dedups
-    share that single partitioning.
+    Scale: every dedup, aggregate and join keys on the patient id — one
+    logical Exchange on a client_id-bucketed layout.
     """
     end = F.lit(report_end.isoformat()).cast("date")
 
@@ -1876,80 +1857,51 @@ def tx_curr_ahd_linelist(
         "visitect_cd4_test_date",
     )
 
-    def latest_attr(
-        src_col: str,
-        out_col: str,
-        order_col: str | None = None,
-        date_capped: bool = False,
-        extra_cols: tuple = (),
-    ) -> DataFrame:
-        """The AHD workhorse (:94-220): latest non-null value of one
-        attribute per patient, ordered by ``order_col`` (the attribute
-        itself for date attributes, else follow_up_date), optionally
-        capped at the report end."""
-        base = fu.filter(F.col(src_col).isNotNull())
-        if date_capped:
-            base = base.filter(F.col("follow_up_date") <= end)
-        order = order_col or "follow_up_date"
-        keep = ["PatientId", "encounter_id", src_col, order, *extra_cols]
-        return latest_per_key(
-            base.select(*dict.fromkeys(keep)),
-            keys=["PatientId"],
-            order_by=[order],
+    # The AHD workhorse (:94-228): the latest non-null value of one
+    # attribute per patient, ordered by the attribute itself (date
+    # attributes: their max) or by follow_up_date, some capped at the
+    # report end. All 20 lookups are one aggregate.
+    capped = F.col("follow_up_date") <= end
+
+    def latest(src: str, where=None):
+        has = F.col(src).isNotNull()
+        return latest_value(
+            src,
+            ["follow_up_date"],
+            where=has if where is None else has & where,
             tiebreak="encounter_id",
-        ).select(
-            "PatientId",
-            F.col(src_col).alias(out_col),
-            *[F.col(c).alias(f"{out_col}__{c}") for c in extra_cols],
         )
 
-    tpt_start = latest_attr("inh_started_date", "a_inh_started", "inh_started_date")
-    tpt_completed = latest_attr("inh_completed_date", "a_inh_completed", "inh_completed_date")
-    visitect = latest_per_key(
-        fu.filter(
-            F.col("visitect_cd4_test_date").isNotNull()
-            & (F.col("visitect_cd4_test_date") <= end)
-        ).select("PatientId", "encounter_id", "visitect_cd4_test_date", "visitect_cd4_result"),
-        keys=["PatientId"],
-        order_by=["visitect_cd4_test_date"],
-        tiebreak="encounter_id",
-    ).select(
-        "PatientId",
-        F.col("visitect_cd4_test_date").alias("a_visitect_date"),
-        F.col("visitect_cd4_result").alias("a_visitect_result"),
+    visitect_date = F.col("visitect_cd4_test_date")
+    lookups = fu.groupBy("PatientId").agg(
+        F.max("inh_started_date").alias("a_inh_started"),
+        F.max("inh_completed_date").alias("a_inh_completed"),
+        F.max(F.when(visitect_date <= end, visitect_date)).alias("a_visitect_date"),
+        latest_value(
+            "visitect_cd4_result",
+            [visitect_date],
+            where=visitect_date <= end,
+            tiebreak="encounter_id",
+        ).alias("a_visitect_result"),
+        latest("tb_prophylaxis_type").alias("a_tpt_type"),
+        latest("tpt_dose_alt").alias("a_tpt_dose_alt"),
+        latest("tpt_dose_inh").alias("a_tpt_dose_inh"),
+        latest("tpt_side_effect").alias("a_tpt_side_effect"),
+        latest("diagnostic_test", capped).alias("a_tb_diag_test"),
+        latest("diagnostic_test_result", capped).alias("a_tb_diag_result"),
+        latest("lf_lam", capped).alias("a_lf_lam"),
+        latest("gene_xpert", capped).alias("a_gene_xpert"),
+        latest("tb_screened_flag").alias("a_tb_screened"),
+        latest("tb_screening_flag", capped).alias("a_tb_screening"),
+        latest("tpt_adherence_raw").alias("a_tpt_adherence"),
+        F.max("tb_rx_start_date").alias("a_tb_rx_start"),
+        F.max("tb_rx_completed_date").alias("a_tb_rx_completed"),
+        F.max("tb_rx_discontinued_date").alias("a_tb_rx_discontinued"),
+        latest("ccs_screen_done").alias("a_cca_screened"),
+        # vl_sent_date (:222-228): NO not-null gate — the latest sent
+        # date among pre-end follow-ups, NULL when all are NULL
+        F.max(F.when(capped, F.col("vl_sent_date_raw"))).alias("a_vl_sent_date"),
     )
-    tpt_type = latest_attr("tb_prophylaxis_type", "a_tpt_type")
-    tpt_dose_alt = latest_attr("tpt_dose_alt", "a_tpt_dose_alt")
-    tpt_dose_inh = latest_attr("tpt_dose_inh", "a_tpt_dose_inh")
-    tpt_side_effect = latest_attr("tpt_side_effect", "a_tpt_side_effect")
-    tb_diag_test = latest_attr("diagnostic_test", "a_tb_diag_test", date_capped=True)
-    tb_diag_result = latest_attr(
-        "diagnostic_test_result", "a_tb_diag_result", date_capped=True
-    )
-    tb_lf_lam = latest_attr("lf_lam", "a_lf_lam", date_capped=True)
-    tb_gene_xpert = latest_attr("gene_xpert", "a_gene_xpert", date_capped=True)
-    tpt_screened = latest_attr("tb_screened_flag", "a_tb_screened")
-    tpt_screening = latest_attr("tb_screening_flag", "a_tb_screening", date_capped=True)
-    tpt_adherence = latest_attr("tpt_adherence_raw", "a_tpt_adherence")
-    tb_rx_started = latest_attr("tb_rx_start_date", "a_tb_rx_start", "tb_rx_start_date")
-    tb_rx_completed = latest_attr(
-        "tb_rx_completed_date", "a_tb_rx_completed", "tb_rx_completed_date"
-    )
-    tb_rx_discontinued = latest_attr(
-        "tb_rx_discontinued_date", "a_tb_rx_discontinued", "tb_rx_discontinued_date"
-    )
-    cca_screened = latest_attr("ccs_screen_done", "a_cca_screened")
-
-    # vl_sent_date (:222-228): NO not-null gate — latest by sent date
-    # (DESC, nulls last on all three engines) among pre-end follow-ups
-    vl_sent = latest_per_key(
-        fu.filter(F.col("follow_up_date") <= end).select(
-            "PatientId", "encounter_id", "vl_sent_date_raw"
-        ),
-        keys=["PatientId"],
-        order_by=["vl_sent_date_raw"],
-        tiebreak="encounter_id",
-    ).select("PatientId", F.col("vl_sent_date_raw").alias("a_vl_sent_date"))
 
     # vl_performed_date (:231-256)
     vl1 = latest_per_key(
@@ -1964,7 +1916,7 @@ def tx_curr_ahd_linelist(
         tiebreak="encounter_id",
     )
     vlperf = (
-        vl1.join(vl_sent, on="PatientId", how="left")
+        vl1.join(lookups.select("PatientId", "a_vl_sent_date"), on="PatientId", how="left")
         .select(
             "PatientId",
             F.col("vl_perform_date_raw").alias("a_vl_perform_date"),
@@ -2026,25 +1978,7 @@ def tx_curr_ahd_linelist(
             how="left",
         )
         .join(vlperf, on="PatientId", how="left")
-        .join(visitect, on="PatientId", how="left")
-        .join(vl_sent, on="PatientId", how="left")
-        .join(tpt_start, on="PatientId", how="left")
-        .join(tpt_completed, on="PatientId", how="left")
-        .join(tpt_type, on="PatientId", how="left")
-        .join(tpt_dose_alt, on="PatientId", how="left")
-        .join(tpt_dose_inh, on="PatientId", how="left")
-        .join(tpt_side_effect, on="PatientId", how="left")
-        .join(tpt_screened, on="PatientId", how="left")
-        .join(tpt_screening, on="PatientId", how="left")
-        .join(tpt_adherence, on="PatientId", how="left")
-        .join(tb_diag_result, on="PatientId", how="left")
-        .join(tb_diag_test, on="PatientId", how="left")
-        .join(tb_lf_lam, on="PatientId", how="left")
-        .join(tb_gene_xpert, on="PatientId", how="left")
-        .join(tb_rx_started, on="PatientId", how="left")
-        .join(tb_rx_completed, on="PatientId", how="left")
-        .join(tb_rx_discontinued, on="PatientId", how="left")
-        .join(cca_screened, on="PatientId", how="left")
+        .join(lookups, on="PatientId", how="left")
         .filter(F.col("follow_up_status") != "Dead")
     )
 
@@ -2190,8 +2124,11 @@ def tx_curr_vl_eligible_linelist(
     """Tx_Curr_VLEligible_LineList — next-VL-eligibility date per
     on-treatment patient (Tx_Curr_VLEligible_LineList.sql:1-267).
 
-    Five W1 dedups over the cached wide view feed a 17-branch
-    eligibility CASE. Dialect pins: MySQL complete-unit TIMESTAMPDIFF
+    The reference's five W1 dedups over the cached wide view are two
+    windows (the latest visit and the latest VL result, whose rows are
+    carried on) and one aggregate (latest sent date, latest regimen
+    change), and they feed a 17-branch eligibility CASE. Dialect pins:
+    MySQL complete-unit TIMESTAMPDIFF
     (functions.datetime_ext), free-text counts compared as doubles,
     the `'' AS eligiblityDate` sentinel mapped to NULL on both engines
     (QUERY_PATCHES policy, SURVEY.md §4.5).
@@ -2219,24 +2156,16 @@ def tx_curr_vl_eligible_linelist(
     )
     capped = fu.filter(F.col("follow_up_date") <= end)
 
-    # vl_sent_date (:59-65): latest sent date (no NOT NULL gate; DESC
-    # puts NULLs last on MySQL/Spark/DuckDB alike)
-    vl_sent = latest_per_key(
-        capped.select("client_id", "encounter_id", F.col("viral_load_sent_date").alias("VL_Sent_Date")),
-        keys=["client_id"],
-        order_by=["VL_Sent_Date"],
-        tiebreak="encounter_id",
-    ).select("client_id", "VL_Sent_Date")
-
-    # switch_sub_date (:66-73): latest follow-up carrying any regimen change
-    switch = latest_per_key(
-        capped.filter(F.col("regimen_change").isNotNull()).select(
-            "client_id", "encounter_id", "follow_up_date"
-        ),
-        keys=["client_id"],
-        order_by=["follow_up_date"],
-        tiebreak="encounter_id",
-    ).select("client_id", F.col("follow_up_date").alias("switch_follow_up_date"))
+    lookups = capped.groupBy("client_id").agg(
+        # vl_sent_date (:59-65): latest sent date (no NOT NULL gate; DESC
+        # puts NULLs last on MySQL/Spark/DuckDB alike)
+        F.max("viral_load_sent_date").alias("VL_Sent_Date"),
+        # switch_sub_date (:66-73): latest follow-up carrying any regimen
+        # change
+        F.max(
+            F.when(F.col("regimen_change").isNotNull(), F.col("follow_up_date"))
+        ).alias("switch_follow_up_date"),
+    )
 
     # vl_performed_date(_2) (:74-98)
     vl1 = latest_per_key(
@@ -2246,7 +2175,7 @@ def tx_curr_vl_eligible_linelist(
         tiebreak="encounter_id",
     )
     vlperf = (
-        vl1.join(vl_sent, on="client_id", how="left")
+        vl1.join(lookups.select("client_id", "VL_Sent_Date"), on="client_id", how="left")
         .select(
             "client_id",
             F.col("viral_load_perform_date").alias("vp_performed_date"),
@@ -2266,8 +2195,7 @@ def tx_curr_vl_eligible_linelist(
     client = tables["mamba_dim_client"]
     h = (
         latest_fu.join(vlperf, on="client_id", how="left")
-        .join(vl_sent, on="client_id", how="left")
-        .join(switch, on="client_id", how="left")
+        .join(lookups, on="client_id", how="left")
         .join(
             client.select("client_id", "patient_uuid", "date_of_birth", "sex"),
             on="client_id",
@@ -2475,39 +2403,21 @@ def tx_curr_vl_eligible_new_linelist(
         "regimen_change",
         F.col("date_of_last_menstrual_period_lmp_").alias("lmp_date"),
     )
-    in_window = fu.filter(
-        (F.col("follow_up_date") >= start) & (F.col("follow_up_date") <= end)
-    )
-
-    # all_art_follow_ups (:61-70): latest in-window visit (any status)
-    all_art = latest_per_key(
-        in_window.select("client_id", "encounter_id", "follow_up_date", "follow_up_status"),
-        keys=["client_id"],
-        order_by=["follow_up_date"],
-        tiebreak="encounter_id",
-    ).select("client_id", F.col("follow_up_status").alias("aa_follow_up_status"))
-
-    # vl_sent_date (:72-80): latest sent date INSIDE the window
-    vl_sent = latest_per_key(
-        fu.filter(
-            F.col("viral_load_sent_date").isNotNull()
-            & (F.col("viral_load_sent_date") >= start)
-            & (F.col("viral_load_sent_date") <= end)
-        ).select("client_id", "encounter_id", F.col("viral_load_sent_date").alias("VL_Sent_Date")),
-        keys=["client_id"],
-        order_by=["VL_Sent_Date"],
-        tiebreak="encounter_id",
-    ).select("client_id", "VL_Sent_Date")
-
-    # switch_sub_date (:82-90)
-    switch = latest_per_key(
-        in_window.filter(F.col("regimen_change").isNotNull()).select(
-            "client_id", "encounter_id", "follow_up_date"
+    fud = F.col("follow_up_date")
+    in_window = fud.between(start, end)
+    sent = F.col("viral_load_sent_date")
+    lookups = fu.groupBy("client_id").agg(
+        # all_art_follow_ups (:61-70): latest in-window visit (any status)
+        latest_value(
+            "follow_up_status", [fud], where=in_window, tiebreak="encounter_id"
+        ).alias("aa_follow_up_status"),
+        # vl_sent_date (:72-80): latest sent date INSIDE the window
+        F.max(F.when(sent.between(start, end), sent)).alias("VL_Sent_Date"),
+        # switch_sub_date (:82-90)
+        F.max(F.when(in_window & F.col("regimen_change").isNotNull(), fud)).alias(
+            "switch_date"
         ),
-        keys=["client_id"],
-        order_by=["follow_up_date"],
-        tiebreak="encounter_id",
-    ).select("client_id", F.col("follow_up_date").alias("switch_date"))
+    )
 
     # tmp_vl_performed_date_1/2 (:92-106): latest in-window result, or
     # the NULL-result row when the patient has none in window
@@ -2552,7 +2462,7 @@ def tx_curr_vl_eligible_new_linelist(
         .when((perf >= sent_c) & (isnull_cnt <= F.lit(50.0)), "S")
     )
     vlperf = (
-        vl2.join(vl_sent, on="client_id", how="left")
+        vl2.join(lookups.select("client_id", "VL_Sent_Date"), on="client_id", how="left")
         .select(
             "client_id",
             F.when(perf < sent_c, F.lit(None).cast("date"))
@@ -2571,7 +2481,7 @@ def tx_curr_vl_eligible_new_linelist(
 
     # latest_alive_restart (:166-174)
     latest_ar = latest_per_key(
-        in_window.filter(F.col("follow_up_status").isin("Alive", "Restart medication")),
+        fu.filter(in_window & F.col("follow_up_status").isin("Alive", "Restart medication")),
         keys=["client_id"],
         order_by=["follow_up_date"],
         tiebreak="encounter_id",
@@ -2594,9 +2504,7 @@ def tx_curr_vl_eligible_new_linelist(
             how="left",
         )
         .join(vlperf, on="client_id", how="left")
-        .join(vl_sent, on="client_id", how="left")
-        .join(switch, on="client_id", how="left")
-        .join(all_art, on="client_id", how="left")
+        .join(lookups, on="client_id", how="left")
         .filter(
             F.col("aa_follow_up_status").isin("Alive", "Restart Medication")
             & (F.datediff(start, F.col("art_start_date")) >= 0)
@@ -2611,7 +2519,6 @@ def tx_curr_vl_eligible_new_linelist(
     vcnt_raw = F.col("vp_count")
     vcnt = F.col("vp_count").cast("double")
     art = F.col("art_start_date")
-    fud = F.col("follow_up_date")
     lmp = F.col("lmp_date")
     months_on_art = complete_months_between(art, end)
     days_on_art = F.datediff(end, art)

@@ -5,6 +5,16 @@
 encounter_id DESC)`` followed by ``WHERE row_num = 1``
 (Tx_Curr_LineList.sql:54-56,64,73,79-85 — SURVEY.md §2e W1/W2).
 
+Two shapes, two tools. When the chosen row IS the result (a report's
+base row, carried whole), ``latest_per_key`` / ``earliest_per_key``
+window over it. When the chosen row only lends a value or two to a
+row the caller already has (the reference's "latest non-null X per
+client" CTE, LEFT JOINed on client_id), ``latest_value`` is that value
+as one aggregate column (a date looked up by itself is its masked
+``max``/``min``): any number of such lookups over one frame
+become one ``groupBy(key).agg(...)`` and one join, instead of one
+window and one join each.
+
 Scale notes: a row_number window shuffles once on the partition key.
 When several windows share the key (W4: PMTCT_Maternal_LineList.sql
 computes 4 ROW_NUMBERs over one relation), computing them in one
@@ -82,6 +92,37 @@ def earliest_per_key(
         .filter(F.col("row_num") == 1)
         .drop("row_num")
     )
+
+
+def latest_value(
+    value: Column | str,
+    order_by: Sequence[Column | str],
+    where: Column | None = None,
+    tiebreak: str | None = None,
+) -> Column:
+    """Aggregate column: ``value`` on the row ``latest_per_key`` would
+    choose among the group's rows that satisfy ``where``; NULL when
+    none does.
+
+    It is ``max_by`` of ``value`` keyed by the masked struct
+    ``when(where, struct(*order_by, tiebreak))``, and it is exact:
+
+    - ``max_by`` skips NULL keys, so a row failing ``where`` never wins
+      (a NULL ``where`` fails, as in a filter);
+    - struct comparison puts a NULL field first, so the max struct is
+      ``ORDER BY order_by DESC NULLS LAST, tiebreak DESC``, the order
+      ``latest_per_key`` windows by;
+    - a NULL ``value`` on the chosen row is returned as NULL, not
+      skipped;
+    - with a unique ``tiebreak`` (the wide view's ``encounter_id``)
+      there are no ties, so the choice is deterministic.
+
+    When ``value`` is the order column itself, ``F.max`` of the masked
+    column is the same lookup, and ``F.min`` is ``earliest_per_key``'s
+    when the mask also excludes NULL order values (ASC puts them first,
+    ``min`` skips them)."""
+    key = F.struct(*order_by, *([tiebreak] if tiebreak else []))
+    return F.max_by(value, key if where is None else F.when(where, key))
 
 
 def latest_n_per_key(

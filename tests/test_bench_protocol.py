@@ -61,3 +61,13 @@ def test_chunk_slice_real_catalog_partition(bench):
         if any(n.startswith("mb_") for n in s)
     }
     assert len(homes) <= 1
+
+
+def test_regression_baseline_needs_equal_scale_and_cores(bench):
+    prev = {"sf": 0.1, "cpus": 4, "queries_full": {"q01_pricing_summary": 1.0}}
+    assert bench.baseline_timings(prev, 0.1, 4) == {"q01_pricing_summary": 1.0}
+    assert bench.baseline_timings(prev, 0.1, 32) == {}
+    assert bench.baseline_timings(prev, 1.0, 4) == {}
+    # a detail file that predates the cpus field is no baseline
+    del prev["cpus"]
+    assert bench.baseline_timings(prev, 0.1, 4) == {}

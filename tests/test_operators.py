@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_export_tool_spark.operators.asof import asof_join, range_join
@@ -12,6 +13,7 @@ from data_export_tool_spark.operators.pivot import conditional_agg
 from data_export_tool_spark.operators.window_dedup import (
     earliest_per_key,
     latest_per_key,
+    latest_value,
     ranked,
 )
 
@@ -57,6 +59,69 @@ def test_ranked_multi_use(spark):
     r = ranked(_visits(spark), ["client_id"], ["d"], tiebreak="encounter_id")
     two = r.filter(F.col("row_num") == 2).count()
     assert two == 2  # clients 1 and 3 have ≥2 visits
+
+
+def _lookups(spark):
+    rows = [
+        # client, encounter, date, value, where
+        (1, 10, dt.date(2023, 1, 1), "a", True),
+        (1, 12, dt.date(2023, 3, 1), "b", True),  # date tie with 13
+        (1, 13, dt.date(2023, 3, 1), "c", True),
+        (1, 14, dt.date(2023, 4, 1), "d", False),  # latest, but excluded
+        (2, 20, None, "e", True),  # NULL order value
+        (2, 21, dt.date(2023, 2, 2), None, True),  # NULL value on the latest row
+        (2, 22, dt.date(2023, 1, 2), "f", True),
+        (3, 30, None, "g", True),  # every order value NULL
+        (3, 31, None, "h", True),
+        (4, 40, dt.date(2023, 5, 5), "i", False),  # where excludes every row
+        (4, 41, None, "j", False),
+    ]
+    return spark.createDataFrame(
+        rows, "client_id long, encounter_id long, d date, v string, keep boolean"
+    )
+
+
+def _per_client(df, windowed, col):
+    """``windowed``'s ``col`` left-joined back to every client of ``df``:
+    the lookup a window dedup feeds."""
+    return {
+        r.client_id: r[col]
+        for r in df.select("client_id")
+        .distinct()
+        .join(windowed.select("client_id", col), "client_id", "left")
+        .collect()
+    }
+
+
+def _aggregated(df, agg):
+    return {r.client_id: r.x for r in df.groupBy("client_id").agg(agg.alias("x")).collect()}
+
+
+def test_latest_value_matches_latest_per_key(spark):
+    """The aggregate lookup returns exactly what ``latest_per_key`` over
+    the ``where``-filtered frame picks, left-joined back per client:
+    NULL order values last, NULL values kept, date ties broken by
+    encounter_id, an all-excluded client NULL."""
+    df = _lookups(spark)
+    windowed = latest_per_key(df.filter("keep"), ["client_id"], ["d"], tiebreak="encounter_id")
+    got = _aggregated(df, latest_value("v", ["d"], where=F.col("keep"), tiebreak="encounter_id"))
+    assert got == _per_client(df, windowed, "v")
+    assert got == {1: "c", 2: None, 3: "h", 4: None}
+
+
+@pytest.mark.parametrize("descending", [True, False])
+def test_masked_extreme_matches_window_dedup(spark, descending):
+    """A date looked up by itself is its masked max (latest) or min
+    (earliest). ASC puts NULLs first while min skips them, so min is
+    the same lookup only under a mask that excludes NULL order
+    values."""
+    df = _lookups(spark)
+    pick = latest_per_key if descending else earliest_per_key
+    mask = "keep" if descending else "keep AND d IS NOT NULL"
+    windowed = pick(df.filter(mask), ["client_id"], ["d"], tiebreak="encounter_id")
+    extreme = F.max if descending else F.min
+    got = _aggregated(df, extreme(F.when(F.expr(mask), F.col("d"))))
+    assert got == _per_client(df, windowed, "d")
 
 
 def test_asof_join_backward(spark):

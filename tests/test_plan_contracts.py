@@ -171,22 +171,76 @@ _WIDE_VIEW_ENTRIES = [
 
 _ENCOUNTER_ID_EQ = re.compile(r"encounter_id#\d+L? = \w*encounter_id#\d+L?")
 
+#: a FollowUp shard table, read only inside the cached wide view
+_FOLLOW_UP_SHARD = re.compile(r"/mamba_flat_encounter_follow_up(_\d+)?\.parquet$")
+
+#: Window nodes in each wide-view entry's optimized plan body: where a
+#: report's window picks a row it carries on. Lookups that only lend a
+#: value to that row are one aggregate per FollowUp frame instead.
+_WINDOW_CEILINGS = {
+    "m01_tx_curr_linelist": 2,
+    "m02_tx_curr_outcome": 12,
+    "m03_vl_received_linelist": 2,
+    "m04_cca_linelist": 2,
+    "m05_tpt_linelist": 1,
+    "m06_pmtct_maternal": 11,
+    "m08_tx_curr_hvl": 24,
+    "m09_tx_curr_ahd": 3,
+    "m10_vl_eligible": 2,
+    "m11_vl_eligible_new": 2,
+    "m12_cca_new": 3,
+}
+
+
+def plan_nodes(plan):
+    """Every node of a JVM plan tree, walked through ``children`` only.
+    A cached relation is a leaf there (``InMemoryRelation`` in a
+    logical plan, ``InMemoryTableScan`` in a physical one): its stored
+    plan is not a child, so the walk covers the plan body alone."""
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        yield node
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+
+
+def optimized_nodes(df):
+    return plan_nodes(df._jdf.queryExecution().optimizedPlan())
+
+
+def physical_nodes(df):
+    """The physical plan body before execution: for an adaptive plan,
+    its current (initial) physical plan."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    return plan_nodes(plan)
+
 
 def inner_encounter_id_joins(df) -> list[str]:
     """Conditions of the inner equi-joins on ``encounter_id`` in the
-    body of ``df``'s optimized plan. A cached relation is a leaf of
-    that plan, so the walk never enters the wide view's own shard
-    assembly."""
-    found, stack = [], [df._jdf.queryExecution().optimizedPlan()]
-    while stack:
-        node = stack.pop()
-        if node.nodeName() == "Join" and node.joinType().toString() == "Inner":
-            condition = node.condition().toString()
-            if _ENCOUNTER_ID_EQ.search(condition):
-                found.append(condition)
-        children = node.children()
-        stack.extend(children.apply(i) for i in range(children.size()))
-    return found
+    body of ``df``'s optimized plan."""
+    return [
+        node.condition().toString()
+        for node in optimized_nodes(df)
+        if node.nodeName() == "Join"
+        and node.joinType().toString() == "Inner"
+        and _ENCOUNTER_ID_EQ.search(node.condition().toString())
+    ]
+
+
+def follow_up_shard_reads(df) -> list[str]:
+    """Paths of the FollowUp shard files the body of ``df``'s optimized
+    plan scans."""
+    return [
+        path
+        for node in optimized_nodes(df)
+        if node.nodeName() == "LogicalRelation"
+        and node.relation().getClass().getSimpleName() == "HadoopFsRelation"
+        for path in node.relation().location().rootPaths().mkString("\n").split("\n")
+        if _FOLLOW_UP_SHARD.search(path)
+    ]
 
 
 @pytest.mark.parametrize("name", _WIDE_VIEW_ENTRIES)
@@ -197,16 +251,17 @@ def test_linelists_read_wide_view_from_cache(spark, sf_dir, name):
     branch of a line-list plan must read InMemoryTableScan, never
     re-join the 11 shards. Nor may a branch join the view back to
     itself on its key, ``encounter_id``: a window already carries the
-    whole row it picks, so a re-join only fetches that row again."""
-    plan = plan_of(spark, sf_dir, name)
-    assert "InMemoryTableScan" in plan
-    # the 11-shard assembly join itself must not appear outside the
-    # cached relation: every encounter_id equi-join in the plan body
-    # would re-run the assembly per reference
-    body = plan.split("InMemoryRelation")[0]
-    assert body.count("SortMergeJoin") < 11, "wide view re-assembled in plan body"
-    joins = inner_encounter_id_joins(SPECS[name].builder(spark, sf_dir))
+    whole row it picks, so a re-join only fetches that row again. And
+    a lookup that only lends a value to a client's row is an aggregate,
+    not a window: ``_WINDOW_CEILINGS`` caps each plan's windows."""
+    df = SPECS[name].builder(spark, sf_dir)
+    assert any(n.nodeName() == "InMemoryTableScan" for n in physical_nodes(df))
+    shards = follow_up_shard_reads(df)
+    assert shards == [], f"wide view re-assembled in plan body: {shards}"
+    joins = inner_encounter_id_joins(df)
     assert joins == [], f"{len(joins)} encounter_id re-joins in the plan body"
+    windows = sum(node.nodeName() == "Window" for node in optimized_nodes(df))
+    assert windows <= _WINDOW_CEILINGS[name], f"{windows} windows in the plan body"
 
 
 def test_linelist_dim_joins_broadcast_at_fixture_scale(spark, sf_dir):
@@ -215,12 +270,12 @@ def test_linelist_dim_joins_broadcast_at_fixture_scale(spark, sf_dir):
     ``autoBroadcastJoinThreshold``. At fixture scale every dim side is
     under it, so the initial (pre-AQE) plan keeps its
     BroadcastHashJoins."""
-    plan = plan_of(spark, sf_dir, "m01_tx_curr_linelist")
-    # scope to the plan BODY: the cached wide-view InMemoryRelation
-    # carries its own stored plan (planned when it was first cached),
-    # which must not satisfy — or fail — this contract
-    body = plan.split("InMemoryRelation")[0]
-    assert "BroadcastHashJoin" in body, "fixture-scale dim join lost its BHJ"
+    df = SPECS["m01_tx_curr_linelist"].builder(spark, sf_dir)
+    # the walk stops at the cached wide view's scan: its stored plan
+    # (planned when it was first cached) must not satisfy — or fail —
+    # this contract
+    joins = [n.nodeName() for n in physical_nodes(df) if n.nodeName().endswith("Join")]
+    assert joins and set(joins) == {"BroadcastHashJoin"}, joins
 
 
 def test_linelist_broadcasts_not_forced_over_threshold(spark, sf_dir):
@@ -232,14 +287,16 @@ def test_linelist_broadcasts_not_forced_over_threshold(spark, sf_dir):
     prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
     try:
-        plan = plan_of(spark, sf_dir, "m01_tx_curr_linelist")
+        df = SPECS["m01_tx_curr_linelist"].builder(spark, sf_dir)
+        # the cached wide view's stored plan (built under the default
+        # threshold) legitimately contains BHJs; the walk stops at its
+        # scan
+        joins = [n.nodeName() for n in physical_nodes(df) if n.nodeName().endswith("Join")]
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
-    # the cached wide view's stored plan (built under the default
-    # threshold) legitimately contains BHJs — scope to the plan body
-    body = plan.split("InMemoryRelation")[0]
-    assert "BroadcastHashJoin" not in body, (
-        "dim-join broadcast is forced past the session threshold"
+    assert joins, "m01 plans no join"
+    assert "BroadcastHashJoin" not in joins, (
+        f"dim-join broadcast is forced past the session threshold: {joins}"
     )
 
 

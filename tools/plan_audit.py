@@ -16,7 +16,11 @@ plans we want" is an auditable statement, not prose:
 - ``global_window``: row-grain windows with an EMPTY partition spec
   over a non-metadata input (the single-task sort smell). Detected
   conservatively: windowspecdefinition with no partition columns.
-- ``exchanges`` / ``codegen_spans``: counted for drift watching.
+- ``exchanges``: exchange operators (shuffle and broadcast) in the
+  physical tree, subqueries included. A cached relation's stored plan
+  is not a child of its scan, so it is not counted again under every
+  InMemoryTableScan.
+- ``codegen_spans``: counted for drift watching.
 
 Usage: python tools/plan_audit.py [out.json] [sf_dir]
 """
@@ -30,6 +34,22 @@ import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+
+def exchange_count(plan) -> int:
+    """Exchange operators in a physical plan (a JVM ``SparkPlan``),
+    counted once each by walking children and subqueries; an adaptive
+    plan is read through its current physical plan."""
+    n, stack = 0, [plan]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "AdaptiveSparkPlan":
+            node = node.executedPlan()
+        if node.nodeName() in ("Exchange", "BroadcastExchange"):
+            n += 1
+        for seq in (node.children(), node.subqueries()):
+            stack.extend(seq.apply(i) for i in range(seq.size()))
+    return n
 
 
 def audit_plan(plan: str) -> dict:
@@ -46,7 +66,6 @@ def audit_plan(plan: str) -> dict:
         "cartesian": plan.count("CartesianProduct"),
         "bnlj": plan.count("BroadcastNestedLoopJoin"),
         "global_window": global_windows,
-        "exchanges": plan.count("Exchange"),
         "codegen_spans": plan.count("WholeStageCodegen"),
     }
 
@@ -90,8 +109,9 @@ def main() -> int:
     for name, spec in sorted(specs.items()):
         try:
             df = spec.builder(spark, sf_dir)
-            plan = df._jdf.queryExecution().executedPlan().toString()
-            entries[name] = audit_plan(plan)
+            plan = df._jdf.queryExecution().executedPlan()
+            entries[name] = audit_plan(plan.toString())
+            entries[name]["exchanges"] = exchange_count(plan)
         except Exception as e:  # record, don't abort the sweep
             errors[name] = f"{type(e).__name__}: {e}"[:300]
     flagged = {
