@@ -20,7 +20,7 @@ primary key, and the shards join 1:1), so the re-join would return
 exactly the row the window chose. Catalyst prunes the window's input to
 the columns read downstream.
 
-Two rules decide between a window and an aggregate:
+Three rules decide between a window and an aggregate:
 
 - A report's base row (the latest visit, a tx_curr cohort, the latest
   VL result whose columns are read on) is a window over the FollowUp
@@ -31,6 +31,12 @@ Two rules decide between a window and an aggregate:
   date. All lookups over one FollowUp frame are one
   ``groupBy(client).agg(...)``, joined once. ``latest_value``'s
   docstring says why this picks the row the window would.
+- A report of counters is one client-grain aggregate: each counter
+  classifies one client, so the cohorts it compares are columns of one
+  ``groupBy(client)`` row and the counters are masked counts over those
+  rows, not anti-joins and cross-joins of per-cohort pivots. Lookups
+  over a frame joined to the base row (FollowUp ⋈ a chosen VL result)
+  are aggregates too, one per joined frame.
 
 ``LINELISTS`` at the end of the module is the one report table: report
 name → builder, in the reference's config order. The driver-gate
@@ -66,10 +72,8 @@ from data_export_tool_spark.functions.datetime_ext import (
 )
 from data_export_tool_spark.functions.ethiopian import eth_date_str
 from data_export_tool_spark.mamba.schemas import HEI_IMMUNIZATION_FLAGS
-from data_export_tool_spark.operators.pivot import conditional_agg
 from data_export_tool_spark.operators.window_dedup import (
     latest_value,
-    earliest_per_key,
     latest_per_key,
     ranked,
 )
@@ -238,183 +242,122 @@ def tx_curr_outcome(
     """Tx_Curr_OutComeList — single-row cohort-transition counters
     (Tx_Curr_OutComeList.sql:1-259).
 
-    Operator mix per SURVEY.md §2: A3 conditional pivots (SUM(IF)),
-    A4 group-then-aggregate-then-aggregate, J6 anti-joins ("in current
-    cohort but not previous" and vice-versa), J8 cross join of five
-    1-row aggregates, U2 de-correlated TI-status.
-
-    Spark-first shape: the cohort CTEs are computed once from the cached
-    wide view; each counter block is one conditional_agg over an
-    anti-joined cohort; the five 1-row results cross-join (trivially
-    broadcast).
+    The reference builds two cohorts, each client's latest eligible
+    visit at the report end and at start - 1 (:32-49/:68-85), anti-joins
+    them both ways into "added" (:100-186) and "deducted" (:187-248)
+    blocks, pivots each block and cross-joins the five one-row results.
+    Every counter classifies one client, so here it is one client-grain
+    aggregate: one ``groupBy(client_id)`` gives a client's two cohort
+    visits and TI flag, that frame joins ``mamba_dim_client`` once (one
+    row per client, so the inner join drops the clients the reference's
+    join of FollowUp to it drops), and one global ``agg`` counts the 21
+    masked classes. A block's counters
+    are NULL when the block is empty, as the reference's SUM over no
+    rows is; within a non-empty block an empty class counts 0.
     """
     start = F.lit(report_start.isoformat()).cast("date")
     end = F.lit(report_end.isoformat()).cast("date")
-    prev_end = F.date_add(F.lit(report_start.isoformat()).cast("date"), -1)
+    prev_end = F.date_add(start, -1)
 
-    client = tables["mamba_dim_client"]
-    fu = follow_up.join(
-        client.select("client_id", "date_of_birth"), "client_id", "inner"
-    ).select(
-        "encounter_id",
-        "client_id",
-        F.col("follow_up_date_followup_").alias("follow_up_date"),
-        "follow_up_status",
-        F.col("art_antiretroviral_start_date").alias("art_start_date"),
-        F.col("treatment_end_date").alias("art_dose_end"),
-        complete_years_between(F.col("date_of_birth"), end).alias("age"),
-        "date_of_birth",
-        F.col("transferred_in_check_this_for_all_t").alias("__ti_flag"),
-    )
+    date = F.col("follow_up_date_followup_")
+    art_start = F.col("art_antiretroviral_start_date")
 
-    def cohort_at(cutoff) -> DataFrame:
-        """latest eligible visit per client at a cutoff date
-        (:32-49/:68-85); returns the rn=1 rows (unfiltered by status)."""
-        eligible = fu.filter(
-            F.col("follow_up_status").isNotNull()
-            & F.col("art_start_date").isNotNull()
-            & (F.col("follow_up_date") <= cutoff)
-        )
-        return ranked(
-            eligible, ["client_id"], ["follow_up_date"], tiebreak="encounter_id"
-        ).filter(F.col("row_num") == 1)
-
-    def on_treatment(df: DataFrame, cutoff) -> DataFrame:
-        return df.filter(
-            F.col("follow_up_status").isin("Alive", "Restart medication")
-            & (F.col("art_start_date") <= cutoff)
-            & (F.col("follow_up_date") <= cutoff)
-            & (F.col("art_dose_end") >= cutoff)
+    def cohort_visit(cutoff):
+        """latest eligible visit per client at a cutoff (:32-49/:68-85)"""
+        return latest_value(
+            F.struct(
+                F.col("follow_up_status").alias("status"),
+                art_start.alias("art_start"),
+                F.col("treatment_end_date").alias("dose_end"),
+            ),
+            [date],
+            where=F.col("follow_up_status").isNotNull()
+            & art_start.isNotNull()
+            & (date <= cutoff),
+            tiebreak="encounter_id",
         )
 
-    # not cached: a cache outlives the export, and exchange reuse
-    # already serves this plan's repeated reads of the cohort
-    latest_rn1 = cohort_at(end)
-    latest = on_treatment(latest_rn1, end)
-    latest_pedi = latest.filter(F.col("age") < 15)
-    latest_2 = latest_rn1.filter(F.col("art_start_date") <= end)
-    previous_rn1 = cohort_at(prev_end)
-    previous = on_treatment(previous_rn1, prev_end)
-    previous_pedi = previous.filter(F.col("age") < 15)
-
-    # U2 reconstruction (pinned; see reports._ti_status_patches):
-    # transferred-in flag on any follow-up inside [start-1, end]
-    ti_clients = (
-        fu.filter(
-            (F.col("__ti_flag") == "Yes")
-            & F.col("follow_up_date").between(prev_end, end)
-        )
-        .select("client_id")
-        .distinct()
-        .withColumn("__is_ti", F.lit(1))
-    )
-
-    status_code = (
-        F.when(F.col("follow_up_status") == "Transferred out", 0)
-        .when(F.col("follow_up_status") == "Stop all", 1)
-        .when(F.col("follow_up_status") == "Loss to follow-up (LTFU)", 2)
-        .when(F.col("follow_up_status") == "Ran away", 3)
-        .when(F.col("follow_up_status") == "Dead", 4)
-        .when(F.col("follow_up_status") == "Alive", 5)
-        .when(F.col("follow_up_status") == "Restart medication", 6)
-    )
-
-    def added_block(latest_cohort: DataFrame, suffix: str) -> DataFrame:
-        """in latest cohort but not previous (:100-142 / :143-186):
-        anti-join → classify (status code, New/Established, TI/NTI) →
-        count per class → pivot to fixed columns."""
-        n = (
-            latest_cohort.join(
-                previous.select("client_id"), "client_id", "left_anti"
-            )
-            .join(ti_clients, "client_id", "left")
-            .select(
-                status_code.alias("status_code"),
-                F.when(
-                    (F.col("art_start_date") > prev_end)
-                    & (F.col("art_start_date") <= end),
-                    "N",
+    clients = (
+        follow_up.groupBy("client_id")
+        .agg(
+            cohort_visit(end).alias("cur"),
+            cohort_visit(prev_end).alias("prev"),
+            # U2 reconstruction (pinned; see reports._ti_status_patches):
+            # transferred-in flag on any follow-up inside [start-1, end]
+            F.max(
+                F.coalesce(
+                    (F.col("transferred_in_check_this_for_all_t") == "Yes")
+                    & date.between(prev_end, end),
+                    F.lit(False),
                 )
-                .otherwise("E")
-                .alias("new"),
-                F.when(F.col("__is_ti").isNotNull(), "TI")
-                .otherwise("NTI")
-                .alias("TI"),
-            )
+            ).alias("is_ti"),
         )
-        grouped = n.groupBy("TI", "new", "status_code").agg(
-            F.count(F.lit(1)).alias("total")
+        .join(
+            tables["mamba_dim_client"].select("client_id", "date_of_birth"),
+            "client_id",
+            "inner",
         )
-        return conditional_agg(
-            grouped,
-            group_by=[],
-            cases={
-                f"Traced_Back{suffix}": (
-                    (F.col("TI") == "NTI")
-                    & (F.col("new") == "E")
-                    & (F.col("status_code") == 5),
-                    F.col("total"),
-                ),
-                f"Restarts{suffix}": (
-                    (F.col("TI") == "NTI")
-                    & (F.col("new") == "E")
-                    & (F.col("status_code") == 6),
-                    F.col("total"),
-                ),
-                f"TI{suffix}": (
-                    (F.col("TI") == "TI")
-                    & (F.col("new") == "E")
-                    & (F.col("status_code") == 5),
-                    F.col("total"),
-                ),
-                f"New{suffix}": (
-                    (F.col("TI") == "NTI")
-                    & (F.col("new") == "N")
-                    & (F.col("status_code") == 5),
-                    F.col("total"),
-                ),
-            },
-        )
-
-    def deducted_block(previous_cohort: DataFrame, suffix: str) -> DataFrame:
-        """in previous cohort but not latest (:187-217 / :218-248):
-        anti-join, then the client's current unfiltered latest status
-        (latest_follow_up_2) is what they transitioned to."""
-        dropped = previous_cohort.join(
-            latest.select("client_id"), "client_id", "left_anti"
-        ).select("client_id")
-        fb = dropped.join(
-            latest_2.select("client_id", "follow_up_status"), "client_id", "inner"
-        )
-        grouped = fb.select(status_code.alias("status_code")).groupBy(
-            "status_code"
-        ).agg(F.count(F.lit(1)).alias("total"))
-        names = ["TOs", "Losts", "Drops", "Deads", "Stops", "Not_Updated"]
-        codes = [0, 2, 3, 4, 1, 5]
-        return conditional_agg(
-            grouped,
-            group_by=[],
-            cases={
-                f"{name}{suffix}": (F.col("status_code") == code, F.col("total"))
-                for name, code in zip(names, codes)
-            },
-        )
-
-    age_out = (
-        latest.select("client_id", "date_of_birth")
-        .join(previous.select("client_id"), "client_id", "inner")
-        .filter(
-            F.add_months(F.col("date_of_birth"), 15 * 12).between(start, end)
-        )
-        .agg(F.count(F.lit(1)).alias("AgeOut"))
     )
 
-    return (
-        added_block(latest, "")
-        .crossJoin(deducted_block(previous, ""))
-        .crossJoin(added_block(latest_pedi, "Pedi"))
-        .crossJoin(deducted_block(previous_pedi, "Pedi"))
-        .crossJoin(age_out)
+    def on_treatment(visit: str, cutoff):
+        # the cohort filter (:83-85); a client without a cohort visit is
+        # not on treatment
+        return F.coalesce(
+            F.col(f"{visit}.status").isin("Alive", "Restart medication")
+            & (F.col(f"{visit}.art_start") <= cutoff)
+            & (F.col(f"{visit}.dose_end") >= cutoff),
+            F.lit(False),
+        )
+
+    latest, previous = on_treatment("cur", end), on_treatment("prev", prev_end)
+    # in latest but not previous, and vice versa: the anti-joins
+    added = latest & ~previous
+    # a deducted client's current latest visit (latest_follow_up_2) must
+    # have started ART by the report end
+    deducted = (
+        previous & ~latest & F.coalesce(F.col("cur.art_start") <= end, F.lit(False))
+    )
+    pedi = F.coalesce(
+        complete_years_between(F.col("date_of_birth"), end) < 15, F.lit(False)
+    )
+
+    status, is_ti = F.col("cur.status"), F.col("is_ti")
+    new = F.col("cur.art_start").between(start, end)
+    added_classes = {
+        "Traced_Back": ~is_ti & ~new & (status == "Alive"),
+        "Restarts": ~is_ti & ~new & (status == "Restart medication"),
+        "TI": is_ti & ~new & (status == "Alive"),
+        "New": ~is_ti & new & (status == "Alive"),
+    }
+    deducted_classes = {
+        "TOs": status == "Transferred out",
+        "Losts": status == "Loss to follow-up (LTFU)",
+        "Drops": status == "Ran away",
+        "Deads": status == "Dead",
+        "Stops": status == "Stop all",
+        "Not_Updated": status == "Alive",
+    }
+
+    def counters(block, classes, suffix: str):
+        size = F.count(F.when(block, 1))
+        return [
+            F.when(size > 0, F.count(F.when(block & cls, 1))).alias(name + suffix)
+            for name, cls in classes.items()
+        ]
+
+    return clients.agg(
+        *counters(added, added_classes, ""),
+        *counters(deducted, deducted_classes, ""),
+        *counters(added & pedi, added_classes, "Pedi"),
+        *counters(deducted & pedi, deducted_classes, "Pedi"),
+        F.count(
+            F.when(
+                latest
+                & previous
+                & F.add_months(F.col("date_of_birth"), 15 * 12).between(start, end),
+                1,
+            )
+        ).alias("AgeOut"),
     )
 
 
@@ -1396,10 +1339,13 @@ def tx_curr_hvl_linelist(
     The reference references its FollowUp CTE 12 times across 24 CTEs;
     here every branch reads the one cached wide view. Operator mix:
     window dedups (mixed ASC/DESC orders) where the chosen row is
-    carried on, aggregates where it only lends a value (the three EAC
-    dates, the latest Alive/Restart regimen), the correlated
-    `regimen ... LIMIT 1` scalar subquery (:109-115) as an as-of join
-    (J9), and a LEFT JOIN assembly on client_id (:274-287).
+    carried on (the routine and confirmatory VL results, the latest
+    visit), aggregates where a lookup only lends a value (one over
+    FollowUp ⋈ routine result for its sent date and the three EAC dates,
+    one over FollowUp ⋈ confirmatory result for its sent date and the
+    switch date, one for the latest Alive/Restart regimen), the
+    correlated `regimen ... LIMIT 1` scalar subquery (:109-115) as an
+    as-of join (J9), and a LEFT JOIN assembly on client_id (:274-287).
 
     Scale: every dedup/join keys on client_id, so on a client_id-
     bucketed warehouse layout the whole report is one Exchange; the
@@ -1480,25 +1426,39 @@ def tx_curr_hvl_linelist(
         tiebreak="encounter_id",
     )
 
-    # tmp_vl_sent_date / vl_sent_date (:82-94): latest send date among
-    # follow-ups sharing that result date
-    sent = latest_per_key(
-        fu.join(
-            vl1.select("client_id", "viral_load_performed_date"),
-            on=["client_id", "viral_load_performed_date"],
-            how="inner",
+    # each client's routine result date, for the lookups keyed on it
+    routine_date = vl1.select(
+        "client_id", F.col("viral_load_performed_date").alias("routine_perf_date")
+    )
+    routine = F.col("routine_perf_date")
+    eac_dates = [f"date_eac_provided_{k}" for k in (1, 2, 3)]
+    # one aggregate over fu ⋈ vl1: tmp_vl_sent_date / vl_sent_date
+    # (:82-94), the latest send date among follow-ups sharing the routine
+    # result date, and vl_perf_date_eac_1/2/3 (:189-215), the earliest
+    # EAC-k date at-or-after the routine result
+    vl1_lookups = (
+        fu.join(routine_date, on="client_id", how="inner")
+        .groupBy("client_id")
+        .agg(
+            F.max(
+                F.when(
+                    (F.col("viral_load_performed_date") == routine)
+                    & (F.col("follow_up_date") <= end),
+                    F.col("viral_load_sent_date"),
+                )
+            ).alias("VL_Sent_Date"),
+            *[
+                F.min(F.when((routine <= F.col(c)) & (F.col(c) <= end), F.col(c)))
+                .alias(name)
+                for name, c in zip(eac_dates, ("eac_1", "eac_2", "eac_3"))
+            ],
         )
-        .filter((F.col("follow_up_date") <= end) & F.col("viral_load_sent_date").isNotNull())
-        .select("client_id", "encounter_id", F.col("viral_load_sent_date").alias("VL_Sent_Date")),
-        keys=["client_id"],
-        order_by=["VL_Sent_Date"],
-        tiebreak="encounter_id",
-    ).select("client_id", "VL_Sent_Date")
+    )
 
     # vl_performed_date (:96-119) + the correlated LIMIT 1 regimen
     # subquery (:109-115) as an as-of join on (client_id, ref date)
     vlperf_base = (
-        vl1.join(sent, on="client_id", how="left")
+        vl1.join(vl1_lookups, on="client_id", how="left")
         .select(
             "encounter_id",
             "client_id",
@@ -1511,6 +1471,7 @@ def tx_curr_hvl_linelist(
             ),
             F.col("routine_vl_indication").alias("routine_viral_load"),
             F.col("targeted_vl_indication").alias("target"),
+            *eac_dates,
         )
     )
     vlperf = asof_join(
@@ -1535,6 +1496,7 @@ def tx_curr_hvl_linelist(
         "routine_viral_load",
         "target",
         "hvl_regimen",
+        *eac_dates,
     )
 
     # tmp_vl_performed_date_cf(_2) (:121-144): earliest confirmatory
@@ -1543,14 +1505,7 @@ def tx_curr_hvl_linelist(
         F.col("viral_load_performed_date").asc(), F.col("encounter_id").desc()
     )
     cf2 = (
-        fu.join(
-            vlperf.select(
-                "client_id",
-                F.col("vp_performed_date").alias("routine_perf_date"),
-            ),
-            on="client_id",
-            how="inner",
-        )
+        fu.join(routine_date, on="client_id", how="inner")
         .filter(
             (F.col("hiv_viral_load_status") == "Completed")
             & (
@@ -1565,76 +1520,58 @@ def tx_curr_hvl_linelist(
                     )
                 )
             )
-            & (F.col("viral_load_performed_date") >= F.col("routine_perf_date"))
+            & (F.col("viral_load_performed_date") >= routine)
             & (F.col("viral_load_performed_date") <= end)
         )
         .withColumn("row_num", F.row_number().over(w_cf))
         .filter(F.col("row_num") == 1)
     )
-    cf2_date = cf2.select(
-        "client_id", F.col("viral_load_performed_date").alias("viral_load_perform_date")
-    )
 
-    # tmp_switch_sub_date / switch_sub_date (:145-154): first regimen
-    # switch within [confirmatory date, report end]
-    switch_date = earliest_per_key(
-        fu.join(cf2_date, on="client_id", how="inner")
-        .filter(
-            F.col("follow_up_date").between(F.col("viral_load_perform_date"), end)
-            & F.col("switch").isNotNull()
-            & (F.col("switch") == "Regimen switch type")
-        )
-        .select("client_id", "encounter_id", F.col("follow_up_date").alias("switch_date")),
-        keys=["client_id"],
-        order_by=["switch_date"],
-        tiebreak="encounter_id",
-    ).select("client_id", "switch_date")
-
-    # tmp_vl_sent_date_cf / vl_sent_date_cf (:156-168): EARLIEST send
-    # date among follow-ups sharing the confirmatory result date
-    w_sent_cf = Window.partitionBy("client_id").orderBy(
-        F.col("VL_Sent_Date").asc(), F.col("encounter_id").desc()
-    )
-    sent_cf = (
-        fu.withColumnRenamed("viral_load_performed_date", "viral_load_perform_date")
-        .join(cf2_date, on=["client_id", "viral_load_perform_date"], how="inner")
-        .filter((F.col("follow_up_date") <= end) & F.col("viral_load_sent_date").isNotNull())
-        .select("client_id", "encounter_id", F.col("viral_load_sent_date").alias("VL_Sent_Date"))
-        .withColumn("row_num", F.row_number().over(w_sent_cf))
-        .filter(F.col("row_num") == 1)
-        .select("client_id", F.col("VL_Sent_Date").alias("VL_Sent_Date_cf"))
-    )
-
-    # tmp_vl_performed_date_cf_3 (:171-188)
-    cf3 = (
-        cf2.join(sent_cf, on="client_id", how="left")
-        .select(
-            "client_id",
-            F.col("viral_load_performed_date").alias("viral_load_perform_date_cf"),
-            F.col("viral_load_test_status").alias("viral_load_status_cf_raw"),
-            F.col("viral_load_count").alias("viral_load_count_cf"),
-            F.col("VL_Sent_Date_cf").alias("viral_load_sent_date_cf"),
-            F.col("routine_vl_indication").alias("routine_viral_load_cf"),
-            F.col("targeted_vl_indication").alias("target_cf"),
-        )
-    )
-
-    # vl_perf_date_eac_1/2/3 (:189-215): earliest EAC-k date at-or-after
-    # the routine result, one aggregate over one join
-    routine = F.col("routine_perf_date")
-    eac = (
+    # one aggregate over fu ⋈ cf2: tmp_switch_sub_date / switch_sub_date
+    # (:145-154), the first regimen switch within [confirmatory date,
+    # report end], and tmp_vl_sent_date_cf / vl_sent_date_cf (:156-168),
+    # the EARLIEST send date among follow-ups sharing the confirmatory
+    # result date
+    cf_date = F.col("cf_perf_date")
+    cf_lookups = (
         fu.join(
-            vlperf.select("client_id", F.col("vp_performed_date").alias("routine_perf_date")),
+            cf2.select(
+                "client_id", F.col("viral_load_performed_date").alias("cf_perf_date")
+            ),
             on="client_id",
             how="inner",
         )
         .groupBy("client_id")
         .agg(
-            *[
-                F.min(F.when((routine <= F.col(c)) & (F.col(c) <= end), F.col(c)))
-                .alias(f"date_eac_provided_{k}")
-                for k, c in ((1, "eac_1"), (2, "eac_2"), (3, "eac_3"))
-            ]
+            F.min(
+                F.when(
+                    F.col("follow_up_date").between(cf_date, end)
+                    & (F.col("switch") == "Regimen switch type"),
+                    F.col("follow_up_date"),
+                )
+            ).alias("switch_date"),
+            F.min(
+                F.when(
+                    (F.col("viral_load_performed_date") == cf_date)
+                    & (F.col("follow_up_date") <= end),
+                    F.col("viral_load_sent_date"),
+                )
+            ).alias("viral_load_sent_date_cf"),
+        )
+    )
+
+    # tmp_vl_performed_date_cf_3 (:171-188)
+    cf3 = (
+        cf2.join(cf_lookups, on="client_id", how="left")
+        .select(
+            "client_id",
+            F.col("viral_load_performed_date").alias("viral_load_perform_date_cf"),
+            F.col("viral_load_test_status").alias("viral_load_status_cf_raw"),
+            F.col("viral_load_count").alias("viral_load_count_cf"),
+            "viral_load_sent_date_cf",
+            F.col("routine_vl_indication").alias("routine_viral_load_cf"),
+            F.col("targeted_vl_indication").alias("target_cf"),
+            "switch_date",
         )
     )
 
@@ -1670,8 +1607,6 @@ def tx_curr_hvl_linelist(
         )
         .join(vlperf, on="client_id", how="left")
         .join(cf3, on="client_id", how="left")
-        .join(eac, on="client_id", how="left")
-        .join(switch_date, on="client_id", how="left")
     )
 
     art_dose = F.coalesce(F.col("latest_regimen"), F.col("regimen"))

@@ -117,10 +117,10 @@ REPORTS = {
     ),
     "mb_outcome": (
         "Tx_Curr_OutComeList",
-        """m02 Tx_Curr_OutComeList at scale — the agg-of-agg / 1-row
-    cross-join shape (``Tx_Curr_OutComeList.sql:100-259``): a plan
-    regression here would turn the justified BNLJ into a real
-    cartesian.""",
+        """m02 Tx_Curr_OutComeList at scale
+    (``Tx_Curr_OutComeList.sql:100-259``) — the reference's anti-joined
+    cohorts and cross-joined pivots as one client-grain aggregate over
+    the whole wide view, one dim join and one global aggregate.""",
     ),
     "mb_pmtct_hei": (
         "PMTCT_HEI_LineList",

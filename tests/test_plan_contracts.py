@@ -53,12 +53,12 @@ def op_counts(plan: str) -> dict[str, int]:
 
 #: entries where a BroadcastNestedLoopJoin is the DESIGNED plan — a
 #: deliberately tiny side cross-joined against the other (J8's 1-row
-#: aggregate combine in q07/m02; the ~5-row query batch versus the
-#: corpus in the brute-force search tiers). Everything else must plan
-#: pure equi-joins.
+#: aggregate combine in q07; the ~5-row query batch versus the corpus
+#: in the brute-force search tiers). Everything else must plan pure
+#: equi-joins; m02's counters are one aggregate, not cross-joined
+#: pivots.
 _BNLJ_BY_DESIGN = {
     "q07_cohort_counters",
-    "m02_tx_curr_outcome",
     "v01_embedding_exact_tiers",
     "v03_embedding_ann_topk",
 }
@@ -176,18 +176,35 @@ _FOLLOW_UP_SHARD = re.compile(r"/mamba_flat_encounter_follow_up(_\d+)?\.parquet$
 
 #: Window nodes in each wide-view entry's optimized plan body: where a
 #: report's window picks a row it carries on. Lookups that only lend a
-#: value to that row are one aggregate per FollowUp frame instead.
+#: value to that row are one aggregate per FollowUp frame instead, and
+#: a counters report (m02) is one client-grain aggregate.
 _WINDOW_CEILINGS = {
     "m01_tx_curr_linelist": 2,
-    "m02_tx_curr_outcome": 12,
+    "m02_tx_curr_outcome": 0,
     "m03_vl_received_linelist": 2,
     "m04_cca_linelist": 2,
     "m05_tpt_linelist": 1,
     "m06_pmtct_maternal": 11,
-    "m08_tx_curr_hvl": 24,
+    "m08_tx_curr_hvl": 9,
     "m09_tx_curr_ahd": 3,
     "m10_vl_eligible": 2,
     "m11_vl_eligible_new": 2,
+    "m12_cca_new": 3,
+}
+
+#: Join nodes in the same plan bodies: the aggregates above are joined
+#: once each, and m02 joins only mamba_dim_client.
+_JOIN_CEILINGS = {
+    "m01_tx_curr_linelist": 2,
+    "m02_tx_curr_outcome": 1,
+    "m03_vl_received_linelist": 2,
+    "m04_cca_linelist": 2,
+    "m05_tpt_linelist": 2,
+    "m06_pmtct_maternal": 11,
+    "m08_tx_curr_hvl": 14,
+    "m09_tx_curr_ahd": 5,
+    "m10_vl_eligible": 4,
+    "m11_vl_eligible_new": 4,
     "m12_cca_new": 3,
 }
 
@@ -253,15 +270,18 @@ def test_linelists_read_wide_view_from_cache(spark, sf_dir, name):
     itself on its key, ``encounter_id``: a window already carries the
     whole row it picks, so a re-join only fetches that row again. And
     a lookup that only lends a value to a client's row is an aggregate,
-    not a window: ``_WINDOW_CEILINGS`` caps each plan's windows."""
+    not a window: ``_WINDOW_CEILINGS`` and ``_JOIN_CEILINGS`` cap each
+    plan's windows and joins."""
     df = SPECS[name].builder(spark, sf_dir)
     assert any(n.nodeName() == "InMemoryTableScan" for n in physical_nodes(df))
     shards = follow_up_shard_reads(df)
     assert shards == [], f"wide view re-assembled in plan body: {shards}"
     joins = inner_encounter_id_joins(df)
     assert joins == [], f"{len(joins)} encounter_id re-joins in the plan body"
-    windows = sum(node.nodeName() == "Window" for node in optimized_nodes(df))
+    nodes = [node.nodeName() for node in optimized_nodes(df)]
+    windows, all_joins = nodes.count("Window"), nodes.count("Join")
     assert windows <= _WINDOW_CEILINGS[name], f"{windows} windows in the plan body"
+    assert all_joins <= _JOIN_CEILINGS[name], f"{all_joins} joins in the plan body"
 
 
 def test_linelist_dim_joins_broadcast_at_fixture_scale(spark, sf_dir):

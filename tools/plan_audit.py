@@ -20,7 +20,6 @@ plans we want" is an auditable statement, not prose:
   physical tree, subqueries included. A cached relation's stored plan
   is not a child of its scan, so it is not counted again under every
   InMemoryTableScan.
-- ``codegen_spans``: counted for drift watching.
 
 Usage: python tools/plan_audit.py [out.json] [sf_dir]
 """
@@ -66,7 +65,6 @@ def audit_plan(plan: str) -> dict:
         "cartesian": plan.count("CartesianProduct"),
         "bnlj": plan.count("BroadcastNestedLoopJoin"),
         "global_window": global_windows,
-        "codegen_spans": plan.count("WholeStageCodegen"),
     }
 
 
